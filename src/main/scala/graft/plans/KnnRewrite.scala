@@ -65,6 +65,20 @@ import graft.functions.{CosineDistance, IpDistance, L2Distance}
  * ORDER BY ... LIMIT k form (row_number admits exactly k rows; rank-like
  * functions don't reduce to this shape, so their tie semantics are never
  * silently changed).
+ *
+ * Which engine answers a matched statement, and what it costs
+ * ([[graft.store.ColdTier.serveLocal]] decides at plan time; "warm" =
+ * sidecars and decoded segments already resident in this process, within
+ * `graft.coldtier.segmentCacheBytes`):
+ *
+ * | shape                                     | warm engine (in-process)          | jobs | fallback (cold, over budget, segment without sidecar) |
+ * |-------------------------------------------|-----------------------------------|------|--------------------------------------------------------|
+ * | literal `=`/`IN`/range admitted to <= 4 segments | exact kernel over decoded segments | 0 | distributed exact scan of those segments |
+ * | unfiltered                                | graph probe, graph distances      | 0    | `searchIndexedFast` probe (~7 jobs)                    |
+ * | any other literal `=`/`IN`/range          | graph probe + exact re-rank       | 0    | `searchIndexedLiteralFiltered` probe (~13 jobs)        |
+ *
+ * The warm engine and its fallback answer identically for the same tier
+ * state; only where the work runs differs.
  */
 object KnnIndex {
   /** @param filterColumns attribute columns sealed into the tier's
@@ -492,28 +506,26 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               org.apache.spark.sql.catalyst.CatalystTypeConverters
                 .convertToScala(l.eval(), l.dataType), l.dataType)
           }
-          // PLAN-TIME DIRECT serving (filtered shapes): when the
-          // literal plan admission-collapses onto the warm memory
-          // kernel, take the k (id, dist) rows straight from
-          // [[graft.store.ColdTier.serveExactLiteralLocal]] and splice
-          // ONE bare LocalRelation — no probe DataFrame, none of the
-          // per-statement query-set/result DataFrame constructions nor
-          // their optimizer passes (r16 ProfileSqlServe measured that
-          // machinery at ~37 ms of the ~61 ms single-thread statement).
-          // None = not admission-collapsed or a memory precondition
-          // missed — the DataFrame probe below re-derives the decision
-          // identically and serves as before.
+          // PLAN-TIME IN-PROCESS serving: the registered probe runs on
+          // this thread over the cached sidecars / decoded segments and
+          // its k (id, dist) rows splice as ONE bare LocalRelation — no
+          // probe DataFrame, no optimizer pass over it, no Spark job
+          // (the distributed probe costs 7-13 jobs per statement).
+          // None = a precondition missed (cold or oversized tier,
+          // unsealed segment) — the DataFrame probe below re-derives the
+          // same engine decision and serves the same answer.
           val direct: Option[Array[(Long, Double)]] =
-            if (filters.isEmpty && ranges.isEmpty) None
-            else graft.store.ColdTier.serveExactLiteralLocal(spark,
-              r.coldDir, qv, ceilTs, ceilTs - floorTs, k, filters,
-              ranges, metric, r.snapshot)
+            graft.store.ColdTier.serveLocal(spark, r.coldDir, qv, ceilTs,
+              ceilTs - floorTs, k, filters, ranges, metric, r.snapshot,
+              efSearch = r.efSearch, probeSegments = r.probeSegments,
+              shortlist = math.max(r.shortlist, k),
+              overfetch = r.filterOverfetch, inWalk = r.inWalk)
           direct match {
             case Some(rows) =>
               logInfo(s"graft: serving ORDER BY ${metric} distance " +
-                s"LIMIT $k over ${relationPaths(rel).head} from the " +
-                s"warm memory kernel of ${r.coldDir}")
-              // rows are ascending (dist, id) — the kernel's
+                s"LIMIT $k over ${relationPaths(rel).head} in-process " +
+                s"from ${r.coldDir}")
+              // rows are ascending (dist, id) — the merge heap's
               // drainSorted order, the same total order the DataFrame
               // splice below re-asserts driver-side
               val attrs = projList.map(_.toAttribute)

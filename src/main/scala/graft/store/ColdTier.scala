@@ -907,9 +907,11 @@ object ColdTier {
   val TombstoneBroadcastMaxBytesKey = "graft.coldtier.tombstoneBroadcastMaxBytes"
   val TombstoneBroadcastMaxBytesDefault: Long = 64L << 20
 
-  /** Kill switch for the driver-LOCAL exact-kernel serving engine
-   * ([[serveExactFromMemory]]): `false` keeps every admission-collapsed
-   * literal plan on the lazy distributed scan. Results are bit-identical
+  /** Kill switch for driver-LOCAL serving — the exact-kernel engine
+   * ([[serveExactFromMemory]]) and the SQL rewrite's in-process graph
+   * route ([[serveLocal]]): `false` keeps every admission-collapsed
+   * literal plan on the lazy distributed scan and every rewritten
+   * statement on the distributed probe. Results are bit-identical
    * either way — the switch only moves where the (already bounded) work
    * runs, never what it computes. */
   val ExactServeLocalKey = "graft.coldtier.exactServeLocal"
@@ -1767,9 +1769,16 @@ object ColdTier {
   val CatalogCacheKey = "graft.coldtier.catalogCache"
 
   def catalog(spark: SparkSession, dir: String): Array[SegmentStats] = {
-    import spark.implicits._
     heal(spark, dir)
-    val p = new Path(statsPath(dir))
+    cachedCatalog(spark, statsPath(dir))
+  }
+
+  /** The catalog parquet at `path` (a live `_segments` dir or a
+   * snapshot's pinned copy), through [[catalogCache]]. */
+  private def cachedCatalog(spark: SparkSession,
+      path: String): Array[SegmentStats] = {
+    import spark.implicits._
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cacheOn = spark.conf.getOption(CatalogCacheKey).forall(_.toBoolean)
     val sig = if (!cacheOn) null else try fs.listStatus(p)
@@ -1781,7 +1790,7 @@ object ColdTier {
       case Some(c) => return c
       case None => ()
     }
-    val loaded = spark.read.parquet(statsPath(dir)).as[SegmentStats].collect()
+    val loaded = spark.read.parquet(path).as[SegmentStats].collect()
     if (sig != null) catalogCache.synchronized {
       catalogCache.filterInPlace { case ((cp, _), _) => cp != key._1 }
       catalogCache.put(key, loaded)
@@ -1895,12 +1904,10 @@ object ColdTier {
     fs.exists(p) && fs.delete(p, true)
   }
 
-  /** The segment catalog as pinned by snapshot `v`. */
-  def catalogAt(spark: SparkSession, dir: String, v: Long): Array[SegmentStats] = {
-    import spark.implicits._
-    spark.read.parquet(s"${snapPath(dir, v)}/_segments")
-      .as[SegmentStats].collect()
-  }
+  /** The segment catalog as pinned by snapshot `v` (cached like the
+   * live catalog: a pinned copy is written once, by tmp+rename). */
+  def catalogAt(spark: SparkSession, dir: String, v: Long): Array[SegmentStats] =
+    cachedCatalog(spark, s"${snapPath(dir, v)}/_segments")
 
   private def tombstonesAt(spark: SparkSession, dir: String,
       v: Long): (Option[DataFrame], Long) = {
@@ -2285,12 +2292,18 @@ object ColdTier {
   /** All graph files of a committed sidecar (1 for the single-file
    * layout, the shard files for a directory). */
   private def shardFiles(fs: org.apache.hadoop.fs.FileSystem,
-      segmentPath: String): Seq[String] = {
+      segmentPath: String): Seq[String] =
+    sidecarShards(fs, segmentPath).map(_._1)
+
+  /** [[shardFiles]] with each file's length, from the same listing. */
+  private def sidecarShards(fs: org.apache.hadoop.fs.FileSystem,
+      segmentPath: String): Seq[(String, Long)] = {
     val p = new Path(indexPath(segmentPath))
-    if (fs.getFileStatus(p).isFile) Seq(p.toString)
-    else fs.listStatus(p).map(_.getPath)
-      .filter(_.getName.startsWith("shard-")).sortBy(_.getName)
-      .map(_.toString).toSeq
+    val st = fs.getFileStatus(p)
+    if (st.isFile) Seq((p.toString, st.getLen))
+    else fs.listStatus(p).filter(_.getPath.getName.startsWith("shard-"))
+      .sortBy(_.getPath.getName)
+      .map(c => (c.getPath.toString, c.getLen)).toSeq
   }
 
   /** Seal HNSW index sidecars for existing segments — the V9 payoff: the
@@ -2640,6 +2653,36 @@ object ColdTier {
     private[store] def invalidateAll(): Unit = cache.clear()
   }
 
+  private def segmentCacheBudget(spark: SparkSession): Long =
+    spark.conf.getOption(SegmentCacheBytesKey)
+      .map(_.toLong).getOrElse(SegmentCacheBytesDefault)
+
+  /** Heap bytes assumed per on-disk byte of data not yet resident — a
+   * segment's parquet files about to be decoded into [[SegmentData]], or
+   * a sidecar graph file. Float vectors barely compress in parquet, so
+   * decoding mostly adds object headers and the per-row attribute copy;
+   * measured ~1.3-2.6x on sealed test and bench tiers. */
+  private val DecodeFactor = 4L
+
+  /** On-disk bytes of each cataloged segment directory, by path:
+   * segments are immutable once cataloged, so one listing per
+   * generation (bounded: cleared past 4096 paths). */
+  private val segmentDiskBytes =
+    scala.collection.concurrent.TrieMap.empty[String, Long]
+
+  /** The admission estimate for a segment that is not resident: its
+   * on-disk bytes times [[DecodeFactor]]. */
+  private def decodedBytesEstimate(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Long = {
+    val onDisk = segmentDiskBytes.getOrElse(path, {
+      if (segmentDiskBytes.size > 4096) segmentDiskBytes.clear()
+      val b = fs.getContentSummary(new Path(path)).getLength
+      segmentDiskBytes.put(path, b)
+      b
+    })
+    DecodeFactor * onDisk
+  }
+
   /** Process-local (del_id -> max del_ts) map of a BOUNDED delete log,
    * cached by full listing signature exactly like [[catalogCache]] (the
    * log is append-only batch files — any append changes the listing).
@@ -2651,22 +2694,11 @@ object ColdTier {
   private val tombstoneMapCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), scala.collection.mutable.LongMap[Long]]
 
-  /** (name, length, mtime) signature of `p`'s children and (for child
-   * directories) grandchildren, sorted — the cache key for append-only
-   * directory trees. Null on any listing error = never cache. */
+  /** (name, length, mtime) signature of every entry under `p`, at any
+   * depth, sorted — the cache key for append-only directory trees. Null
+   * on any listing error = never cache. */
   private def listingSignature(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String =
-    try {
-      if (!fs.exists(p)) ""
-      else fs.listStatus(p).flatMap { st =>
-        val self =
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-        if (!st.isDirectory) Seq(self)
-        else self +: fs.listStatus(st.getPath).map(c =>
-          s"${st.getPath.getName}/${c.getPath.getName}:" +
-            s"${c.getLen}:${c.getModificationTime}").toSeq
-      }.sorted.mkString("|")
-    } catch { case scala.util.control.NonFatal(_) => null }
+      p: Path): String = listingSigAndBytes(fs, p)._1
 
   private def tombstoneMap(spark: SparkSession, logPath: String,
       tomb: DataFrame): scala.collection.mutable.LongMap[Long] = {
@@ -2691,25 +2723,25 @@ object ColdTier {
   /** [[listingSignature]] plus the summed file bytes from the SAME
    * listing — the warm serving path needs both (the signature keys the
    * tombstone-map cache, the bytes gate the broadcast budget) and must
-   * not pay a second recursive getContentSummary per statement.
-   * (null, -1) on any listing error = caller falls back to the
-   * per-statement reads. */
-  private def listingSigAndBytes(fs: org.apache.hadoop.fs.FileSystem,
+   * not pay a second recursive getContentSummary per statement. The walk
+   * descends every directory level, so a nested delete log counts all of
+   * its files in both halves. (null, -1) on any listing error = caller
+   * falls back to the per-statement reads. */
+  private[store] def listingSigAndBytes(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): (String, Long) =
     try {
       if (!fs.exists(p)) ("", 0L)
       else {
         var bytes = 0L
-        val parts = fs.listStatus(p).flatMap { st =>
-          val self =
-            s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-          if (!st.isDirectory) { bytes += st.getLen; Seq(self) }
-          else self +: fs.listStatus(st.getPath).map { c =>
-            bytes += c.getLen
-            s"${st.getPath.getName}/${c.getPath.getName}:" +
-              s"${c.getLen}:${c.getModificationTime}"
-          }.toSeq
-        }
+        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+        def walk(d: Path, prefix: String): Unit =
+          fs.listStatus(d).foreach { st =>
+            val name = prefix + st.getPath.getName
+            parts += s"$name:${st.getLen}:${st.getModificationTime}"
+            if (st.isDirectory) walk(st.getPath, s"$name/")
+            else bytes += st.getLen
+          }
+        walk(p, "")
         (parts.sorted.mkString("|"), bytes)
       }
     } catch { case scala.util.control.NonFatal(_) => (null, -1L) }
@@ -2813,17 +2845,12 @@ object ColdTier {
     }
     /** The `cap` nearest in-window segment positions by graph walk, or
      * None when the window filter leaves too few (caller falls back to
-     * the exact linear route). Synchronized: the decoded graph is ONE
-     * instance per executor shared by every routing task, and
-     * HnswStore's search scratch is not thread-safe (the sidecar probe
-     * path never shares a graph across tasks — one group per shard — so
-     * it needs no lock). A walk is O(ef·log S) ≈ microseconds, so the
-     * lock is not a routing bottleneck at executor core counts. */
+     * the exact linear route). The decoded graph is ONE instance per
+     * executor shared by every routing task; HnswStore searches are
+     * thread-safe on a graph nobody writes, so no lock is needed. */
     def route(qv: Array[Float], cap: Int, inWin: Int => Boolean,
         nInWin: Int): Option[Set[Int]] = {
-      val found = graph.synchronized {
-        graph.search(qv, cap * 4, Long.MinValue, Long.MaxValue)
-      }
+      val found = graph.search(qv, cap * 4, Long.MinValue, Long.MaxValue)
       val hits = found.iterator.map(_._1.toInt).filter(inWin).take(cap).toSet
       if (hits.size >= math.min(cap, nInWin)) Some(hits) else None
     }
@@ -3217,20 +3244,8 @@ object ColdTier {
           // walk filters at acceptance exactly like the per-query
           // branch, but with zero per-tuple filter payload — the routed
           // tuple stays the bare unfiltered shape.
-          val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-          // tz-dependent conjuncts drop out (superset-leaning — the
-          // re-rank applies them exactly); their hashes are seal-session
-          // renderings a probe session cannot reliably reproduce
-          val conj = inWalkLiterals.filterNot(f => tzDependent(f._3))
-            .map { case (f, vs, vt) =>
-              val hashed = vs.map(v => literalAttrHash(v, vt, tz))
-              (f, hashed.head._2,
-                hashed.map(_._1).distinct.sorted.toArray)
-            }.toArray
-          val rangeConj = inWalkRanges.groupBy(_.column).toSeq
-            .map { case (f, bs) => val (lo, hi) = closedHull(bs); (f, lo, hi) }
-            .filterNot { case (_, lo, hi) => lo.isNaN || hi.isNaN }
-            .sortBy(_._1).toArray
+          val (conj, rangeConj) =
+            inWalkConjuncts(spark, inWalkLiterals, inWalkRanges)
           val bConj = spark.sparkContext.broadcast(conj)
           val bRange = spark.sparkContext.broadcast(rangeConj)
           q.select(col("qid"), col("qv"), col("qtime"), col("ttl"))
@@ -3440,6 +3455,31 @@ object ColdTier {
           .select(col("qid"), explode(col("topk.ids")).as("id"))
       }
     probed.unionAll(scanned).distinct()
+  }
+
+  /** The walk-side form of a plan-time literal conjunction: hash
+   * conjuncts `(column, numericFamily, sorted literal hashes)` and
+   * closed-hull range conjuncts `(column, lo, hi)` for
+   * [[HnswStore.searchFilteredConj]]. Tz-dependent conjuncts drop out
+   * (superset-leaning — the re-rank applies them exactly): their hashes
+   * are seal-session renderings a probe session cannot reliably
+   * reproduce. So do NaN-sided hulls. */
+  private def inWalkConjuncts(spark: SparkSession,
+      literals: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
+      ranges: Seq[RangeBound])
+      : (Array[(String, Boolean, Array[Long])],
+         Array[(String, Double, Double)]) = {
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val conj = literals.filterNot(f => tzDependent(f._3))
+      .map { case (f, vs, vt) =>
+        val hashed = vs.map(v => literalAttrHash(v, vt, tz))
+        (f, hashed.head._2, hashed.map(_._1).distinct.sorted.toArray)
+      }.toArray
+    val rangeConj = ranges.groupBy(_.column).toSeq
+      .map { case (f, bs) => val (lo, hi) = closedHull(bs); (f, lo, hi) }
+      .filterNot { case (_, lo, hi) => lo.isNaN || hi.isNaN }
+      .sortBy(_._1).toArray
+    (conj, rangeConj)
   }
 
   /** The serving fast path: route + probe sidecars exactly like
@@ -3715,6 +3755,16 @@ object ColdTier {
    * missing a referenced filter column contributes no rows, exactly as
    * under the distributed unified-schema read where the absent column
    * is null on every row and the conjunct null-rejects. */
+  /** Analyzed (condition, input attributes) of a literal predicate per
+   * (literal shape, segment meta schema, session time zone): the segments
+   * of one tier share their schema, so a new literal shape is analyzed
+   * once per statement, not once per admitted segment (an analysis pass
+   * costs milliseconds; the mask pass over resident rows microseconds). */
+  private val resolvedPredicates = scala.collection.concurrent.TrieMap
+    .empty[(String, org.apache.spark.sql.types.StructType, String),
+      (org.apache.spark.sql.catalyst.expressions.Expression,
+        Seq[org.apache.spark.sql.catalyst.expressions.Attribute])]
+
   private def localPredicateMask(spark: SparkSession, sd: SegmentData,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
       ranges: Seq[RangeBound],
@@ -3724,16 +3774,23 @@ object ColdTier {
     val needed = (filters.map(_._1) ++ ranges.map(_.column)).distinct
     if (!needed.forall(c => sd.metaSchema.fieldNames.contains(c)))
       return mask // all-false
-    val probe = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      sd.metaSchema)
-    val analyzed = probe.where(literalPredicate(probe, filters, ranges))
-      .queryExecution.analyzed
-    val (cond, childOut) = analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        (f.condition, f.child.output)
-    }.getOrElse(throw new IllegalStateException(
-      "localPredicateMask: literal predicate did not analyze to a Filter"))
+    val key = (literalShapeKey(filters, ranges), sd.metaSchema,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val (cond, childOut) = resolvedPredicates.getOrElse(key, {
+      val probe = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        sd.metaSchema)
+      val analyzed = probe.where(literalPredicate(probe, filters, ranges))
+        .queryExecution.analyzed
+      val resolved = analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          (f.condition, f.child.output)
+      }.getOrElse(throw new IllegalStateException(
+        "localPredicateMask: literal predicate did not analyze to a Filter"))
+      if (resolvedPredicates.size > 256) resolvedPredicates.clear()
+      resolvedPredicates.put(key, resolved)
+      resolved
+    })
     val pred = org.apache.spark.sql.catalyst.expressions.Predicate
       .create(cond, childOut)
     pred.initialize(0)
@@ -3746,41 +3803,31 @@ object ColdTier {
     mask
   }
 
-  /** The admission-collapsed literal plan served WITHOUT a per-statement
-   * Spark job: the admitted segments (already bounded by
-   * exactKernelSegments / exactKernelMaxRows) are decoded once into
-   * [[SegmentDataCache]], and every statement runs the same bounded-heap
-   * dedup-by-id kernel ([[graft.functions.BoundedTopK]] through
-   * [[graft.ops.Ann.offerBounded]] — bit-identical distances, merge and
-   * keyed-dedup contract) over the resident arrays. Returns None — the
-   * caller falls back to the lazy distributed scan — when any
-   * precondition fails:
-   *  - the engine is disabled ([[ExactServeLocalKey]]) or the cache
-   *    budget is <= 0;
-   *  - the query set is not plan-time enumerable or exceeds
-   *    [[ExactServeLocalMaxQueriesKey]] (memory here is bounded by
-   *    |queries| x k result rows — an unbounded query batch must not
-   *    collapse onto one process);
-   *  - the delete log exceeds the tombstone broadcast budget (the local
-   *    map would cost what the distributed anti-join refuses to ship).
-   * Correctness-equivalent to the scan engine by construction: same
-   * conservative admission set, same resolved predicate expression,
-   * same EXISTS(del_ts >= eventTime) tombstone semantics, same kernel
-   * code — gated bit-exact by knn_sql_rewrite_aligned_exact and
-   * ExactServeLocalSpec. */
+  private val KeySep = "\u0000"
+
   /** Canonical rendering of a plan-time literal shape — the
    * content-derived memo key fragment for the query-independent
    * per-segment masks (never a result key: it names the predicate, not
-   * what it returned). Types ride along so `1L` and `"1"` can never
-   * collide. */
-  private def literalShapeKey(
+   * what it returned). Injective: every column name, type and value is
+   * length-prefixed (null renders as a bare `n`, which no length prefix
+   * starts with), entries are separated by `\u0000` and their count
+   * leads, so no value's characters can shift a boundary (`IN ('a', 'b')`
+   * never meets `IN ('a<sep>b')`), and types ride along so `1L` and `"1"`
+   * cannot collide either. */
+  private[store] def literalShapeKey(
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
       ranges: Seq[RangeBound]): String = {
+    def lp(x: Any): String = x match {
+      case null => "n"
+      case b: Array[Byte] => lp(b.mkString("[", ",", "]"))
+      case v => val t = v.toString; s"${t.length}:$t"
+    }
     val f = filters.map { case (c, vs, dt) =>
-      s"$c:${dt.catalogString}=${vs.mkString("")}" }
+      s"${lp(c)}${lp(dt.catalogString)}=${vs.map(lp).mkString(",")}" }
     val r = ranges.map(b =>
-      s"${b.column}${b.op}${b.value}:${b.vt.catalogString}")
-    (f ++ r).mkString("")
+      s"${lp(b.column)}${b.op}${lp(b.value)}${lp(b.vt.catalogString)}")
+    val entries = f ++ r
+    s"${entries.length}$KeySep${entries.mkString(KeySep)}"
   }
 
   /** Dedicated bounded pool for the warm-cache batch kernel. r16 fanned
@@ -3820,12 +3867,14 @@ object ColdTier {
   private def exactServeSkeleton(spark: SparkSession, dir: String,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
       ranges: Seq[RangeBound], snapshot: Option[Long],
-      segs: Array[SegmentStats])
+      segs: Array[SegmentStats],
+      // bytes the statement holds besides these segments (the in-process
+      // graph route's routed sidecars), charged against the same budget
+      extraBytes: Long = 0L)
       : Option[(Array[SegmentData], Array[Array[Boolean]])] = {
     if (!spark.conf.getOption(ExactServeLocalKey).forall(_.toBoolean))
       return None
-    val budget = spark.conf.getOption(SegmentCacheBytesKey)
-      .map(_.toLong).getOrElse(SegmentCacheBytesDefault)
+    val budget = segmentCacheBudget(spark)
     if (budget <= 0) return None
     val tombBudget = spark.conf.getOption(TombstoneBroadcastMaxBytesKey)
       .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytesDefault)
@@ -3837,13 +3886,14 @@ object ColdTier {
     // ADMITTED-BYTES precondition (r16 verdict #7): the statement holds
     // strong references to every admitted segment's decoded arrays for
     // its duration, so the admission itself must fit the cache budget —
-    // exact bytes for already-resident entries, a catalog estimate
-    // (rows x (4·dim vector + 112 B id/ts/meta floor)) for cold ones.
-    val est = segs.iterator.map { s =>
-      SegmentDataCache.residentBytes(s.path).getOrElse {
-        val dim = if (s.centroid == null) 0 else s.centroid.length
-        s.count * (4L * dim + 112L)
-      }
+    // exact bytes for already-resident entries, the on-disk estimate
+    // ([[decodedBytesEstimate]]) for cold ones. A segment without a
+    // centroid has no trustworthy catalog row: never admitted.
+    if (segs.exists(_.centroid == null)) return None
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val est = extraBytes + segs.iterator.map { s =>
+      SegmentDataCache.residentBytes(s.path)
+        .getOrElse(decodedBytesEstimate(fs, s.path))
     }.sum
     if (est > budget) return None
     val datas = segs.map(s => SegmentDataCache.get(spark, s.path, budget))
@@ -3854,7 +3904,7 @@ object ColdTier {
     // mask per statement — measured ~6% of serving thread time.
     val shapeKey =
       if (tombSig == null) null
-      else literalShapeKey(filters, ranges) + "" + tombSig
+      else literalShapeKey(filters, ranges) + KeySep + tombSig
     val masks = datas.map { sd =>
       if (shapeKey == null)
         localPredicateMask(spark, sd, filters, ranges, tomb)
@@ -3884,26 +3934,33 @@ object ColdTier {
   private def runExactKernel(spark: SparkSession,
       datas: Array[SegmentData], masks: Array[Array[Boolean]],
       qRows: Array[(Long, Array[Float], Long, Long)], k: Int,
-      metric: Metric): Option[Array[Array[(Long, Int, Long, Double)]]] = {
+      metric: Metric,
+      // restrict the scan to rows whose id is in a candidate set (the
+      // graph route's exact re-rank); null = every masked row
+      keep: Long => Boolean = null)
+      : Option[Array[Array[(Long, Int, Long, Double)]]] = {
     val distFn = Distances.forMetric(metric)
     val l2Abandon = metric == Metric.L2
     val results = new Array[Array[(Long, Int, Long, Double)]](qRows.length)
+    val abort = new java.util.concurrent.atomic.AtomicBoolean(false)
     def runOne(qi: Int): Unit = {
       val (qid, qv, qtime, ttl) = qRows(qi)
       val h = new graft.functions.BoundedTopK(k)
       var si = 0
       while (si < datas.length) {
+        if (abort.get()) return
         val sd = datas(si); val mask = masks(si)
         val n = sd.ids.length
         var i = 0
         while (i < n) {
-          if (mask(i)) {
+          if (mask(i) && (keep == null || keep(sd.ids(i)))) {
             val ts = sd.times(i)
             if (ts >= qtime - ttl && ts <= qtime)
               graft.ops.Ann.offerBounded(h, qv, sd.vecs(i), sd.ids(i),
                 l2Abandon, distFn)
           }
           i += 1
+          if ((i & 4095) == 0 && abort.get()) return
         }
         si += 1
       }
@@ -3914,26 +3971,64 @@ object ColdTier {
       if (qRows.length == 1) runOne(0)
       Some(results)
     } else {
-      import scala.concurrent.{Await, Future}
       val timeoutSec = spark.conf.getOption(ExactServeLocalTimeoutSecKey)
         .map(_.toLong).getOrElse(ExactServeLocalTimeoutSecDefault)
       if (timeoutSec <= 0) return None
-      implicit val ec: scala.concurrent.ExecutionContext = exactKernelEc
-      try {
-        Await.result(
-          Future.sequence(qRows.indices.map(i => Future(runOne(i)))),
-          scala.concurrent.duration.Duration(timeoutSec,
-            java.util.concurrent.TimeUnit.SECONDS))
-        Some(results)
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          logger.warn(s"exact batch kernel missed its ${timeoutSec}s " +
-            "bound; falling back to the distributed scan engine")
-          None
+      if (runAbortable(qRows.length, timeoutSec, abort)(runOne)) Some(results)
+      else {
+        logger.warn(s"exact batch kernel missed its ${timeoutSec}s " +
+          "bound; falling back to the distributed scan engine")
+        None
       }
     }
   }
 
+  /** Runs `body(i)` for every i in [0, n) on [[exactKernelEc]], waiting
+   * at most `timeoutSec`. On timeout it raises `abort` and returns false:
+   * tasks still queued skip their body, and running bodies poll `abort`
+   * in their loops, so a batch nobody waits for any more frees the pool
+   * instead of queueing the next statement's batch behind it. */
+  private[store] def runAbortable(n: Int, timeoutSec: Long,
+      abort: java.util.concurrent.atomic.AtomicBoolean)
+      (body: Int => Unit): Boolean = {
+    import scala.concurrent.{Await, Future}
+    implicit val ec: scala.concurrent.ExecutionContext = exactKernelEc
+    try {
+      Await.result(
+        Future.sequence((0 until n).map(i =>
+          Future(if (!abort.get()) body(i)))),
+        scala.concurrent.duration.Duration(timeoutSec,
+          java.util.concurrent.TimeUnit.SECONDS))
+      true
+    } catch {
+      case _: java.util.concurrent.TimeoutException =>
+        abort.set(true)
+        false
+    }
+  }
+
+  /** The admission-collapsed literal plan served WITHOUT a per-statement
+   * Spark job: the admitted segments (already bounded by
+   * exactKernelSegments / exactKernelMaxRows) are decoded once into
+   * [[SegmentDataCache]], and every statement runs the same bounded-heap
+   * dedup-by-id kernel ([[graft.functions.BoundedTopK]] through
+   * [[graft.ops.Ann.offerBounded]] — bit-identical distances, merge and
+   * keyed-dedup contract) over the resident arrays. Returns None — the
+   * caller falls back to the lazy distributed scan — when any
+   * precondition fails:
+   *  - the engine is disabled ([[ExactServeLocalKey]]) or the cache
+   *    budget is <= 0;
+   *  - the query set is not plan-time enumerable or exceeds
+   *    [[ExactServeLocalMaxQueriesKey]] (memory here is bounded by
+   *    |queries| x k result rows — an unbounded query batch must not
+   *    collapse onto one process);
+   *  - the delete log exceeds the tombstone broadcast budget (the local
+   *    map would cost what the distributed anti-join refuses to ship).
+   * Correctness-equivalent to the scan engine by construction: same
+   * conservative admission set, same resolved predicate expression,
+   * same EXISTS(del_ts >= eventTime) tombstone semantics, same kernel
+   * code — gated bit-exact by knn_sql_rewrite_aligned_exact and
+   * ExactServeLocalSpec. */
   private def serveExactFromMemory(spark: SparkSession, dir: String,
       queries: DataFrame, k: Int,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
@@ -3984,61 +4079,198 @@ object ColdTier {
         cat.filter(s => a(s.segmentId)).map(_.count).sum <= maxRows
     }.map(a => cat.filter(s => a(s.segmentId)))
 
-  /** PLAN-TIME single-query exact serving for the SQL rewrite
-   * ([[graft.plans.KnnProbeRewrite]]): when the literal plan is
-   * admission-collapsed AND the warm memory engine can answer, returns
-   * the top-k (id, dist) rows directly — ascending (dist, id), the
-   * probe merge contract — so the rewrite splices ONE bare
-   * LocalRelation with no probe DataFrame at all. r16 measured the
-   * per-statement cost of the DataFrame route at ~37 ms single-thread
-   * (ProfileSqlServe): building the singleQuery DF, forcing ITS
-   * optimized plan, building the result DF, forcing THAT optimized
-   * plan, and re-deriving the survival masks — all per spark.sql
-   * statement, all query-independent except the kernel. This path's
-   * marginal cost is the admission math over cached stats plus the
-   * kernel itself.
-   *
-   * None = not exact-eligible or a memory-engine precondition missed;
-   * the caller falls back to the DataFrame path
-   * ([[searchIndexedLiteralFiltered]]), which re-derives the serving
-   * decision identically from the same caches and sets its own
-   * observables. Sets [[literalServedVia]]/[[exactServedFrom]] only
-   * when it serves. Results bit-equal to the DataFrame path by
-   * construction: same admission helper, same skeleton, same kernel —
-   * gated by KnnRewriteSpec and the knn_sql_rewrite_aligned_exact
-   * oracle entries. */
-  private[graft] def serveExactLiteralLocal(spark: SparkSession,
-      dir: String, qv: Array[Float], qtime: Long, ttl: Long, k: Int,
+  /** PLAN-TIME in-process serving for the SQL rewrite
+   * ([[graft.plans.KnnProbeRewrite]]): the registered probe for ONE
+   * plan-time query, run on the calling thread over process-resident
+   * data. Returns the top-k (id, dist) rows ascending (dist, id); the
+   * rewrite splices them as one bare LocalRelation, so a warm statement
+   * runs zero Spark jobs (r16 ProfileSqlServe measured the DataFrame
+   * route's per-statement construction at ~37 ms single-thread, and the
+   * distributed probe adds 7-13 jobs). The engine decision is the
+   * distributed route's, unchanged:
+   *  - an admission-COLLAPSED literal plan ([[exactCollapse]]) runs the
+   *    warm memory kernel over [[SegmentDataCache]]-resident segments,
+   *    as [[searchIndexedLiteralFiltered]]'s exact branch does;
+   *  - every other shape runs the graph probe of [[searchIndexedFast]]
+   *    (unfiltered) or [[searchIndexedLiteralFiltered]] (literal) over
+   *    [[SidecarCache]] graphs — same freshness filter, admission set,
+   *    linear route to `probeSegments`, probe depth, over-fetch and
+   *    in-walk acceptance, and the same (dist, id) dedup-by-id merge.
+   *    The unfiltered shape keeps the graph distances and drops
+   *    tombstoned ids; the literal shape re-ranks exactly through
+   *    [[exactServeSkeleton]] + [[runExactKernel]] restricted to the
+   *    candidate ids — the predicate, versioned tombstones and distance
+   *    kernel of [[rerankExact]] (a non-admitted segment's copy of a
+   *    candidate id fails the predicate there, so skipping it is
+   *    lossless).
+   * None = the caller keeps the distributed plan, which re-derives the
+   * same decision and answers identically. The graph route needs the
+   * local engine on ([[ExactServeLocalKey]]), every in-window segment to
+   * carry a centroid and a committed sidecar, the routed sidecars plus
+   * any decoded segments to fit [[SegmentCacheBytesKey]], and the delete
+   * log to fit the tombstone broadcast budget. Sets [[literalServedVia]]
+   * (and, on the memory kernel, [[exactServedFrom]]) only when it serves
+   * a literal plan. Bit-equality with the distributed route is gated by
+   * KnnRewriteSpec and the knn_sql_rewrite* oracle entries. */
+  private[graft] def serveLocal(spark: SparkSession, dir: String,
+      qv: Array[Float], qtime: Long, ttl: Long, k: Int,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
       ranges: Seq[RangeBound], metric: Metric = Metric.L2,
-      snapshot: Option[Long] = None, exactKernelSegments: Int = 4,
-      exactKernelMaxRows: Long = 1L << 20)
+      snapshot: Option[Long] = None, efSearch: Int = 64,
+      probeSegments: Int = Int.MaxValue, shortlist: Int = 50,
+      overfetch: Int = 4, inWalk: Boolean = false,
+      exactKernelSegments: Int = 4, exactKernelMaxRows: Long = 1L << 20)
       : Option[Array[(Long, Double)]] = {
-    if (filters.isEmpty && ranges.isEmpty) return None
+    val literal = filters.nonEmpty || ranges.nonEmpty
+    if (k <= 0 || (literal && shortlist < k)) return None
     val cat = snapshot.map(v => catalogAt(spark, dir, v))
       .getOrElse(catalog(spark, dir))
-    val segs = exactCollapse(cat,
-        literalAdmission(spark, dir, filters, ranges, cat),
-        exactKernelSegments, exactKernelMaxRows) match {
-      case Some(s) => s
-      case None => return None
+    val admissible =
+      if (literal) literalAdmission(spark, dir, filters, ranges, cat)
+      else None
+    val query = Array((0L, qv, qtime, ttl))
+    def rows(results: Array[Array[(Long, Int, Long, Double)]]) =
+      results(0).map { case (_, _, id, d) => (id, d) }
+    if (literal) exactCollapse(cat, admissible, exactKernelSegments,
+        exactKernelMaxRows) match {
+      case Some(segs) =>
+        if (segs.isEmpty) {
+          // the distributed route's shared empty early-return
+          literalServedVia.set("exact")
+          return Some(Array.empty)
+        }
+        return for {
+          (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
+            snapshot, segs)
+          results <- runExactKernel(spark, datas, masks, query, k, metric)
+        } yield {
+          literalServedVia.set("exact")
+          exactServedFrom.set("memory")
+          rows(results)
+        }
+      case None => ()
     }
-    if (segs.isEmpty) {
-      // same answer (and same observable) as the DataFrame path's
-      // shared empty early-return
-      literalServedVia.set("exact")
+
+    // ---- the graph route
+    if (!spark.conf.getOption(ExactServeLocalKey).forall(_.toBoolean))
+      return None
+    val budget = segmentCacheBudget(spark)
+    if (budget <= 0) return None
+    val floor = qtime - ttl
+    val fresh = cat.filter(s => s.maxTs >= floor && s.minTs <= qtime &&
+      admissible.forall(_.contains(s.segmentId)))
+    if (fresh.isEmpty) {
+      if (literal) literalServedVia.set("probe")
       return Some(Array.empty)
     }
-    for {
-      (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
-        snapshot, segs)
-      results <- runExactKernel(spark, datas, masks,
-        Array((0L, qv, qtime, ttl)), k, metric)
-    } yield {
-      literalServedVia.set("exact")
-      exactServedFrom.set("memory")
-      results(0).map { case (_, _, id, d) => (id, d) }
+    if (fresh.exists(_.centroid == null)) return None
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fresh.forall(s => indexSealed(fs, s.path))) return None
+    val chosen =
+      if (probeSegments >= fresh.length) fresh.indices.toSet
+      else linearRoute(qv, fresh.indices, fresh(_).centroid, probeSegments)
+    val shards = fresh.indices.filter(chosen)
+      .flatMap(si => sidecarShards(fs, fresh(si).path))
+    val graphBytes = DecodeFactor * shards.map(_._2).sum
+    val (conj, rangeConj) =
+      if (literal && inWalk) inWalkConjuncts(spark, filters, ranges)
+      else (null, null)
+    // every routed graph's (id, dist) hits at probe depth `depth`
+    def probe(depth: Int): Iterator[(Long, Double)] =
+      shards.iterator.flatMap { case (path, _) =>
+        val store = SidecarCache.get(path,
+          spark.sparkContext.hadoopConfiguration, efSearch)
+        if (conj == null) store.search(qv, depth, floor, qtime).iterator
+        else {
+          val cnt = store.countMatchingConj(conj, rangeConj)
+          if (cnt == 0) Iterator.empty
+          else store.searchFilteredConj(qv, depth, floor, qtime, conj,
+            rangeConj, precount = cnt).iterator
+        }
+      }
+    if (!literal) {
+      if (graphBytes > budget) return None
+      val tombBudget = spark.conf.getOption(TombstoneBroadcastMaxBytesKey)
+        .map(_.toLong).getOrElse(TombstoneBroadcastMaxBytesDefault)
+      val tomb = tombstoneMapBounded(spark, dir, snapshot, tombBudget) match {
+        case Some((m, _)) => m
+        case None => return None
+      }
+      val h = new graft.functions.BoundedTopK(k)
+      probe(math.max(k, shortlist)).foreach { case (id, d) =>
+        if (tomb == null || !tomb.contains(id)) h.offer(d, id)
+      }
+      val (ids, ds) = h.drainSorted()
+      Some(Array.tabulate(ids.length)(j => (ids(j), ds(j))))
+    } else {
+      val depth = shortlist *
+        literalOverfetch(spark, dir, filters, ranges, overfetch, inWalk, cat)
+      for {
+        (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
+          snapshot, fresh, extraBytes = graphBytes)
+        cands = {
+          val c = scala.collection.mutable.LongMap.empty[Unit]
+          probe(depth).foreach { case (id, _) => c.update(id, ()) }
+          c
+        }
+        results <- runExactKernel(spark, datas, masks, query, k, metric,
+          keep = cands.contains)
+      } yield {
+        literalServedVia.set("probe")
+        rows(results)
+      }
     }
+  }
+
+  /** The shortlist over-fetch factor of a literal-filtered graph probe
+   * — one copy shared by [[searchIndexedLiteralFiltered]] and
+   * [[serveLocal]], so both probe to the same depth. */
+  private def literalOverfetch(spark: SparkSession, dir: String,
+      filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
+      ranges: Seq[RangeBound], overfetch: Int, inWalk: Boolean,
+      cat: Array[SegmentStats]): Int = {
+    // histogram-driven shortlist sizing: the graph walk is
+    // filter-oblivious, so ~shortlist SURVIVING candidates require a
+    // 1/selectivity over-fetch — estimated per column from the
+    // attr-stats histograms (independence across columns), with the
+    // registered static factor as the floor and MaxAdaptiveOverfetch
+    // as the cap. A 1% label no longer needs the operator to have
+    // guessed filterOverfetch = 100 at registration time.
+    // lazy: the in-walk branch never sizes an over-fetch, so it must not
+    // pay the per-plan attr-stats loads the estimate costs
+    lazy val selectivity = (filters.map { case (f, vs, _) =>
+      estimateSelectivity(spark, dir, f,
+        vs.map {
+          case n: java.lang.Number => n.doubleValue()
+          case _ => Double.NaN
+        }, Double.NaN, Double.NaN, cat0 = cat)
+    } ++ ranges.groupBy(_.column).map { case (f, bs) =>
+      val (lo, hi) = closedHull(bs)
+      estimateSelectivity(spark, dir, f, Nil, lo, hi, cat0 = cat)
+    }).flatten.reduceOption(_ * _)
+    // a tz-dependent equality/IN conjunct or a non-numeric range bound
+    // cannot filter in-walk — keep the full adaptive over-fetch then
+    val walkable = filters.forall(f => !tzDependent(f._3)) &&
+      ranges.forall(b => !b.asDouble.isNaN)
+    // the in-walk promise is only as good as the sealed payload: with a
+    // wrong registration or stripped sidecars, dropping the over-fetch
+    // would collapse recall silently with no safety net and no
+    // diagnostic (the r13 advice). Check the attrs markers of the
+    // committed sidecars (catalog-bounded metadata reads); if any lacks
+    // a walkable column, keep the adaptive over-fetch as the net and
+    // warn — the walk still filters wherever the payload exists.
+    val payloadOk = !inWalk || !walkable || {
+      val needed = (filters.filterNot(f => tzDependent(f._3)).map(_._1) ++
+        ranges.map(_.column)).distinct
+      val ok = inWalkPayloadPresent(spark, dir, needed, cat)
+      if (!ok) logger.warn(s"searchIndexedLiteralFiltered($dir): inWalk " +
+        s"requested but the sidecar payload for ${needed.mkString(", ")} " +
+        "is missing on at least one indexed segment — keeping the " +
+        "adaptive over-fetch as the recall safety net")
+      ok
+    }
+    if (inWalk && walkable && payloadOk) 1
+    else adaptiveOverfetch(overfetch, selectivity)
   }
 
   /** LITERAL-filtered sidecar search for plan-time rewrites — the
@@ -4168,49 +4400,8 @@ object ColdTier {
         queries, k, metric)
     }
     literalServedVia.set("probe")
-    // histogram-driven shortlist sizing: the graph walk is
-    // filter-oblivious, so ~shortlist SURVIVING candidates require a
-    // 1/selectivity over-fetch — estimated per column from the
-    // attr-stats histograms (independence across columns), with the
-    // registered static factor as the floor and MaxAdaptiveOverfetch
-    // as the cap. A 1% label no longer needs the operator to have
-    // guessed filterOverfetch = 100 at registration time.
-    // lazy: the in-walk branch never sizes an over-fetch, so it must not
-    // pay the per-plan attr-stats loads the estimate costs
-    lazy val selectivity = (filters.map { case (f, vs, _) =>
-      estimateSelectivity(spark, dir, f,
-        vs.map {
-          case n: java.lang.Number => n.doubleValue()
-          case _ => Double.NaN
-        }, Double.NaN, Double.NaN, cat0 = cat)
-    } ++ ranges.groupBy(_.column).map { case (f, bs) =>
-      val (lo, hi) = closedHull(bs)
-      estimateSelectivity(spark, dir, f, Nil, lo, hi, cat0 = cat)
-    }).flatten.reduceOption(_ * _)
-    // a tz-dependent equality/IN conjunct or a non-numeric range bound
-    // cannot filter in-walk — keep the full adaptive over-fetch then
-    val walkable = filters.forall(f => !tzDependent(f._3)) &&
-      ranges.forall(b => !b.asDouble.isNaN)
-    // the in-walk promise is only as good as the sealed payload: with a
-    // wrong registration or stripped sidecars, dropping the over-fetch
-    // would collapse recall silently with no safety net and no
-    // diagnostic (the r13 advice). Check the attrs markers of the
-    // committed sidecars (catalog-bounded metadata reads); if any lacks
-    // a walkable column, keep the adaptive over-fetch as the net and
-    // warn — the walk still filters wherever the payload exists.
-    val payloadOk = !inWalk || !walkable || {
-      val needed = (filters.filterNot(f => tzDependent(f._3)).map(_._1) ++
-        ranges.map(_.column)).distinct
-      val ok = inWalkPayloadPresent(spark, dir, needed, cat)
-      if (!ok) logger.warn(s"searchIndexedLiteralFiltered($dir): inWalk " +
-        s"requested but the sidecar payload for ${needed.mkString(", ")} " +
-        "is missing on at least one indexed segment — keeping the " +
-        "adaptive over-fetch as the recall safety net")
-      ok
-    }
-    val effOverfetch =
-      if (inWalk && walkable && payloadOk) 1
-      else adaptiveOverfetch(overfetch, selectivity)
+    val effOverfetch = literalOverfetch(spark, dir, filters, ranges,
+      overfetch, inWalk, cat)
     rerankExact(spark, dir,
       probeCandidates(spark, dir, queries,
         shortlist * effOverfetch, metric, efSearch,

@@ -24,7 +24,10 @@ import graft.Metric
  * storage, epoch-stamped visited flags, and primitive binary heaps for
  * the beam (a boxed PriorityQueue here dominates build time).
  *
- * Single-threaded by design — one instance per partition per task.
+ * One writer: `put`/`delete` must not run concurrently with anything
+ * else on the same instance. Searches of a graph that is no longer
+ * written (a loaded sidecar) may run from any number of threads at once:
+ * each thread searches with its own scratch.
  */
 final class HnswStore(
     metric: Metric,
@@ -120,73 +123,19 @@ final class HnswStore(
 
   private def levelFor(): Int = (-math.log(rnd.nextDouble()) * mL).toInt
 
-  // ---- primitive heaps (parallel dist/id arrays) -----------------------
+  // Beam-search scratch. `put` owns one per store (the single writer);
+  // searches take the calling thread's ([[HnswStore.searchScratch]]), so
+  // concurrent searches over one shared graph (a cached sidecar probed
+  // by several statements at once) never share heaps or visited flags.
+  private val buildScratch = new HnswStore.Scratch
 
-  /** Binary heap over (dist, id); `sign` +1 = min-heap, -1 = max-heap.
-   * Ties ordered by smaller id first in a min-heap (matching the
-   * reference's (dist, id) ascending contract). */
-  private final class Heap(capacity0: Int, sign: Int) extends Serializable {
-    var ds = new Array[Double](capacity0)
-    var ids = new Array[Int](capacity0)
-    var size = 0
-    @inline private def lt(d1: Double, i1: Int, d2: Double, i2: Int): Boolean =
-      if (d1 != d2) (if (sign > 0) d1 < d2 else d1 > d2)
-      else (if (sign > 0) i1 < i2 else i1 > i2)
-    def clear(): Unit = size = 0
-    def add(d: Double, id: Int): Unit = {
-      if (size == ds.length) {
-        ds = java.util.Arrays.copyOf(ds, size * 2)
-        ids = java.util.Arrays.copyOf(ids, size * 2)
-      }
-      var i = size
-      size += 1
-      while (i > 0) {
-        val p = (i - 1) >> 1
-        if (lt(d, id, ds(p), ids(p))) {
-          ds(i) = ds(p); ids(i) = ids(p); i = p
-        } else {
-          ds(i) = d; ids(i) = id; return
-        }
-      }
-      ds(0) = d; ids(0) = id
-    }
-    def topDist: Double = ds(0)
-    def topId: Int = ids(0)
-    def poll(): Unit = {
-      size -= 1
-      val d = ds(size); val id = ids(size)
-      var i = 0
-      while (true) {
-        val l = 2 * i + 1
-        if (l >= size) { ds(i) = d; ids(i) = id; return }
-        var c = l
-        val r = l + 1
-        if (r < size && lt(ds(r), ids(r), ds(l), ids(l))) c = r
-        if (lt(ds(c), ids(c), d, id)) {
-          ds(i) = ds(c); ids(i) = ids(c); i = c
-        } else { ds(i) = d; ids(i) = id; return }
-      }
-    }
-  }
-
-  // scratch state reused across searches (single-threaded store)
-  private var visitedEpoch = new Array[Int](1024)
-  private var epoch = 0
-  private val candHeap = new Heap(256, +1)  // to expand, closest first
-  private val foundHeap = new Heap(256, -1) // best ef, worst on top
-  // searchLayer result buffers (ascending (dist, id))
-  private var resD = new Array[Double](256)
-  private var resI = new Array[Int](256)
-  private var resN = 0
-
-  /** Beam search on one layer; fills resD/resI/resN ascending. */
-  private def searchLayer(q: Array[Float], entry: Int, ef: Int, layer: Int): Unit = {
-    if (visitedEpoch.length < n) {
-      visitedEpoch = java.util.Arrays.copyOf(visitedEpoch, math.max(n, visitedEpoch.length * 2))
-    }
-    epoch += 1
-    val ep = epoch
-    val visited = visitedEpoch
+  /** Beam search on one layer; fills `s.resD/resI/resN` ascending. */
+  private def searchLayer(s: HnswStore.Scratch, q: Array[Float], entry: Int,
+      ef: Int, layer: Int): Unit = {
+    val ep = s.nextEpoch(n)
+    val visited = s.visitedEpoch
+    val candHeap = s.candHeap
+    val foundHeap = s.foundHeap
     candHeap.clear(); foundHeap.clear()
     val d0 = dist(q, vecs(entry))
     candHeap.add(d0, entry)
@@ -218,11 +167,14 @@ final class HnswStore(
       }
     }
     // drain max-heap into ascending arrays
-    resN = foundHeap.size
-    if (resD.length < resN) {
-      resD = new Array[Double](resN * 2)
-      resI = new Array[Int](resN * 2)
+    val resN = foundHeap.size
+    s.resN = resN
+    if (s.resD.length < resN) {
+      s.resD = new Array[Double](resN * 2)
+      s.resI = new Array[Int](resN * 2)
     }
+    val resD = s.resD
+    val resI = s.resI
     var i = resN - 1
     while (i >= 0) {
       resD(i) = foundHeap.topDist; resI(i) = foundHeap.topId
@@ -300,10 +252,11 @@ final class HnswStore(
 
     var ep = greedyDescend(vec, entryPoint, maxLevel, math.min(level, maxLevel))
     var lc = math.min(level, maxLevel)
+    val sc = buildScratch
     while (lc >= 0) {
-      searchLayer(vec, ep, efConstruction, lc)
+      searchLayer(sc, vec, ep, efConstruction, lc)
       val maxConn = if (lc == 0) maxM0 else m
-      val selected = selectNeighbors(resD, resI, resN, m)
+      val selected = selectNeighbors(sc.resD, sc.resI, sc.resN, m)
       neighbors(lc)(id) = selected
       var i = 0
       while (i < selected.length) {
@@ -336,7 +289,7 @@ final class HnswStore(
         }
         i += 1
       }
-      if (resN > 0) ep = resI(0)
+      if (sc.resN > 0) ep = sc.resI(0)
       lc -= 1
     }
     if (level > maxLevel) { maxLevel = level; entryPoint = id }
@@ -619,9 +572,13 @@ final class HnswStore(
     }
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Double)](k)
     val seenLabels = new java.util.HashSet[Long]()
+    val sc = HnswStore.searchScratch.get()
     var done = false
     while (!done) {
-      searchLayer(q, ep, ef, 0)
+      searchLayer(sc, q, ep, ef, 0)
+      val resN = sc.resN
+      val resD = sc.resD
+      val resI = sc.resI
       out.clear(); seenLabels.clear()
       var i = 0
       while (i < resN && out.length < k) {
@@ -641,6 +598,87 @@ final class HnswStore(
 
 object HnswStore {
   private val EmptyInts = new Array[Int](0)
+
+  // ---- primitive heaps (parallel dist/id arrays) -----------------------
+
+  /** Binary heap over (dist, id); `sign` +1 = min-heap, -1 = max-heap.
+   * Ties ordered by smaller id first in a min-heap (matching the
+   * reference's (dist, id) ascending contract). */
+  private[store] final class Heap(capacity0: Int, sign: Int) extends Serializable {
+    var ds = new Array[Double](capacity0)
+    var ids = new Array[Int](capacity0)
+    var size = 0
+    @inline private def lt(d1: Double, i1: Int, d2: Double, i2: Int): Boolean =
+      if (d1 != d2) (if (sign > 0) d1 < d2 else d1 > d2)
+      else (if (sign > 0) i1 < i2 else i1 > i2)
+    def clear(): Unit = size = 0
+    def add(d: Double, id: Int): Unit = {
+      if (size == ds.length) {
+        ds = java.util.Arrays.copyOf(ds, size * 2)
+        ids = java.util.Arrays.copyOf(ids, size * 2)
+      }
+      var i = size
+      size += 1
+      while (i > 0) {
+        val p = (i - 1) >> 1
+        if (lt(d, id, ds(p), ids(p))) {
+          ds(i) = ds(p); ids(i) = ids(p); i = p
+        } else {
+          ds(i) = d; ids(i) = id; return
+        }
+      }
+      ds(0) = d; ids(0) = id
+    }
+    def topDist: Double = ds(0)
+    def topId: Int = ids(0)
+    def poll(): Unit = {
+      size -= 1
+      val d = ds(size); val id = ids(size)
+      var i = 0
+      while (true) {
+        val l = 2 * i + 1
+        if (l >= size) { ds(i) = d; ids(i) = id; return }
+        var c = l
+        val r = l + 1
+        if (r < size && lt(ds(r), ids(r), ds(l), ids(l))) c = r
+        if (lt(ds(c), ids(c), d, id)) {
+          ds(i) = ds(c); ids(i) = ids(c); i = c
+        } else { ds(i) = d; ids(i) = id; return }
+      }
+    }
+  }
+
+  /** Scratch for one beam search at a time: epoch-stamped visited flags,
+   * the two beam heaps and the ascending result buffers. */
+  private[store] final class Scratch extends Serializable {
+    var visitedEpoch = new Array[Int](1024)
+    var epoch = 0
+    val candHeap = new Heap(256, +1)  // to expand, closest first
+    val foundHeap = new Heap(256, -1) // best ef, worst on top
+    var resD = new Array[Double](256)
+    var resI = new Array[Int](256)
+    var resN = 0
+
+    /** A fresh visited stamp for a walk over `n` nodes. Stamps from
+     * earlier walks (of any graph) are all smaller; on wrap-around the
+     * flags are cleared once. */
+    def nextEpoch(n: Int): Int = {
+      if (visitedEpoch.length < n)
+        visitedEpoch = java.util.Arrays.copyOf(visitedEpoch,
+          math.max(n, visitedEpoch.length * 2))
+      if (epoch == Int.MaxValue) {
+        java.util.Arrays.fill(visitedEpoch, 0)
+        epoch = 0
+      }
+      epoch += 1
+      epoch
+    }
+  }
+
+  /** Each thread's search scratch, shared by every store it searches —
+   * one walk runs at a time per thread. */
+  private val searchScratch: ThreadLocal[Scratch] =
+    ThreadLocal.withInitial(() => new Scratch)
   private val Magic = 0x47484E57 // "GHNW"
 
   /** Deserialize a graph written by [[HnswStore.writeTo]]. `efSearch` is a

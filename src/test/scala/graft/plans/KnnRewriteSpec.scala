@@ -871,4 +871,132 @@ class KnnRewriteSpec extends AnyFunSuite {
         .exists(_.contains(corpusPath)))
     } finally KnnIndex.clear()
   }
+
+  /** A label-RECLUSTERED tier ([[ColdTier.reclusterByAttr]]: 10 label
+   * buckets x 2 cells, HNSW sidecars, attr stats) carrying a delete log,
+   * pinned by a snapshot that a later delete does not reach. Returns the
+   * snapshot version and the ids deleted before / after it. */
+  private def reclusteredFixture(): (String, String,
+      Seq[(Long, Array[Float], Long, Int)], Long, Set[Long], Set[Long]) = {
+    import spark.implicits._
+    val rows = clustered(1200).map { case (id, v, _) =>
+      (id, v, 100L + id, (id % 10).toInt)
+    }
+    val corpusPath = Files.createTempDirectory("knnrw-rccorpus").toString
+    rows.toDF("id", "vec", "eventTime", "label").write.mode("overwrite")
+      .parquet(corpusPath)
+    val coldDir = Files.createTempDirectory("knnrw-rctier").toString
+    ColdTier.sealMany(rows.toDF("id", "vec", "eventTime", "label")
+      .withColumn("segmentId", (col("id") / 600).cast("long")), coldDir)
+    ColdTier.reclusterByAttr(spark, coldDir, "label", buckets = 10,
+      cellsPerBucket = 2, metric = Metric.L2, m = 8, efConstruction = 64)
+    // tombstones among the query point's nearest rows: half before the
+    // snapshot (the pinned registration applies them), half after it
+    val q = rows(42)._2
+    val near = rows.sortBy(r => (Distances.l2(q, r._2), r._1)).take(12)
+      .map(_._1)
+    val (pre, post) = near.partition(_ % 2 == 0)
+    ColdTier.sealDeletes(pre.map(id => (id, 10000L)).toDF("id", "ts"),
+      coldDir, 1L)
+    val v = ColdTier.snapshot(spark, coldDir)
+    ColdTier.sealDeletes(post.map(id => (id, 10000L)).toDF("id", "ts"),
+      coldDir, 2L)
+    (corpusPath, coldDir, rows, v, pre.toSet, post.toSet)
+  }
+
+  test("warm unfiltered and wide-IN statements over a reclustered, " +
+      "snapshot-pinned tier run ZERO Spark jobs and bit-equal the " +
+      "distributed probe; a zero cache budget or a missing sidecar falls " +
+      "back to the distributed plan with the same answer") {
+    import spark.implicits._
+    val (corpusPath, coldDir, rows, v, preDeleted, _) = reclusteredFixture()
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 48,
+        probeSegments = 5, shortlist = 16, filterColumns = Set("label"),
+        filterOverfetch = 4, snapshot = Some(v))
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_rc")
+      val q = rows(42)._2
+      val arr = q.map(f => s"CAST($f AS FLOAT)").mkString("array(", ",", ")")
+      // the IN admits 3 labels x 2 cells = 6 segments — past the
+      // 4-segment exact collapse, so the graph probe serves it
+      val inLabels = Seq(1, 4, 7)
+      val stmts = Seq(
+        "unfiltered" -> s"""SELECT id, l2_distance(vec, $arr) AS dist
+           |FROM knn_rc ORDER BY dist, id LIMIT 10""".stripMargin,
+        "in" -> s"""SELECT id, l2_distance(vec, $arr) AS dist FROM knn_rc
+           |WHERE label IN (${inLabels.mkString(", ")})
+           |ORDER BY dist, id LIMIT 10""".stripMargin)
+      // the direct DataFrame API with the registration's parameters and
+      // the rewrite's contract-span window
+      val qDf = Seq((0L, q, Long.MaxValue / 2, Long.MaxValue))
+        .toDF("qid", "qv", "qtime", "ttl")
+      def direct(shape: String): Seq[(Long, Double)] = (shape match {
+        case "unfiltered" => ColdTier.searchIndexedFast(spark, coldDir, qDf,
+          10, Metric.L2, efSearch = 48, probeSegments = 5, shortlist = 16,
+          snapshot = Some(v))
+        case _ => ColdTier.searchIndexedLiteralFiltered(spark, coldDir, qDf,
+          10, Seq(("label", inLabels,
+            org.apache.spark.sql.types.IntegerType)), Metric.L2,
+          shortlist = 16, efSearch = 48, probeSegments = 5, overfetch = 4,
+          snapshot = Some(v))
+      }).orderBy("rn").collect().map(r => (r.getLong(2), r.getDouble(3)))
+        .toSeq
+      // (rows, Spark jobs) of one statement
+      def run(sql: String): (Seq[(Long, Double)], Int) = {
+        val jobs = new java.util.concurrent.atomic.AtomicInteger()
+        val l = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        }
+        spark.sparkContext.addSparkListener(l)
+        try {
+          val got = spark.sql(sql).collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          Thread.sleep(1000) // listener bus drains asynchronously
+          (got, jobs.get())
+        } finally spark.sparkContext.removeSparkListener(l)
+      }
+      val served = stmts.map { case (shape, sql) =>
+        spark.sql(sql).collect() // warm: sidecars, segments, masks
+        val (got, jobs) = run(sql)
+        if (shape == "in") assert(ColdTier.literalServedVia.get == "probe",
+          "a 6-segment IN must be served by the graph probe")
+        assert(jobs == 0, s"warm $shape statement ran $jobs Spark job(s)")
+        assert(got.length == 10)
+        assert(got == direct(shape),
+          s"in-process $shape answer != distributed probe answer")
+        assert(!got.exists(r => preDeleted(r._1)),
+          s"pre-snapshot tombstones must apply: $got")
+        if (shape == "in")
+          assert(got.forall(r => inLabels.contains((r._1 % 10).toInt)))
+        shape -> got
+      }.toMap
+
+      // fallback: no cache budget — the distributed plan serves the
+      // same answer
+      spark.conf.set(ColdTier.SegmentCacheBytesKey, "0")
+      try stmts.foreach { case (shape, sql) =>
+        val (got, jobs) = run(sql)
+        assert(jobs > 0, s"$shape: a zero budget must keep the " +
+          "distributed plan")
+        assert(got == served(shape), s"$shape: fallback answer differs")
+      } finally spark.conf.unset(ColdTier.SegmentCacheBytesKey)
+
+      // fallback: an in-window segment without a sidecar (one the IN
+      // admits, so both statements see it)
+      val victim = ColdTier.admissibleIds(spark, coldDir, "label", Seq(1),
+        org.apache.spark.sql.types.IntegerType).get.min
+      val sidecar = new org.apache.hadoop.fs.Path(ColdTier.catalogAt(spark,
+        coldDir, v).find(_.segmentId == victim).get.path + "-hnsw")
+      sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(sidecar, true)
+      stmts.foreach { case (shape, sql) =>
+        val (got, jobs) = run(sql)
+        assert(jobs > 0, s"$shape: a segment without a sidecar must keep " +
+          "the distributed plan")
+        assert(got == direct(shape), s"$shape: fallback answer differs")
+      }
+    } finally KnnIndex.clear()
+  }
 }

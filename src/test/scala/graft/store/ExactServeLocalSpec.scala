@@ -319,4 +319,149 @@ class ExactServeLocalSpec extends AnyFunSuite {
       finally spark.conf.unset(ColdTier.CatalogCacheKey)
     assert(on.sameElements(off))
   }
+
+  test("literal shape keys are injective: values, entries and types " +
+      "cannot run into each other") {
+    val lt = org.apache.spark.sql.types.LongType
+    val st = org.apache.spark.sql.types.StringType
+    def key(fs: (String, Seq[Any], org.apache.spark.sql.types.DataType)*) =
+      ColdTier.literalShapeKey(fs, Nil)
+    assert(key(("label", Seq(1L, 23L), lt)) != key(("label", Seq(12L, 3L), lt)))
+    assert(key(("r", Seq("a\u0001b", "c"), st)) !=
+      key(("r", Seq("a", "b\u0001c"), st)))
+    assert(key(("r", Seq("a,b"), st)) != key(("r", Seq("a", "b"), st)))
+    assert(key(("r", Seq(null), st)) != key(("r", Seq("null"), st)))
+    assert(key(("label", Seq(1L), lt)) != key(("label", Seq("1"), st)))
+    assert(key(("a", Seq(1L), lt), ("b", Seq(2L), lt)) !=
+      key(("a", Seq(1L, 2L), lt)))
+    val rb = ColdTier.RangeBound("score", ">=", 1.0,
+      org.apache.spark.sql.types.DoubleType)
+    assert(ColdTier.literalShapeKey(Seq(("label", Seq(1L), lt)), Seq(rb)) !=
+      ColdTier.literalShapeKey(Seq(("label", Seq(1L), lt)), Nil))
+  }
+
+  test("warm masks are per literal: IN lists whose values concatenate " +
+      "alike each return their own brute-force top-k on the memory path") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("exact-serve-shapekey").toString
+    val rnd = new java.util.Random(71L)
+    val regions = Seq("a", "b\u0001c", "a\u0001b", "c")
+    val labels = Seq(1L, 23L, 12L, 3L)
+    // segment 0 mixes every label and region; segment 1 holds none of
+    // them, so every literal below admission-collapses onto segment 0
+    // and the statements share its mask memo
+    val rows = (0 until 400).map { i =>
+      (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat), i.toLong,
+        if (i < 300) labels(i % 4) else 99L,
+        if (i < 300) regions(i % 4) else "zzz")
+    }
+    Seq(0 until 300, 300 until 400).zipWithIndex.foreach { case (r, seg) =>
+      ColdTier.seal(rows.slice(r.head, r.last + 1)
+        .toDF("id", "vec", "eventTime", "label", "region"), dir, seg.toLong)
+    }
+    ColdTier.sealAttrStats(spark, dir, "label")
+    ColdTier.sealAttrStats(spark, dir, "region")
+    val qv = rows(17)._2
+    def check(column: String, values: Seq[Any],
+        vt: org.apache.spark.sql.types.DataType,
+        keep: ((Long, Array[Float], Long, Long, String)) => Boolean) = {
+      val got = ColdTier.searchIndexedLiteralFiltered(spark, dir,
+          queriesDf(qv), k, Seq((column, values, vt)), Metric.L2,
+          shortlist = 8, efSearch = 32)
+        .collect().map(r => (r.getInt(1), r.getLong(2)))
+        .sortBy(_._1).map(_._2).toList
+      assert(ColdTier.exactServedFrom.get == "memory")
+      val truth = rows.filter(keep)
+        .map { case (id, v, _, _, _) => (id, Distances.l2(qv, v)) }
+        .sortBy { case (id, d) => (d, id) }.take(k).map(_._1).toList
+      assert(got == truth, s"$column IN $values")
+    }
+    val lt = org.apache.spark.sql.types.LongType
+    val st = org.apache.spark.sql.types.StringType
+    check("label", Seq(1L, 23L), lt, r => r._4 == 1L || r._4 == 23L)
+    check("label", Seq(12L, 3L), lt, r => r._4 == 12L || r._4 == 3L)
+    check("region", Seq("a\u0001b", "c"), st,
+      r => r._5 == "a\u0001b" || r._5 == "c")
+    check("region", Seq("a", "b\u0001c"), st,
+      r => r._5 == "a" || r._5 == "b\u0001c")
+  }
+
+  test("a segment without a centroid is never admitted to the memory " +
+      "engine: its statements fall back to the distributed plan") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("exact-serve-nocentroid").toString
+    val rnd = new java.util.Random(73L)
+    val rows = (0 until 300).map { i =>
+      (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat), i.toLong,
+        (i % 3).toLong)
+    }
+    (0L until 3L).foreach { l =>
+      ColdTier.seal(rows.filter(_._4 == l).toDF("id", "vec", "eventTime",
+        "label"), dir, l)
+    }
+    ColdTier.sealAttrStats(spark, dir, "label")
+    val cat = ColdTier.catalog(spark, dir)
+    ColdTier.swapCatalog(spark, dir,
+      cat.map(s => if (s.segmentId == 1L) s.copy(centroid = null) else s),
+      ColdTier.catalogVersion(spark, dir))
+    val qv = rows(5)._2
+    val lt = org.apache.spark.sql.types.LongType
+    def run(label: Long) = {
+      val got = ColdTier.searchIndexedLiteralFiltered(spark, dir,
+          queriesDf(qv), k, Seq(("label", Seq(label), lt)), Metric.L2,
+          shortlist = 8, efSearch = 32)
+        .collect().map(r => (r.getInt(1), r.getLong(2)))
+        .sortBy(_._1).map(_._2).toList
+      val truth = rows.filter(_._4 == label)
+        .map { case (id, v, _, _) => (id, Distances.l2(qv, v)) }
+        .sortBy { case (id, d) => (d, id) }.take(k).map(_._1).toList
+      assert(got == truth)
+    }
+    run(1L)
+    assert(ColdTier.exactServedFrom.get == "scan",
+      "a centroid-less segment must not enter the memory engine")
+    run(2L)
+    assert(ColdTier.exactServedFrom.get == "memory")
+  }
+
+  test("a timed-out batch stops its tasks, so the next batch is not " +
+      "queued behind it") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val abort = new AtomicBoolean(false)
+    val started = new AtomicInteger()
+    // every body runs until aborted: the batch cannot finish in time
+    assert(!ColdTier.runAbortable(1000, 1L, abort) { _ =>
+      started.incrementAndGet()
+      while (!abort.get()) Thread.sleep(5)
+    })
+    assert(abort.get(), "the timeout must raise the abort flag")
+    val t0 = System.nanoTime()
+    assert(ColdTier.runAbortable(8, 30L, new AtomicBoolean(false))(_ => ()),
+      "the next batch must complete")
+    assert((System.nanoTime() - t0) / 1e9 < 5.0,
+      "the next batch waited behind the timed-out one")
+    assert(started.get() < 1000,
+      s"queued tasks of the timed-out batch still ran: ${started.get()}")
+  }
+
+  test("listingSigAndBytes counts every file of a nested delete log") {
+    val root = Files.createTempDirectory("listing-sig")
+    def put(rel: String, n: Int): Unit = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.write(f, new Array[Byte](n))
+    }
+    put("top", 7)
+    put("batch-1/part-0", 100)
+    put("batch-2/nested/part-1", 300)
+    val p = new org.apache.hadoop.fs.Path(root.toUri)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (sig, bytes) = ColdTier.listingSigAndBytes(fs, p)
+    assert(bytes == 407L, s"bytes $bytes")
+    assert(sig.contains("batch-2/nested/part-1:300:"), sig)
+    // a file two levels down changes the signature too
+    put("batch-2/nested/part-2", 5)
+    val (sig2, bytes2) = ColdTier.listingSigAndBytes(fs, p)
+    assert(sig2 != sig && bytes2 == 412L)
+  }
 }

@@ -274,4 +274,47 @@ class StoreSpec extends AnyFunSuite {
     val q = randomVecs(1, 16, 7L)(0)
     assert(a.search(q, 10).sameElements(b.search(q, 10)))
   }
+
+  test("HnswStore: 8 threads x 200 queries over one shared graph give " +
+      "exactly the single-thread answers") {
+    val big = randomVecs(2000, 16, 8L)
+    val small = randomVecs(300, 16, 9L)
+    def build(vs: Array[Array[Float]], seed: Long) = {
+      val s = new HnswStore(Metric.L2, m = 8, efConstruction = 64,
+        efSearch = 32, seed = seed)
+      vs.zipWithIndex.foreach { case (v, i) => s.put(i.toLong, i.toLong, v) }
+      s.setAttrHashes("label", numeric = true,
+        Array.tabulate(vs.length)(i => (i % 7).toLong))
+      s
+    }
+    // two graphs of different sizes, searched alternately by every
+    // thread: the per-thread scratch is shared across graphs
+    val a = build(big, 10L)
+    val b = build(small, 11L)
+    val qs = randomVecs(200, 16, 12L)
+    // mixed depths, windows and in-walk filters, so the beam and the
+    // result buffers grow differently per query
+    def answer(i: Int): Seq[(Long, Double)] = {
+      val k = 5 + i % 40
+      val store = if (i % 3 == 0) b else a
+      if (i % 4 == 0)
+        store.searchFilteredConj(qs(i), k, 0L, Long.MaxValue,
+          Array(("label", true, Array((i % 7).toLong)))).toSeq
+      else store.search(qs(i), k, (i % 5) * 100L, Long.MaxValue).toSeq
+    }
+    val expected = qs.indices.map(answer)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
+          // each thread runs all 200 queries, starting at its own offset
+          def call(): Seq[Int] = qs.indices.map(j => (j + 25 * t) % qs.length)
+            .filter(i => answer(i) != expected(i))
+        })
+      }
+      val wrong = futures.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(wrong.isEmpty, s"queries answered differently under " +
+        s"concurrency: ${wrong.distinct.sorted.take(20)}")
+    } finally pool.shutdownNow()
+  }
 }
