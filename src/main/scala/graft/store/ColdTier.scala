@@ -83,21 +83,27 @@ object ColdTier {
 
   /** One-buffer vector mean: a single aggregate over the whole array.
    * The per-element `avg(element_at(vec, i))` form builds a dim-wide
-   * expression tree — fine at dim 64, pathological at dim 4096. */
-  private final class VecMeanAggregator(dim: Int)
+   * expression tree — fine at dim 64, pathological at dim 4096. The
+   * buffer is sized by the first row it reduces (no separate dim probe
+   * job); an empty buffer is the identity of `merge`. */
+  private object VecMeanAggregator
     extends org.apache.spark.sql.expressions.Aggregator[
       Seq[Float], VecMeanBuf, Seq[Double]] {
-    def zero: VecMeanBuf = VecMeanBuf(new Array[Double](dim), 0L)
+    def zero: VecMeanBuf = VecMeanBuf(Array.emptyDoubleArray, 0L)
     def reduce(b: VecMeanBuf, a: Seq[Float]): VecMeanBuf = {
+      val sums = if (b.n == 0) new Array[Double](a.length) else b.sums
       var i = 0
-      while (i < dim) { b.sums(i) += a(i); i += 1 }
-      VecMeanBuf(b.sums, b.n + 1)
+      while (i < sums.length) { sums(i) += a(i); i += 1 }
+      VecMeanBuf(sums, b.n + 1)
     }
-    def merge(x: VecMeanBuf, y: VecMeanBuf): VecMeanBuf = {
-      var i = 0
-      while (i < dim) { x.sums(i) += y.sums(i); i += 1 }
-      VecMeanBuf(x.sums, x.n + y.n)
-    }
+    def merge(x: VecMeanBuf, y: VecMeanBuf): VecMeanBuf =
+      if (y.n == 0) x
+      else if (x.n == 0) y
+      else {
+        var i = 0
+        while (i < x.sums.length) { x.sums(i) += y.sums(i); i += 1 }
+        VecMeanBuf(x.sums, x.n + y.n)
+      }
     def finish(b: VecMeanBuf): Seq[Double] =
       if (b.n == 0) Seq.empty else b.sums.map(_ / b.n).toSeq
     def bufferEncoder: org.apache.spark.sql.Encoder[VecMeanBuf] =
@@ -122,6 +128,55 @@ object ColdTier {
     val stats = writeSegment(vectors, dir, segmentId)
     appendCatalog(spark, dir, Seq(stats).toDF())
     stats
+  }
+
+  /** One driver-resident row of a [[sealLocal]] input: the core columns
+   * plus one string attribute (`attr`, null when the row has none). */
+  final case class SealRow(id: Long, vec: Array[Float], eventTime: Long,
+      attr: String)
+
+  /** [[seal]] for rows already on the driver (the streaming flush holds
+   * its evicted rows after the trigger's one collect): the same segment
+   * layout and catalog append, but the rows are split into the
+   * id-salted files here, so the write is one Spark job with no shuffle,
+   * and the stats come from the rows in hand instead of read-back jobs —
+   * count, min/max event time, the double-precision mean as centroid and
+   * the exact L2 radius around it. */
+  def sealLocal(spark: SparkSession, rows: Seq[SealRow], dir: String,
+      segmentId: Long): SegmentStats = {
+    import spark.implicits._
+    require(rows.nonEmpty, s"sealLocal: segment $segmentId has no rows")
+    heal(spark, dir)
+    val nSealFiles = sealFilesPerSegment
+    // the salt of writeSegment's `pmod(xxhash64(id), n)`, one file each
+    val salted = rows.groupBy(r => java.lang.Math.floorMod(
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(r.id, 42L),
+        nSealFiles.toLong))
+      .toSeq.sortBy(_._1).map(_._2)
+    val path = writeSegmentFiles(spark.createDataset(
+      spark.sparkContext.parallelize(salted, salted.length)
+        .flatMap(identity)).toDF(), dir, segmentId)
+    val stats = localStats(rows, segmentId, path)
+    appendCatalog(spark, dir, Seq(stats).toDF())
+    stats
+  }
+
+  /** The catalog row [[writeSegment]] computes, from rows in hand. */
+  private def localStats(rows: Seq[SealRow], segmentId: Long,
+      path: String): SegmentStats = {
+    val sums = new Array[Double](rows.head.vec.length)
+    var minTs = Long.MaxValue
+    var maxTs = Long.MinValue
+    rows.foreach { r =>
+      var i = 0
+      while (i < sums.length) { sums(i) += r.vec(i); i += 1 }
+      minTs = math.min(minTs, r.eventTime)
+      maxTs = math.max(maxTs, r.eventTime)
+    }
+    val centroid = sums.map(s => (s / rows.length).toFloat)
+    val r2 = rows.iterator.map(r => Distances.l2(r.vec, centroid)).max
+    SegmentStats(segmentId, path, rows.length.toLong, minTs, maxTs,
+      centroid, math.sqrt(r2))
   }
 
   /** Append catalog rows and bump the version, both under the writer
@@ -880,11 +935,27 @@ object ColdTier {
     val spark = deletes.sparkSession
     val out = new Path(s"${deleteLogPath(dir)}/$name")
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(out)) return false
+    // the batch dir only ever appears by the rename below, so its
+    // existence is the commit predicate; a dir still holding a
+    // `_temporary` is a parquet write that crashed in place (an older
+    // writer wrote straight into the log) and is redone
+    if (fs.exists(out)) {
+      if (!fs.exists(new Path(out, "_temporary"))) return false
+      fs.delete(out, true)
+    }
     val d = deletes.select(col("id").cast("long").as("del_id"),
       col("ts").cast("long").as("del_ts"))
     if (d.isEmpty) return false
-    d.coalesce(1).write.parquet(out.toString)
+    // staged outside the log (a reader globbing `batch-*` never sees a
+    // half-written batch), then renamed into place — the tmp+rename
+    // discipline of [[commitAttrStats]] and [[snapshot]]; a crash leaves
+    // only the staging dir, swept by the batch's next attempt
+    val stage = new Path(s"$dir/_deletes-staging/$name")
+    fs.delete(stage, true)
+    d.coalesce(1).write.parquet(stage.toString)
+    fs.mkdirs(out.getParent)
+    if (!fs.rename(stage, out))
+      throw new java.io.IOException(s"sealDeletes: rename $stage -> $out failed")
     true
   }
 
@@ -1082,8 +1153,7 @@ object ColdTier {
     fs.delete(staging, true)
     val written = spark.read.parquet(
       ids.map(sid => s"$dir/segment-$sid").toIndexedSeq: _*)
-    val dim = written.select(size(col("vec"))).first().getInt(0)
-    val meanUdaf = udaf(new VecMeanAggregator(dim),
+    val meanUdaf = udaf(VecMeanAggregator,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
     val base = written.groupBy("segmentId").agg(
         count(lit(1)).as("cnt"), min(col("eventTime")).as("minTs"),
@@ -1417,25 +1487,33 @@ object ColdTier {
   private def attributeColumns(df: DataFrame): Seq[String] =
     df.columns.filterNot(coreColumns.contains).toSeq
 
+  /** The file half shared by [[writeSegment]] and [[sealLocal]]: project
+   * the segment layout (segmentId first, then the core and attribute
+   * columns) and write `segment-<id>`, one file per partition of
+   * `salted`. */
+  private def writeSegmentFiles(salted: DataFrame, dir: String,
+      segmentId: Long): String = {
+    val path = s"$dir/segment-$segmentId"
+    salted.select(lit(segmentId).as("segmentId") +:
+        (coreColumns.tail ++ attributeColumns(salted)).map(col): _*)
+      .write.option("maxRecordsPerFile", 4000000)
+      .mode("overwrite").parquet(path)
+    path
+  }
+
   private def writeSegment(vectors: DataFrame, dir: String,
       segmentId: Long): SegmentStats = {
     val spark = vectors.sparkSession
-    val path = s"$dir/segment-$segmentId"
     // BOUNDED files per segment (see sealManyStaged) — flush batches and
     // compaction outputs alike: the id-hash salt caps the file count at
     // [[SealFilesPerSegmentProp]] while keeping the write parallel and
     // the sealed segment scannable by that many tasks; huge compaction
     // outputs additionally split at maxRecordsPerFile
     val nSealFiles = sealFilesPerSegment
-    vectors.select(lit(segmentId).as("segmentId") +:
-        (coreColumns.tail ++ attributeColumns(vectors)).map(col): _*)
-      .repartition(nSealFiles,
-        pmod(xxhash64(col("id")), lit(nSealFiles.toLong)))
-      .write.option("maxRecordsPerFile", 4000000)
-      .mode("overwrite").parquet(path)
+    val path = writeSegmentFiles(vectors.repartition(nSealFiles,
+      pmod(xxhash64(col("id")), lit(nSealFiles.toLong))), dir, segmentId)
     val written = spark.read.parquet(path)
-    val dim = written.select(size(col("vec"))).first().getInt(0)
-    val meanUdaf = udaf(new VecMeanAggregator(dim),
+    val meanUdaf = udaf(VecMeanAggregator,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
     val agg = written.select(
       count(lit(1)), min(col("eventTime")), max(col("eventTime")),
@@ -1836,13 +1914,21 @@ object ColdTier {
 
   /** The flush commit predicate: the segment is in the live catalog, OR
    * a compaction/recluster already consumed it (the id would otherwise
-   * look never-flushed after the merge removed its catalog row). */
+   * look never-flushed after the merge removed its catalog row).
+   *
+   * A catalog row is only ever appended after its `segment-<id>` files
+   * were written, and a cataloged segment's dir is only deleted after
+   * the segment left the catalog (evict) or was marked consumed
+   * (compact / recluster, then [[gc]]). So a missing segment dir with no
+   * consumed marker answers false from two metadata calls — the fresh
+   * batch id of every streaming flush — without reading the catalog. */
   def catalogContains(spark: SparkSession, dir: String,
       segmentId: Long): Boolean = {
     heal(spark, dir)
     val p = new Path(statsPath(dir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (fs.exists(p) && catalog(spark, dir).exists(_.segmentId == segmentId)) ||
+    (fs.exists(new Path(dir, s"segment-$segmentId")) && fs.exists(p) &&
+      catalog(spark, dir).exists(_.segmentId == segmentId)) ||
       consumedContains(spark, dir, segmentId)
   }
 

@@ -56,7 +56,8 @@ class BoundedCollectSpec extends AnyFunSuite {
       "SegmentStats",  // catalog read: one row per segment
       "statsPath",     // catalog read
       "_segments",     // snapshot-pinned catalog read
-      "catalog-bounded" // annotated: result size = O(segments), not O(rows)
+      "catalog-bounded", // annotated: result size = O(segments), not O(rows)
+      "trigger-bounded"  // annotated: one streaming trigger's output
     )
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(root).iterator().asScala

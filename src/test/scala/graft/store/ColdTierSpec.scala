@@ -2650,4 +2650,29 @@ class ColdTierSpec extends AnyFunSuite {
       assert(aligned(qi.toLong) == want, s"aligned query $qi")
     }
   }
+
+  test("sealDeletes redoes a batch whose parquet write crashed inside the log: the half-written dir is not a commit") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("coldtier-delcrash").toString
+    ColdTier.seal(mkVecs(50, 4, 7L, 0L), dir, 1L)
+    // what a driver crash mid-write left behind when the log was written
+    // in place: the batch dir exists, holding only the job's _temporary
+    Files.createDirectories(
+      java.nio.file.Paths.get(dir, "deletes-log", "batch-7", "_temporary", "0"))
+    val dead = Seq((3L, 100L), (11L, 100L))
+    val redone = ColdTier.sealDeletes(dead.toDF("id", "ts"), dir, 7L)
+    assert(redone, "a crashed write must be redone, not taken for a commit")
+    val logged = ColdTier.tombstones(spark, dir).get
+      .as[(Long, Long)].collect().toSet
+    assert(dead.toSet.subsetOf(logged), s"tombstones: $logged")
+    // the committed batch is now final: a replay is a no-op
+    assert(!ColdTier.sealDeletes(Seq((5L, 100L)).toDF("id", "ts"), dir, 7L))
+    val queries = Seq((1L, Array.fill(4)(0f), 1000L, 100000L))
+      .toDF("qid", "qv", "qtime", "ttl")
+    val ids = ColdTier.search(spark, dir, queries, 50, Metric.L2,
+        firstWaveFraction = 1.0, terminationFactor = 1.0)
+      .collect().map(_.getLong(2)).toSet
+    assert(ids.size == 48 && !ids.contains(3L) && !ids.contains(11L),
+      s"deleted ids must stay shadowed in cold search: $ids")
+  }
 }

@@ -494,21 +494,16 @@ class StreamingSpec extends AnyFunSuite {
     val cold = java.nio.file.Files.createTempDirectory("graft-tapped").toString
     val input = MemoryStream[PartialResult]
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
+    val lifecycle = new VectorStreamJob.Lifecycle(spark, cold, Metric.L2)
     val q = VectorStreamJob.mergePartialsStatefulTapped(input.toDS(), k = 3)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.Dataset[MergedRow], bid: Long) =>
-        val df = b.toDF().persist()
-        try {
-          df.where(org.apache.spark.sql.functions.col("res").isNotNull)
-            .select("res.*").collect().foreach(r => results.synchronized {
-              results += ((r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))) })
-          val pass = df.where(
-            org.apache.spark.sql.functions.col("pass").isNotNull).select("pass.*")
-          VectorStreamJob.flushBatch(pass, cold, bid, Metric.L2)
-          graft.store.ColdTier.sealDeletes(
-            VectorStreamJob.deleteLogRows(pass), cold, bid)
-        } finally df.unpersist()
-        ()
+        // run()'s composed trigger: one collect, then the driver-side
+        // sink rows and lifecycle
+        val rows = b.collect()
+        rows.flatMap(r => Option(r.res)).foreach(r => results.synchronized {
+          results += ((r.qid, r.rn, r.id, r.dist)) })
+        lifecycle(rows.flatMap(r => Option(r.pass)).toSeq, bid)
       }.start()
     val now = System.currentTimeMillis()
     // trigger 1: partition 0 of a 2-way fan-out reports, AND partition 0
@@ -550,6 +545,124 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getLong(2)).toSet
     assert(coldIds == Set(11L, 12L),
       s"tombstoned id 10 must be shadowed: $coldIds")
+  }
+
+  /** Spark jobs per streaming batch id, read from the listener bus.
+   * [[settle]] runs a marker job and waits for it: the bus delivers
+   * events in order, so by then every earlier job has been counted. */
+  private final class BatchJobs extends org.apache.spark.scheduler.SparkListener {
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
+    @volatile private var markers = 0
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        if (p.getProperty("graft.test.marker") != null) markers += 1
+        else Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+          perBatch.merge(b.toLong, 1, (x, y) => x + y))
+      }
+    def apply(batchId: Long): Int =
+      Option(perBatch.get(batchId)).map(_.intValue).getOrElse(0)
+    def settle(): Unit = {
+      val want = markers + 1
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.currentTimeMillis() + 60000L
+      while (markers < want && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(markers >= want, "listener bus did not deliver the marker job")
+    }
+  }
+
+  test("composed trigger job budget: a trigger with inserts, deletes and a query runs 2 Spark jobs, a sealing trigger at most 4") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val cold = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val input = MemoryStream[StreamEvent]
+    // batch id -> the merged rows its sink saw (collected driver-side)
+    val answered = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
+    val q = VectorStreamJob.run(input.toDS(), SimplePartitioner(2), k = 5,
+      Metric.L2, maxTtl = 1000L, crossBatchMerge = true,
+      coldDir = Some(cold)) { merged =>
+      val bid = spark.sparkContext.getLocalProperty("streaming.sql.batchId")
+      val ids = merged.collect().sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
+      if (ids.nonEmpty) answered.put(bid.toLong, ids)
+    }
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      // trigger A: epoch 0, two deletes and a query — nothing evicts
+      input.addData((0 until 20).map(i =>
+        StreamEvent("i", i.toLong, vec(i), i.toLong, 0L, 0)) ++ Seq(
+        StreamEvent("d", 3L, null, 20L, 0L, 0),
+        StreamEvent("d", 4L, null, 21L, 0L, 0),
+        StreamEvent("q", 9000L, vec(5), 22L, 1000L, 5)): _*)
+      q.processAllAvailable()
+      // triggers B and C: each epoch evicts the previous one (the first
+      // seal creates the catalog, the second appends to it); deletes ride
+      // along in both
+      Seq(1, 2).foreach { e =>
+        input.addData((0 until 20).map(i => StreamEvent("i", 100L * e + i,
+            vec(100 * e + i), 5000L * e + i, 0L, 0)) :+
+          StreamEvent("d", 100L * (e - 1) + 7, null, 5000L * e + 30, 0L, 0): _*)
+        q.processAllAvailable()
+      }
+      jobs.settle()
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+    import scala.jdk.CollectionConverters._
+    val truth = (0 until 20).filterNot(i => i == 3 || i == 4)
+      .map(i => (i.toLong, Distances.l2(vec(5), vec(i))))
+      .sortBy { case (id, d) => (d, id) }.take(5).map(_._1)
+    assert(answered.values.asScala.toSeq == Seq(truth),
+      s"one trigger answers the query exactly: $answered")
+    val queryBatch = answered.keySet.asScala.head
+    assert(jobs(queryBatch) == 2,
+      s"collect + delete-log write, nothing else: ${jobs.perBatch}")
+    val sealed_ = graft.store.ColdTier.catalog(spark, cold).map(_.segmentId)
+    assert(sealed_.length == 2, s"two sealing triggers: ${sealed_.toList}")
+    sealed_.foreach(b => assert(jobs(b) <= 4,
+      s"sealing trigger $b: collect + segment write + catalog append + " +
+        s"delete log at most: ${jobs.perBatch}"))
+  }
+
+  test("a streaming-sealed segment carries the stats seal(DataFrame) computes over the same rows, and every row lies within its radius") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val cold = java.nio.file.Files.createTempDirectory("graft-stats").toString
+    val input = MemoryStream[StreamEvent]
+    // the per-batch merge topology: its trigger collects the partials once
+    val q = VectorStreamJob.run(input.toDS(), SimplePartitioner(2), k = 5,
+      Metric.L2, maxTtl = 1000L, coldDir = Some(cold)) { merged => merged.collect(); () }
+    input.addData((0 until 60).map(i => StreamEvent("i", i.toLong,
+      vec(i, dim = 16), 10L + i, 0L, 0, (i % 3).toString)): _*)
+    q.processAllAvailable()
+    // each partition's eviction clock advances on its own inserts
+    input.addData((0 until 10).map(i => StreamEvent("i", 1000L + i,
+      vec(1000 + i, dim = 16), 9000L + i, 0L, 0)): _*)
+    q.processAllAvailable()
+    q.stop()
+    val seg = graft.store.ColdTier.catalog(spark, cold).toSeq match {
+      case Seq(s) => s
+      case other => fail(s"expected one sealed segment: ${other.toList}")
+    }
+    val rows = spark.read.parquet(seg.path)
+      .select("id", "vec", "eventTime", "attr")
+    val ref = graft.store.ColdTier.seal(rows,
+      java.nio.file.Files.createTempDirectory("graft-stats-ref").toString,
+      seg.segmentId)
+    assert((seg.count, seg.minTs, seg.maxTs) == ((60L, 10L, 69L)))
+    assert((seg.count, seg.minTs, seg.maxTs) == ((ref.count, ref.minTs, ref.maxTs)))
+    assert(seg.centroid.length == 16 && ref.centroid.length == 16)
+    seg.centroid.zip(ref.centroid).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-6, s"centroid $a vs $b") }
+    assert(math.abs(seg.radius - ref.radius) <= 1e-6,
+      s"radius ${seg.radius} vs ${ref.radius}")
+    rows.select("vec").as[Array[Float]].collect().foreach { v =>
+      assert(math.sqrt(Distances.l2(v, seg.centroid)) <= seg.radius) }
   }
 
   test("full operating mode in ONE job: crossBatchMerge + hot->cold flush + compaction, results bit-equal to exact truth") {
@@ -772,16 +885,14 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("flushBatch replay is idempotent and converges: a re-executed micro-batch neither duplicates rows nor loses the sidecar") {
-    import spark.implicits._
     val cold = java.nio.file.Files.createTempDirectory("graft-replay").toString
     val pass = Seq(PartialResult(-1L, 0, FlushSent, Array(10L, 11L),
         Array(10.0, 11.0), 100L, 0L, Array(vec(10), vec(11))))
-      .toDS().toDF()
     // first execution seals; the foreachBatch REPLAY of the same batch id
     // (restart-from-checkpoint semantics) must see the committed catalog
     // row and no-op
-    assert(VectorStreamJob.flushBatch(pass, cold, 3L, Metric.L2))
-    assert(!VectorStreamJob.flushBatch(pass, cold, 3L, Metric.L2))
+    assert(VectorStreamJob.flushBatch(spark, pass, cold, 3L, Metric.L2))
+    assert(!VectorStreamJob.flushBatch(spark, pass, cold, 3L, Metric.L2))
     val cat = graft.store.ColdTier.catalog(spark, cold)
     assert(cat.map(_.count).sum == 2L, s"replay duplicated rows: ${cat.toList}")
     // crash window: catalog row committed but the sidecar seal never ran
@@ -789,11 +900,10 @@ class StreamingSpec extends AnyFunSuite {
     // indexAtFlush=true must CONVERGE by finishing the sidecar
     val pass2 = Seq(PartialResult(-1L, 0, FlushSent, Array(20L, 21L),
         Array(20.0, 21.0), 200L, 0L, Array(vec(20), vec(21))))
-      .toDS().toDF()
-    assert(VectorStreamJob.flushBatch(pass2, cold, 4L, Metric.L2,
+    assert(VectorStreamJob.flushBatch(spark, pass2, cold, 4L, Metric.L2,
       indexAtFlush = false))
     assert(!graft.store.ColdTier.indexSealed(spark, cold, 4L))
-    assert(!VectorStreamJob.flushBatch(pass2, cold, 4L, Metric.L2,
+    assert(!VectorStreamJob.flushBatch(spark, pass2, cold, 4L, Metric.L2,
       indexAtFlush = true))
     assert(graft.store.ColdTier.indexSealed(spark, cold, 4L),
       "replay must finish the missing sidecar (crash-repair convergence)")
