@@ -11,11 +11,19 @@ for every end-to-end metric of BENCHMARK.json, each side's median and
 quartiles, the change/parent ratio of the medians, and how many pairs the
 change won (ties count for neither side). A metric passes the gain rule
 when the change wins at least nine tenths of the pairs and its median
-beats the parent's by more than the parent's interquartile range; it is
-within bound when its median is no worse than the parent's by more than
-the bound BENCHMARK.json declares. Every run's raw result is appended to
-`--out` as one JSON line. Exit status: 0, or 1 when a run failed or
-answered wrong, or when a `--claim` metric misses the gain rule.
+beats the parent's by more than the parent's interquartile range.
+
+The bound column reads `yes` when the change's median is no worse than
+the parent's by more than the bound BENCHMARK.json declares, `NO` when it
+is worse by more, and `unresolved` when its median reads worse and the
+parent's own spread (IQR / median) is wider than the bound: the runs
+cannot tell a slowdown from noise then. (A change whose every run beats
+every parent run reads better, so it never lands there.) Each side's
+failure share (failed / attempted operations, summed over its runs) is
+printed too, and flagged when the change's is larger. Every run's raw
+result is appended to `--out` as one JSON line. Exit status: 0, or 1 when
+a run failed or answered wrong, when a metric is out of bound (`NO`), or
+when a `--claim` metric misses the gain rule.
 """
 import argparse
 import json
@@ -53,6 +61,15 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def bound_verdict(worse, spread, bound):
+    """`worse`: how much worse the change's median reads, as a fraction of
+    the parent's (negative when better); `spread`: the parent's IQR over
+    its median."""
+    if worse <= 0 or (worse <= bound and spread <= bound):
+        return "yes"
+    return "unresolved" if spread > bound else "NO"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True, help="parent checkout")
@@ -73,6 +90,7 @@ def main():
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     vals = {s: {m: [] for m in spec} for s in sides}
     paired = {m: [] for m in spec}
+    ops = {s: [0, 0] for s in sides}  # failed, attempted
     bad = 0
     for i, seed in enumerate(seeds(a.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
@@ -83,6 +101,8 @@ def main():
             got[side] = res
             ok = res.get("correct") is True and res.get("exit") == 0
             bad += not ok
+            ops[side][0] += int(res.get("failed") or 0)
+            ops[side][1] += int(res.get("attempted") or 0)
             if a.out:
                 with open(a.out, "a") as f:
                     f.write(json.dumps({"side": side, "seed": seed,
@@ -99,10 +119,15 @@ def main():
                 paired[m].append((v["parent"], v["change"]))
 
     claim_ok = True
+    out_of_bound = False
     print(f"{a.workload}: {len(seeds(a.seeds))} pairs, seeds {a.seeds}, "
           f"{a.seconds:g} s runs, {bad} failed or wrong runs")
+    share = {s: ops[s][0] / ops[s][1] if ops[s][1] else 0.0 for s in sides}
+    print("failed/attempted: " + ", ".join(
+        f"{s} {ops[s][0]}/{ops[s][1]} ({share[s]:.4g})" for s in sides) +
+          ("  CHANGE FAILS MORE" if share["change"] > share["parent"] else ""))
     print(f"{'metric':18s} {'parent q1/med/q3':>30s} {'change q1/med/q3':>30s} "
-          f"{'ratio':>7s} {'wins':>6s}  gain-rule  in-bound")
+          f"{'ratio':>7s} {'wins':>6s}  gain-rule  bound")
     for m, d in spec.items():
         if not vals["parent"][m] or not vals["change"][m]:
             print(f"{m:18s} missing")
@@ -115,15 +140,17 @@ def main():
         diff = (cq[1] - pq[1]) if higher else (pq[1] - cq[1])
         gain = n > 0 and wins >= 0.9 * n and diff > pq[2] - pq[0]
         worse = -diff / pq[1] if pq[1] else 0.0
-        in_bound = worse <= d["bound"]
+        spread = (pq[2] - pq[0]) / pq[1] if pq[1] else 0.0
+        verdict = bound_verdict(worse, spread, d["bound"])
+        out_of_bound |= verdict == "NO"
         if m in a.claim and not gain:
             claim_ok = False
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
         fmt = lambda q: f"{q[0]:.4g}/{q[1]:.4g}/{q[2]:.4g}"
         print(f"{m:18s} {fmt(pq):>30s} {fmt(cq):>30s} {ratio:7.3f} "
               f"{wins:>3d}/{n:<2d}  {'holds' if gain else '-':9s}  "
-              f"{'yes' if in_bound else 'NO'}")
-    return 0 if bad == 0 and claim_ok else 1
+              f"{verdict}")
+    return 0 if bad == 0 and claim_ok and not out_of_bound else 1
 
 
 if __name__ == "__main__":

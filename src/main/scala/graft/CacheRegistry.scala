@@ -15,8 +15,8 @@ import org.apache.spark.sql.DataFrame
  * most recent registrations of that key. With keep = 2, two concurrent
  * invocations on the same key never release each other's still-in-use
  * blocks (the previous single-slot-per-key scheme did, silently forcing
- * mid-consumption recomputes), while repeated invocations (bench
- * warmup + reps) stay bounded at two generations of blocks.
+ * mid-consumption recomputes), while repeated invocations (warmup +
+ * reps) stay bounded at two generations of blocks.
  */
 object CacheRegistry {
   private val entries =
@@ -30,16 +30,6 @@ object CacheRegistry {
       val (old, recent) = all.splitAt(math.max(0, all.length - keep))
       entries(key) = recent
       old
-    }
-    evicted.foreach(_.foreach(_.unpersist()))
-  }
-
-  /** Test hook: drop and unpersist everything. */
-  def clear(): Unit = {
-    val evicted = entries.synchronized {
-      val all = entries.values.flatten.toSeq
-      entries.clear()
-      all
     }
     evicted.foreach(_.foreach(_.unpersist()))
   }

@@ -137,6 +137,7 @@ object KnnIndex {
       snapshot: Option[Long] = None, inWalk: Boolean = false): Unit = {
     require(timeColumn.forall(t => !filterColumns(t)),
       s"timeColumn $timeColumn must not also be a filter column")
+    require(probeSegments >= 1, s"probeSegments $probeSegments < 1")
     reg.put(norm(corpusPath),
       Registration(coldDir, idCol, vecCol, metric, efSearch, probeSegments,
         shortlist, filterColumns, filterOverfetch, timeColumn, snapshot,
@@ -148,7 +149,7 @@ object KnnIndex {
 
   /** Install [[KnnProbeRewrite]] on an ALREADY-BUILT session (idempotent).
    * `withExtensions` only applies at session construction — a session
-   * obtained from a shared `getOrCreate()` (the Verify/bench harness, a
+   * obtained from a shared `getOrCreate()` (Verify, perfbench, a
    * shared test JVM) never saw [[graft.GraftExtensions]], so the rule
    * rides `experimental.extraOptimizations` instead (a post-optimizer
    * batch; the matched Limit/Sort/Project shape is stable there). A

@@ -18,8 +18,8 @@ import graft.partitioners._
  * top-k), so the SQL twin is exact, not just row-count-equal.
  *
  * HNSW quality on the same routing is enforced by AnnRecallSpec
- * (recall >= 0.9 vs these exact entries) and benched in Bench
- * (bench_ann_ivf_hnsw); the hash gate requires the deterministic exact
+ * (recall >= 0.9 vs these exact entries) and benchmarked by perfbench's
+ * batch_curate workload; the hash gate requires the deterministic exact
  * store (reference's own oracle is recall on exact ground truth,
  * StreamSearchJobTest.java:36-130).
  */

@@ -124,7 +124,7 @@ object VectorQueries {
   /** Planted near-duplicates: every 20th vector gets a deterministic
    * small-angle copy (the fixture corpus is near-uniform on the unit
    * sphere — min natural pair distance ~0.49 — so the operator's target
-   * pairs are derived from the same table, like Bench's derived corpus). */
+   * pairs are derived from the same table, like the tools' derived corpus). */
   val NearDupNoise = 0.01f
   val NearDupPlantMod = 20
   val NearDupPlantBase = 1000000L

@@ -1632,27 +1632,58 @@ object ColdTier {
     } finally in.close()
   } catch { case _: java.io.IOException => None }
 
+  /** Create `path` holding `token`; throws an IOException when it
+   * already exists. Atomic on HDFS (create-if-absent) and, on the local
+   * FS, through an O_EXCL create: Hadoop's local create checks existence
+   * and then truncates, so two racers could both "create" the file. */
+  private def createOwned(fs: org.apache.hadoop.fs.FileSystem, path: Path,
+      token: String): Unit = {
+    val out = fs match {
+      case l: org.apache.hadoop.fs.LocalFileSystem =>
+        fs.mkdirs(path.getParent) // as fs.create would
+        java.nio.file.Files.newOutputStream(l.pathToFile(path).toPath,
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+      case _ => fs.create(path, false)
+    }
+    try {
+      try out.write(token.getBytes("UTF-8")) finally out.close()
+    } catch {
+      case e: java.io.IOException =>
+        // the create succeeded but the token write/close failed: an
+        // ownerless fresh file would stall every committer for the
+        // full staleMs window — remove our debris before surfacing
+        try fs.delete(path, false)
+        catch { case _: java.io.IOException => () }
+        throw e
+    }
+  }
+
   /** Serialize catalog commits behind an OWNED lock FILE. The tier
    * filesystem is REQUIRED to provide atomic `create(overwrite=false)`
-   * (HDFS-class semantics — the 100-TB deployment target); on the local
-   * FS that create is check-then-create, so two simultaneous creators
-   * can both "win" — the owner-token verification below demotes that to
-   * a single winner (last token written survives the read-back), and
-   * the version CAS stays the read-modify-write backstop.
+   * (HDFS-class semantics — the 100-TB deployment target); the local FS
+   * gets it through [[createOwned]]. The version CAS stays the
+   * read-modify-write backstop.
    *
    * Ownership protocol: every acquire writes a unique token into the
    * lock and re-reads it — only the writer whose token SURVIVED holds
-   * the lock. A lock whose mtime is older than `staleMs` is presumed
-   * crashed; breaking it re-reads token+mtime immediately before the
-   * delete and only deletes the exact incarnation observed stale — two
-   * racing breakers cannot each delete-then-create (the loser sees the
-   * winner's FRESH token and goes back to waiting, never deleting a
-   * live lock). Release likewise deletes only while the file still
-   * carries this holder's token. Held only for the short commit
-   * critical section, never across a mutation's Spark jobs; a live
-   * holder past `waitMs` fails the caller loudly rather than queueing
-   * forever. */
-  private def withCatalogLock[A](fs: org.apache.hadoop.fs.FileSystem,
+   * the lock (the backstop for a filesystem whose create is not
+   * atomic). A lock whose mtime is older than `staleMs` is presumed
+   * crashed. Breaking it takes a marker file named after the stale
+   * incarnation first (`_catalog.lock.break-<mtime>`, created
+   * exclusively),
+   * then re-reads token+mtime and deletes only the exact incarnation
+   * observed stale, then drops the marker. One breaker per stale
+   * incarnation: without the marker, a second breaker could pass the
+   * same re-read just before the first one's delete and then delete the
+   * fresh lock a new holder created meanwhile — two writers inside the
+   * critical section. A breaker that crashes while holding the marker
+   * leaves that stale lock unbreakable: committers then fail loudly
+   * after `waitMs` until an operator deletes the lock and the marker.
+   * Release deletes only while the file still carries this holder's
+   * token. Held only for the short commit critical section, never
+   * across a mutation's Spark jobs; a live holder past `waitMs` fails
+   * the caller loudly rather than queueing forever. */
+  private[store] def withCatalogLock[A](fs: org.apache.hadoop.fs.FileSystem,
       dir: String,
       // the commit critical section INCLUDES the catalog append's (tiny)
       // Spark job, so the wait budget must absorb job-queueing delay on
@@ -1669,18 +1700,7 @@ object ColdTier {
     var acquired = false
     while (!acquired) {
       try {
-        val out = fs.create(lock, false)
-        try {
-          try out.write(token.getBytes("UTF-8")) finally out.close()
-        } catch {
-          case e: java.io.IOException =>
-            // the create succeeded but the token write/close failed: an
-            // ownerless fresh lock would stall every committer for the
-            // full staleMs window — remove our debris before surfacing
-            try fs.delete(lock, false)
-            catch { case _: java.io.IOException => () }
-            throw e
-        }
+        createOwned(fs, lock, token)
         // read-back: on a non-atomic create both racers reach here, but
         // at most one token survives — the other observes a foreign
         // token and keeps waiting instead of double-holding
@@ -1694,23 +1714,34 @@ object ColdTier {
               readLockToken(fs, lock).map((_, st.getModificationTime))
             else None
           } catch { case _: java.io.FileNotFoundException => None }
-          observed match {
-            case Some((staleToken, staleMtime)) =>
+          val broke = observed.exists { case (staleToken, staleMtime) =>
+            // named after the incarnation's mtime, not its token: a
+            // crashed writer's token may be empty or not path-safe
+            val marker = new Path(s"$lock.break-$staleMtime")
+            val breaking =
+              try { createOwned(fs, marker, token); true }
+              catch { case _: java.io.IOException => false }
+            breaking && {
               // ownership-confirmed break: delete only the incarnation
               // observed stale — if the lock changed under us (another
               // breaker already broke and re-created it), leave it alone
-              val still = try {
-                val st = fs.getFileStatus(lock)
-                st.getModificationTime == staleMtime &&
-                  readLockToken(fs, lock).contains(staleToken)
-              } catch { case _: java.io.FileNotFoundException => false }
-              if (still) fs.delete(lock, false)
-            case None =>
-              if (System.currentTimeMillis() > deadline)
-                throw new ConcurrentCatalogWriteException(
-                  s"catalog writer lock $lock held past $waitMs ms — another " +
-                    "committer is active on this tier; retry when it finishes")
-              else Thread.sleep(50)
+              try {
+                val still = try {
+                  val st = fs.getFileStatus(lock)
+                  st.getModificationTime == staleMtime &&
+                    readLockToken(fs, lock).contains(staleToken)
+                } catch { case _: java.io.FileNotFoundException => false }
+                if (still) fs.delete(lock, false)
+                true
+              } finally fs.delete(marker, false)
+            }
+          }
+          if (!broke) {
+            if (System.currentTimeMillis() > deadline)
+              throw new ConcurrentCatalogWriteException(
+                s"catalog writer lock $lock held past $waitMs ms — another " +
+                  "committer is active on this tier; retry when it finishes")
+            else Thread.sleep(50)
           }
       }
     }
@@ -2606,8 +2637,6 @@ object ColdTier {
     }
     /** Test hook: current entry count in this JVM. */
     private[store] def entryCount: Int = cache.size
-    /** Bench/test hook: drop everything (see sidecarCacheInvalidate). */
-    private[store] def invalidateAll(): Unit = cache.clear()
     /** Test hook: backing paths of all cached graphs in this JVM. */
     private[store] def cachedPaths: Set[String] =
       cache.keySet.map(_._1).toSet
@@ -2873,39 +2902,6 @@ object ColdTier {
    * (on a cluster, per-executor; local mode = the one JVM). */
   def sidecarCachePaths: Set[String] = SidecarCache.cachedPaths
 
-  /** Drop every cached sidecar graph in this JVM. NOT for serving use —
-   * the LRU exists precisely so graphs stay resident — but a benchmark
-   * that wants to attribute cold-load IO vs warm probe cost needs a
-   * deterministic cold start (the r9 artifact moved 6x between rounds
-   * purely on ambient cache state). */
-  def sidecarCacheInvalidate(): Unit = SidecarCache.invalidateAll()
-
-  /** Probe-path cold search (V9): per-query shortlist from each fresh
-   * segment's HNSW sidecar — loaded lazily executor-side, probed instead
-   * of scanned — then ONE exact re-rank over the shortlisted (query, id)
-   * pairs against the raw segments. Fresh segments without a sidecar fall
-   * back to the exact scan shape for their rows, so a tier mid-way through
-   * index sealing still answers. The shortlist is deterministic (the seal
-   * builds a deterministic graph), which is what lets the driver's oracle
-   * replay the re-rank over a materialized candidate aux — the established
-   * approximate-op recipe. Approximate by construction (graph recall);
-   * exact re-rank restores metric truth over the candidate set.
-   *
-   * Scale shape: the probe shuffles only (segmentId, query) rows — never
-   * vector rows; per-group work is |queries probing that segment| ·
-   * O(ef·log n); the re-rank reads raw vectors only for candidate ids via
-   * broadcast joins. Driver work stays catalog-bounded. */
-  def searchIndexed(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int, metric: Metric = Metric.L2, shortlist: Int = 50,
-      efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
-      routeEf: Int = 0): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist < k $k")
-    rerankExact(spark, dir,
-      probeCandidates(spark, dir, queries, shortlist, metric, efSearch,
-        probeSegments, routeEf),
-      queries, k, metric)
-  }
-
   /** Graph router over segment centroids — the IVF_HNSW coarse-quantizer
    * shape (the Faiss "IVF…_HNSW…" index family): when the catalog holds
    * enough segments that the per-query linear nearest-centroid sort
@@ -3024,26 +3020,6 @@ object ColdTier {
     }
   }
 
-  /** The probe half of [[searchIndexed]]: distinct (qid, id) shortlist
-   * candidates across fresh segments (sidecar probe, or exact scan
-   * fallback for unindexed segments). Public so gated entries can
-   * materialize the candidate set as an oracle aux.
-   *
-   * @param probeSegments per-query cap on how many INDEXED segments are
-   *        probed — the nearest by centroid distance (ties by segment
-   *        order), the IVF coarse-quantizer step at segment granularity.
-   *        When segments are sealed along vector-space structure (e.g.
-   *        one per k-means cell), probes/query stay CONSTANT as the
-   *        corpus grows — the property that lets the sidecar path beat a
-   *        linear scan at any scale. Default probes every fresh segment
-   *        (exhaustive — the lossless-replay entries rely on it);
-   *        unindexed segments are always scanned exactly.
-   * @param routeEf when > 0, route through a [[CentroidRouter]] graph
-   *        walk at this ef instead of the linear centroid sort (the
-   *        IVF_HNSW quantizer — routing cost O(ef·log S) per query
-   *        instead of O(S); routing becomes approximate, window
-   *        semantics unchanged). Only meaningful with a probeSegments
-   *        cap. */
   /** [[search]]'s per-query wave-planning kernel, at MODULE level for
    * the same static-lambda reason as [[routeToShards]]. */
   private def planWaves(qid: Long, qv: Array[Float], qtime: Long,
@@ -3190,6 +3166,35 @@ object ColdTier {
     }
   }
 
+  /** The probe half of the indexed cold search: distinct (qid, id)
+   * shortlist candidates across fresh segments (sidecar probe, or exact
+   * scan fallback for unindexed segments). Public so gated entries can
+   * materialize the candidate set as an oracle aux. Compose with
+   * [[rerankExact]] for exact distances — the probe-then-exact-verify
+   * shape: the shortlist is deterministic (the seal builds a
+   * deterministic graph) and approximate by graph recall, the re-rank
+   * restores metric truth over it. The probe shuffles only (segment,
+   * query) rows, never vector rows. Pass `shortlist >= k` of the
+   * re-rank. A filter-OBLIVIOUS probe under a per-query `filterColumn`
+   * should over-fetch (`shortlist × overfetch`), since the re-rank drops
+   * non-matching candidates; the in-walk shapes need no over-fetch (the
+   * walk's ef widening replaces it).
+   *
+   * @param probeSegments per-query cap (>= 1) on how many INDEXED
+   *        segments are probed — the nearest by centroid distance (ties
+   *        by segment order), the IVF coarse-quantizer step at segment
+   *        granularity. When segments are sealed along vector-space
+   *        structure (e.g. one per k-means cell), probes/query stay
+   *        CONSTANT as the corpus grows — the property that lets the
+   *        sidecar path beat a linear scan at any scale. Default probes
+   *        every fresh segment (exhaustive — the lossless-replay entries
+   *        rely on it); unindexed segments are always scanned exactly.
+   * @param routeEf when > 0, route through a [[CentroidRouter]] graph
+   *        walk at this ef instead of the linear centroid sort (the
+   *        IVF_HNSW quantizer — routing cost O(ef·log S) per query
+   *        instead of O(S); routing becomes approximate, window
+   *        semantics unchanged). Only meaningful with a probeSegments
+   *        cap. */
   def probeCandidates(spark: SparkSession, dir: String, queries: DataFrame,
       shortlist: Int, metric: Metric = Metric.L2,
       efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
@@ -3251,6 +3256,8 @@ object ColdTier {
       // segment files and their sidecars alive)
       snapshot: Option[Long] = None): DataFrame = {
     import spark.implicits._
+    require(probeSegments >= 1,
+      s"probeCandidates: probeSegments $probeSegments < 1")
     require((inWalkLiterals.isEmpty && inWalkRanges.isEmpty) ||
         filterColumn.isEmpty,
       "probeCandidates: literal in-walk filtering and per-query " +
@@ -3572,14 +3579,15 @@ object ColdTier {
    * [[probeCandidates]], but keep the graph's own distances and merge
    * top-k per query directly — ZERO corpus IO after the probe (the
    * reference never re-reads an SST for distances its index search
-   * already computed; [[searchIndexed]]'s exact re-rank exists for the
-   * bit-exact oracle gates and re-scans candidate vectors from parquet,
-   * which at corpus scale costs a tier-wide scan per query batch).
+   * already computed; [[rerankExact]] over [[probeCandidates]] exists
+   * for the bit-exact oracle gates and re-scans candidate vectors from
+   * parquet, which at corpus scale costs a tier-wide scan per query
+   * batch).
    * Distances use the graph kernel (l2Fast — not last-ulp equal to the
    * oracle kernel); freshness applies inside the graph search (per-entry
    * ts window). Tombstones are applied conservatively BY ID (a
    * deleted-then-reinserted id is suppressed here — use
-   * [[searchIndexed]] where versioned exactness matters). Unindexed
+   * [[rerankExact]] where versioned exactness matters). Unindexed
    * fresh segments fall back to the exact scan, so results stay
    * complete across mixed layouts. */
   def searchIndexedFast(spark: SparkSession, dir: String, queries: DataFrame,
@@ -3594,6 +3602,8 @@ object ColdTier {
     // max(efSearch, 4*requested) inside the store, so asking each graph
     // for only k neighbors quarters the beam and costs real recall
     // (measured 0.755 vs 0.928 at k=10/shortlist=64 on the 6M tier)
+    require(probeSegments >= 1,
+      s"searchIndexedFast: probeSegments $probeSegments < 1")
     val probeK = math.max(k, shortlist)
     import spark.implicits._
     val q = queries.select(col("qid"), col("qv"), col("qtime"), col("ttl"))
@@ -3693,88 +3703,6 @@ object ColdTier {
         col("topk.dists").as("dist"))))
       .select(col("qid"), (col("pos") + 1).as("rn"),
         col("col.id").as("id"), col("col.dist").as("dist"))
-  }
-
-  /** Attribute-filtered sidecar search (the filtered-ANN surface on the
-   * indexed path, what the filtered SQL rewrite serves from): the graph
-   * shortlist is filter-OBLIVIOUS, so it is over-fetched by
-   * `overfetch`, then ONLY the shortlisted ids are hydrated — the
-   * attribute rides the candidate-bounded re-rank join — and re-ranked
-   * under `attribute === qfilter`. Candidate-bounded IO (never a tier
-   * scan); recall under selective labels is bounded by
-   * shortlist × overfetch vs the label's local density — size them to
-   * the label distribution. Queries must carry a `qfilter` column.
-   * With a [[sealAttrStats]] sidecar the routing step additionally
-   * drops non-admissible segments (and a capped probe then picks its
-   * nearest centroids among segments that can actually match — on a
-   * label-aligned tier the shortlist becomes label-dense, recovering
-   * the recall a filter-oblivious walk loses on selective labels). */
-  def searchIndexedFiltered(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int, filterColumn: String,
-      metric: Metric = Metric.L2, shortlist: Int = 50,
-      efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
-      overfetch: Int = 4, routeEf: Int = 0,
-      snapshot: Option[Long] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist < k $k")
-    rerankExact(spark, dir,
-      probeCandidates(spark, dir, queries,
-        shortlist * math.max(1, overfetch), metric, efSearch,
-        probeSegments, routeEf, filterColumn = Some(filterColumn),
-        snapshot = snapshot),
-      queries, k, metric, filterColumn = Some(filterColumn),
-      snapshot = snapshot)
-  }
-
-  /** IN-WALK attribute-filtered sidecar search — the principled fix for
-   * rare-label serving that [[searchIndexedFiltered]]'s over-fetch only
-   * approximates: the filter applies at candidate ACCEPTANCE inside each
-   * graph walk (traversal stays unfiltered, the ACORN shape — and the
-   * same accept-point the hot tier and the reference's hnswlib.h:135-146
-   * already filter at), so a 1%-selective label surfaces ~shortlist
-   * MATCHING candidates per probed segment directly. Requires sidecars
-   * sealed with `attrColumns = Seq(filterColumn)` ([[sealIndexes]]);
-   * shards sealed without the hashes fall back to the unfiltered walk
-   * (recall degrades toward the over-fetch path, correctness doesn't —
-   * the exact re-rank applies the true equality either way). No
-   * over-fetch knob: the walk's geometric ef widening replaces it. */
-  def searchIndexedInWalkFiltered(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int, filterColumn: String,
-      metric: Metric = Metric.L2, shortlist: Int = 50,
-      efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
-      routeEf: Int = 0, snapshot: Option[Long] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist < k $k")
-    rerankExact(spark, dir,
-      probeCandidates(spark, dir, queries, shortlist, metric, efSearch,
-        probeSegments, routeEf, filterColumn = Some(filterColumn),
-        inWalkFilter = true, snapshot = snapshot),
-      queries, k, metric, filterColumn = Some(filterColumn),
-      snapshot = snapshot)
-  }
-
-  /** Per-query IN in-walk sidecar search — the `qfin` shape of
-   * [[searchIndexedInWalkFiltered]], closing the filter matrix's last
-   * cell (literal IN/range and per-query equality walk in-walk already;
-   * per-query IN previously rode only the exact scan kernel's filterIn).
-   * Queries carry a `qfin` ARRAY column; the routed tuple carries the
-   * query's sorted canonical hash set, every walk admits candidates
-   * matching ANY value at acceptance ([[HnswStore.searchFilteredIn]] —
-   * traversal unfiltered, the ACORN shape; the reference's per-item
-   * filter point is hnswlib.h:135-146), and the exact re-rank applies
-   * the true null-rejecting IN. Same fallback contract as the equality
-   * sibling: payload-less shards walk unfiltered, correctness never
-   * depends on the sidecar generation. */
-  def searchIndexedInWalkFilteredIn(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int, filterColumn: String,
-      metric: Metric = Metric.L2, shortlist: Int = 50,
-      efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
-      routeEf: Int = 0, snapshot: Option[Long] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist < k $k")
-    rerankExact(spark, dir,
-      probeCandidates(spark, dir, queries, shortlist, metric, efSearch,
-        probeSegments, routeEf, filterColumn = Some(filterColumn),
-        inWalkFilterIn = true, snapshot = snapshot),
-      queries, k, metric, filterColumn = Some(filterColumn),
-      filterIn = true, snapshot = snapshot)
   }
 
   /** Serving-path instrumentation for [[searchIndexedLiteralFiltered]]:
@@ -4362,9 +4290,10 @@ object ColdTier {
   /** LITERAL-filtered sidecar search for plan-time rewrites — the
    * IN-list and multi-column-conjunction shapes (`WHERE label IN (...)
    * AND region = 'x' ORDER BY dist LIMIT k`) where every filter value
-   * is known at plan time. Same composition as
-   * [[searchIndexedFiltered]] (over-fetched filter-oblivious graph
-   * shortlist → candidate-bounded hydration under the predicate), but:
+   * is known at plan time. Same composition as a `filterColumn`
+   * [[probeCandidates]] + [[rerankExact]] (over-fetched filter-oblivious
+   * graph shortlist → candidate-bounded hydration under the predicate),
+   * but:
    *  - segment admission is MULTI-VALUE ([[admissibleIds]]): with a
    *    [[sealAttrStats]] sidecar, a segment survives when its [min,max]
    *    admits at least one IN value, and per-column sets INTERSECT
@@ -4501,8 +4430,8 @@ object ColdTier {
 
   /** Exact re-rank of a (qid, id) candidate set against the raw segments:
    * vector IO only for candidate ids, per-query freshness re-applied,
-   * oracle-kernel distances — shared by [[searchIndexed]] and the gated
-   * replay entries.
+   * oracle-kernel distances — the verify half after [[probeCandidates]],
+   * shared by the serving paths and the gated replay entries.
    *
    * @param filterColumn attribute-filtered re-rank (the filtered-ANN
    *        hydration step): queries must carry a `qfilter` column and

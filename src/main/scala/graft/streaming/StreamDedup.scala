@@ -14,10 +14,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * `hash % numShards` — state and lookups scale out with the shard count,
  * and a shard's state is two sorted parallel long arrays (16 bytes per
  * distinct document, NOT the text), merged once per batch (O(seen +
- * batch log batch)) with binary-search lookups. With the RocksDB state
- * store provider the per-batch state encode is incremental; the
- * in-memory provider round-trips O(seen) bytes — fine for the default
- * HDFS-backed store too, since entries are 16 bytes.
+ * batch log batch)) with binary-search lookups. A shard's whole
+ * `ShardSeen` is ONE state value, so every trigger re-encodes and
+ * re-commits it in full — O(seen) bytes per touched shard per batch,
+ * with the HDFS-backed and the RocksDB state store provider alike (a
+ * provider stores values, it cannot diff inside one). Entries are 16
+ * bytes, so that stays cheap up to millions of distinct documents per
+ * shard; past that, raise `numShards`.
  *
  * Determinism: same-batch duplicates are resolved in ascending doc_id
  * order (the keeper is the smallest id in the batch, matching the batch

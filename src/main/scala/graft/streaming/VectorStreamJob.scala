@@ -217,7 +217,7 @@ object VectorStreamJob {
     evs.foreach { r =>
       val ev = r.ev
       // the eviction clock advances on INSERTS only: queries and deletes
-      // can carry far-future sentinel times (Bench sends
+      // can carry far-future sentinel times (e.g. a "latest" query at
       // qtime = Long.MaxValue/8), and letting one of them advance maxTs
       // would evict the entire live set through the maxTs - maxTtl floor
       // (the AdaptiveRouter refit clock has the same guard)

@@ -46,7 +46,7 @@ class StagedRateSpec extends AnyFunSuite {
 class BoundedCollectSpec extends AnyFunSuite {
   test("no unbounded .collect() in any entry path") {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val harness = Set("Bench.scala", "Bench10x.scala", "Verify.scala")
+    val harness = Set("Verify.scala")
     val allow = Seq(
       "limit(",        // driver-capped sample
       ".agg(",         // aggregate result

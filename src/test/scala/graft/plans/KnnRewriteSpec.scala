@@ -999,4 +999,29 @@ class KnnRewriteSpec extends AnyFunSuite {
       }
     } finally KnnIndex.clear()
   }
+
+  test("probeSegments < 1 is rejected at registration and at the probe " +
+      "entry points") {
+    import spark.implicits._
+    val (corpusPath, coldDir, rows) = fixture()
+    val queries = Seq((0L, rows(3)._2, 10000L, 100000L))
+      .toDF("qid", "qv", "qtime", "ttl")
+    try {
+      for (bad <- Seq(0, -1)) {
+        intercept[IllegalArgumentException](
+          KnnIndex.register(corpusPath, coldDir, probeSegments = bad))
+        assert(KnnIndex.lookup(Seq(corpusPath)).isEmpty,
+          s"probeSegments = $bad must not register")
+        intercept[IllegalArgumentException](
+          ColdTier.probeCandidates(spark, coldDir, queries, 10,
+            probeSegments = bad))
+        intercept[IllegalArgumentException](
+          ColdTier.searchIndexedFast(spark, coldDir, queries, 5,
+            probeSegments = bad))
+      }
+      // the smallest valid cap probes one segment and still answers
+      assert(ColdTier.probeCandidates(spark, coldDir, queries, 10,
+        probeSegments = 1).count() > 0)
+    } finally KnnIndex.unregister(corpusPath)
+  }
 }

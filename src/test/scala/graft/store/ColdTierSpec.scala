@@ -1,7 +1,7 @@
 package graft.store
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.Metric
@@ -18,6 +18,16 @@ class ColdTierSpec extends AnyFunSuite {
     (0 until n).map(i => (tsBase + i, Array.fill(dim)(rnd.nextGaussian().toFloat),
       tsBase + i)).toDF("id", "vec", "eventTime")
   }
+
+  /** Unfiltered sidecar search: probe a `shortlist` per query, then
+   * re-rank the candidates exactly to `k`. */
+  private def probeRerank(dir: String, queries: DataFrame, k: Int,
+      shortlist: Int, efSearch: Int = 64,
+      probeSegments: Int = Int.MaxValue): DataFrame =
+    ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, queries, shortlist, Metric.L2,
+        efSearch, probeSegments),
+      queries, k, Metric.L2)
 
   test("seal/catalog/search: lossless skip (factor=1.0) equals brute force") {
     spark.sparkContext.setLogLevel("ERROR")
@@ -594,8 +604,7 @@ class ColdTierSpec extends AnyFunSuite {
       }
       hits.sum / hits.size
     }
-    def run() = ColdTier.searchIndexed(spark, dir, queries, 10, Metric.L2,
-        shortlist = 30, efSearch = 64)
+    def run() = probeRerank(dir, queries, 10, shortlist = 30, efSearch = 64)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
     val got = run()
@@ -771,8 +780,8 @@ class ColdTierSpec extends AnyFunSuite {
       "a routed candidate crossed into a far segment")
     // separation => the global top-10 lives in the query's own cluster,
     // so the cap-1 routed search must EQUAL exact brute force
-    val got = ColdTier.searchIndexed(spark, dir, queries, 10, Metric.L2,
-        shortlist = 30, efSearch = 64, probeSegments = 1)
+    val got = probeRerank(dir, queries, 10, shortlist = 30, efSearch = 64,
+        probeSegments = 1)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
     queries.collect().foreach { qr =>
@@ -828,8 +837,7 @@ class ColdTierSpec extends AnyFunSuite {
       }
       hits.sum / hits.size
     }
-    def run() = ColdTier.searchIndexed(spark, dir, queries, 10, Metric.L2,
-        shortlist = 30, efSearch = 64)
+    def run() = probeRerank(dir, queries, 10, shortlist = 30, efSearch = 64)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
     val got = run()
@@ -879,8 +887,7 @@ class ColdTierSpec extends AnyFunSuite {
     val queries = Seq((1L, Array.fill(8)(0f), 10100L, 1000L))
       .toDF("qid", "qv", "qtime", "ttl")
     assert(ColdTier.search(spark, dir, queries, 5, Metric.L2).count() == 5)
-    assert(ColdTier.searchIndexed(spark, dir, queries, 5, Metric.L2,
-      shortlist = 10).count() == 5)
+    assert(probeRerank(dir, queries, 5, shortlist = 10).count() == 5)
   }
 
   test("catalog falls back to .tmp when a crash interrupts evict's swap") {
@@ -947,8 +954,7 @@ class ColdTierSpec extends AnyFunSuite {
     assert(ColdTier.searchCompressed(spark, dir, queries, 10, model,
       shortlist = 30).count() == 20)
     // indexed probe path still answers through the carried sidecars
-    assert(ColdTier.searchIndexed(spark, dir, queries, 10, Metric.L2,
-      shortlist = 30).count() == 20)
+    assert(probeRerank(dir, queries, 10, shortlist = 30).count() == 20)
   }
 
   test("sidecar cache sweeps dead graphs on the next miss after compact+gc") {
@@ -965,8 +971,7 @@ class ColdTierSpec extends AnyFunSuite {
     val queries = Seq((1L, q, 100000L, 10000000L))
       .toDF("qid", "qv", "qtime", "ttl")
     // populate the executor-local cache with all four sidecars
-    ColdTier.searchIndexed(spark, dir, queries, 5, Metric.L2,
-      shortlist = 10).count()
+    probeRerank(dir, queries, 5, shortlist = 10).count()
     val oldPaths = (0 until 4).map(i => s"$dir/segment-$i-hnsw")
     assert(oldPaths.exists(p =>
         ColdTier.sidecarCachePaths.exists(_.endsWith(new java.io.File(p).getName))),
@@ -975,8 +980,7 @@ class ColdTierSpec extends AnyFunSuite {
     ColdTier.compact(spark, dir, targetRows = 200L)
     assert(oldPaths.forall(p => !new java.io.File(p).exists()))
     // next probe misses on the merged segments' sidecars -> sweep runs
-    ColdTier.searchIndexed(spark, dir, queries, 5, Metric.L2,
-      shortlist = 10).count()
+    probeRerank(dir, queries, 5, shortlist = 10).count()
     val dead = ColdTier.sidecarCachePaths.filterNot { p =>
       try new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1005,8 +1009,7 @@ class ColdTierSpec extends AnyFunSuite {
     def scanIds() = ColdTier.search(spark, dir, queries, 5, Metric.L2,
       firstWaveFraction = 1.0, terminationFactor = 1.0)
       .collect().sortBy(_.getInt(1)).map(_.getLong(2)).toList
-    def probeIds() = ColdTier.searchIndexed(spark, dir, queries, 5,
-      Metric.L2, shortlist = 30)
+    def probeIds() = probeRerank(dir, queries, 5, shortlist = 30)
       .collect().sortBy(_.getInt(1)).map(_.getLong(2)).toList
     assert(scanIds().head == target._1)
     assert(probeIds().head == target._1)
@@ -1071,8 +1074,7 @@ class ColdTierSpec extends AnyFunSuite {
         firstWaveFraction = 1.0, terminationFactor = 1.0)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toList
-    def probeRes() = ColdTier.searchIndexed(spark, dir, queries, 10,
-        Metric.L2, shortlist = 30)
+    def probeRes() = probeRerank(dir, queries, 10, shortlist = 30)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toList
     val wantScan = scanRes()
@@ -1418,9 +1420,10 @@ class ColdTierSpec extends AnyFunSuite {
     // effectively arbitrary — wrong-label shortlists come back empty
     // after the filter for ~3/4 of queries); WITH pruning the one
     // admissible segment is the label's own
-    val got = ColdTier.searchIndexedFiltered(spark, dir, queries, 10,
-        "label", Metric.L2, shortlist = 64, efSearch = 96,
-        probeSegments = 1)
+    val got = ColdTier.rerankExact(spark, dir,
+        ColdTier.probeCandidates(spark, dir, queries, 64 * 4, Metric.L2,
+          efSearch = 96, probeSegments = 1, filterColumn = Some("label")),
+        queries, 10, Metric.L2, filterColumn = Some("label"))
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rows) =>
         qid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
@@ -1485,8 +1488,10 @@ class ColdTierSpec extends AnyFunSuite {
     // (the two surfaces must never disagree on cross-typed labels)
     ColdTier.sealIndexes(spark, dir, 0L until nLabels.toLong, Metric.L2,
       m = 8, efConstruction = 64)
-    val gotIdx = ColdTier.searchIndexedFiltered(spark, dir, queries, 5,
-        "label", Metric.L2, shortlist = 64, efSearch = 96)
+    val gotIdx = ColdTier.rerankExact(spark, dir,
+        ColdTier.probeCandidates(spark, dir, queries, 64 * 4, Metric.L2,
+          efSearch = 96, filterColumn = Some("label")),
+        queries, 5, Metric.L2, filterColumn = Some("label"))
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rows) =>
         qid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
@@ -2091,17 +2096,19 @@ class ColdTierSpec extends AnyFunSuite {
     // the in-walk probe: shortlist is NOT inflated by 1/selectivity —
     // the walk's acceptance filter + geometric ef widening surface
     // matching candidates directly (the ACORN shape)
-    val inWalk = recallOf(ColdTier.searchIndexedInWalkFiltered(
-      spark, dir, qs, k, "label", Metric.L2, shortlist = 2 * k,
-      efSearch = 64))
+    val inWalk = recallOf(ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label"), inWalkFilter = true),
+      qs, k, Metric.L2, filterColumn = Some("label")))
     assert(inWalk >= 0.9, s"in-walk filtered recall $inWalk")
     // the filter-OBLIVIOUS probe at the same shortlist budget is the
     // path this replaces: ~0.25% of each segment's unfiltered top-20
     // matches a 1% label, so recall collapses (deterministic — the
     // graphs and data are seeded)
-    val oblivious = recallOf(ColdTier.searchIndexedFiltered(
-      spark, dir, qs, k, "label", Metric.L2, shortlist = 2 * k,
-      efSearch = 64, overfetch = 1))
+    val oblivious = recallOf(ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label")),
+      qs, k, Metric.L2, filterColumn = Some("label")))
     assert(oblivious < inWalk - 0.2,
       s"oblivious $oblivious vs in-walk $inWalk — the acceptance filter " +
         "should be the difference")
@@ -2111,12 +2118,16 @@ class ColdTierSpec extends AnyFunSuite {
     // the sidecar generation
     ColdTier.sealIndexes(spark, dir, 0L until 4L, Metric.L2,
       m = 16, efConstruction = 128)
-    val fallback = ColdTier.searchIndexedInWalkFiltered(
-      spark, dir, qs, k, "label", Metric.L2, shortlist = 2 * k,
-      efSearch = 64).collect().map(_.toSeq).toSet
-    val obliviousRows = ColdTier.searchIndexedFiltered(
-      spark, dir, qs, k, "label", Metric.L2, shortlist = 2 * k,
-      efSearch = 64, overfetch = 1).collect().map(_.toSeq).toSet
+    val fallback = ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label"), inWalkFilter = true),
+      qs, k, Metric.L2, filterColumn = Some("label"))
+      .collect().map(_.toSeq).toSet
+    val obliviousRows = ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label")),
+      qs, k, Metric.L2, filterColumn = Some("label"))
+      .collect().map(_.toSeq).toSet
     assert(fallback == obliviousRows,
       "v1 fallback must equal the filter-oblivious composition exactly")
   }
@@ -2340,6 +2351,45 @@ class ColdTierSpec extends AnyFunSuite {
     assert(!lock.exists(), "a stale foreign lock is broken, then released")
   }
 
+  test("writer lock mutual exclusion: 8 threads racing to break one stale lock never share the critical section, and none times out") {
+    // without an exclusive create and one breaker per stale incarnation,
+    // a breaker that re-read the stale lock just before another
+    // breaker's delete could delete the fresh lock a new holder created,
+    // and two racing local-FS creators could both "win" or orphan the
+    // lock — two writers inside, or every committer stalled to waitMs
+    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
+      new org.apache.hadoop.conf.Configuration())
+    for (round <- 0 until 20) {
+      val dir = Files.createTempDirectory("coldtier-lockmutex").toString
+      val lock = new java.io.File(dir, "_catalog.lock")
+      Files.write(lock.toPath, "crashed-writer".getBytes("UTF-8"))
+      assert(lock.setLastModified(System.currentTimeMillis() - 600000L))
+      val inside = new java.util.concurrent.atomic.AtomicInteger()
+      val maxInside = new java.util.concurrent.atomic.AtomicInteger()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val futures = (0 until 8).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = {
+              start.await()
+              ColdTier.withCatalogLock(fs, dir, waitMs = 10000L) {
+                maxInside.accumulateAndGet(inside.incrementAndGet(), math.max)
+                Thread.sleep(1)
+                inside.decrementAndGet()
+              }
+            }
+          })
+        }
+        start.countDown()
+        futures.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdownNow()
+      assert(maxInside.get() == 1,
+        s"round $round: ${maxInside.get()} writers inside the lock at once")
+      assert(!lock.exists(), s"round $round: the last holder releases")
+    }
+  }
+
   test("filterIn: the IN-list cold kernel equals the brute-force IN twin across waves, with per-value attr-stats admission") {
     import spark.implicits._
     val dir = Files.createTempDirectory("coldtier-in").toString
@@ -2413,8 +2463,11 @@ class ColdTierSpec extends AnyFunSuite {
       (qi.toLong, qv, Long.MaxValue / 2, Long.MaxValue / 2,
         setOf(qi).toArray)
     }.toDF("qid", "qv", "qtime", "ttl", "qfin")
-    val got = ColdTier.searchIndexedInWalkFilteredIn(spark, dir, qs, k,
-      "label", Metric.L2, shortlist = 2 * k, efSearch = 64).collect()
+    val got = ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label"), inWalkFilterIn = true),
+      qs, k, Metric.L2, filterColumn = Some("label"), filterIn = true)
+      .collect()
     // the exact re-rank applies the true IN: every row satisfies it
     assert(got.nonEmpty)
     got.foreach { r =>
@@ -2441,8 +2494,10 @@ class ColdTierSpec extends AnyFunSuite {
       (101L, rows(18)._2, Long.MaxValue / 2, Long.MaxValue / 2,
         Array[java.lang.Long](null)))
       .toDF("qid", "qv", "qtime", "ttl", "qfin")
-    assert(ColdTier.searchIndexedInWalkFilteredIn(spark, dir, vac, k,
-      "label", Metric.L2, shortlist = 2 * k, efSearch = 64)
+    assert(ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, vac, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label"), inWalkFilterIn = true),
+      vac, k, Metric.L2, filterColumn = Some("label"), filterIn = true)
       .collect().isEmpty, "vacuous IN must return no rows")
     // RESEAL without hashes (v1 sidecars): the walk falls back
     // unfiltered per shard, but the exact re-rank keeps every returned
@@ -2450,8 +2505,11 @@ class ColdTierSpec extends AnyFunSuite {
     // sidecar generation
     ColdTier.sealIndexes(spark, dir, 0L until 4L, Metric.L2,
       m = 16, efConstruction = 128)
-    val fb = ColdTier.searchIndexedInWalkFilteredIn(spark, dir, qs, k,
-      "label", Metric.L2, shortlist = 2 * k, efSearch = 64).collect()
+    val fb = ColdTier.rerankExact(spark, dir,
+      ColdTier.probeCandidates(spark, dir, qs, 2 * k, Metric.L2,
+        efSearch = 64, filterColumn = Some("label"), inWalkFilterIn = true),
+      qs, k, Metric.L2, filterColumn = Some("label"), filterIn = true)
+      .collect()
     fb.foreach { r =>
       val qi = r.getLong(0).toInt
       assert(setOf(qi).contains(r.getLong(2) % nLabels),

@@ -339,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
       merged.collect().foreach(r => results.synchronized {
         results += ((r.getLong(0), r.getLong(2))) })
     }
-    // a query stamped Long.MaxValue/8 (Bench's own sentinel) lands in the
+    // a query stamped Long.MaxValue/8 (a far-future sentinel) lands in the
     // same batch as the insert; with the clock advanced by queries, the
     // eviction floor would jump to ~MaxValue/8 and wipe the live set
     input.addData(

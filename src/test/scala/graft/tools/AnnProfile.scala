@@ -24,7 +24,7 @@ object AnnProfile {
       }
     })
     val dir = "/root/testdata/sf0.1"
-    val vecs = graft.Bench.derivedVectors(spark, dir).repartition(32).cache()
+    val vecs = DerivedVectors.derivedVectors(spark, dir).repartition(32).cache()
     vecs.count()
     val queries = vecs.where(col("id") % 571 === 0)
       .select(col("id").as("qid"), col("vec").as("qv"),

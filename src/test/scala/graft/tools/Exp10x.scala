@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.{Bench, Metric}
+import graft.Metric
 import graft.ops.Ann
 
 /** 10x-corpus (6M-vector) ANN sweep over per-partition graph size.
@@ -12,9 +12,9 @@ import graft.ops.Ann
  *   target=23437  parts= 295  ann=226.7s  vec/s=26467  recall@10=0.9224
  *   target= 5859  parts=1057  ann=145.3s  vec/s=41293  recall@10=0.9737
  *   target= 4000  parts=1532  ann=157.9s  vec/s=37992  recall@10=0.9904
- * Conclusion (now baked into Bench): hold per-partition HNSW graph size
- * constant (~4k) across corpus scales and let partition count grow —
- * build cost and recall-at-fixed-efSearch both degrade with graph size. */
+ * Conclusion: hold per-partition HNSW graph size constant (~4k) across
+ * corpus scales and let partition count grow — build cost and
+ * recall-at-fixed-efSearch both degrade with graph size. */
 object Exp10x {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,14 +29,14 @@ object Exp10x {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    val sample = Bench.derivedVectors(spark, sfDir).limit(8192)
+    val sample = DerivedVectors.derivedVectors(spark, sfDir).limit(8192)
       .select("vec").collect().map(_.getSeq[Float](0).toArray)
     val cells = graft.partitioners.KMeansPartitioner.fit(sample,
       k = cpus * 2, replicationFactor = 1, iterations = 4, seed = 42L,
       queryProbes = 8)
 
     val mult = 10
-    val vecs10 = Bench.derivedVectorsN(spark, sfDir, mult).repartition(cpus * 4)
+    val vecs10 = DerivedVectors.derivedVectorsN(spark, sfDir, mult).repartition(cpus * 4)
     val nVec10 = vecs10.count()
     val q10 = vecs10.where(col("id") % 28541 === 0)
       .select(col("id").as("qid"), col("vec").as("qv"),

@@ -27,7 +27,7 @@ object Probe {
     import graft.partitioners.KMeansPartitioner
 
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val vecs = graft.Bench.derivedVectors(spark, sfDir)
+    val vecs = DerivedVectors.derivedVectors(spark, sfDir)
       .repartition(16).cache()
     val n = vecs.count()
     val sample = vecs.limit(8192).select("vec").collect()

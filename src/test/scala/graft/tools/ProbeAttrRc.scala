@@ -21,7 +21,7 @@ object ProbeAttrRc {
     import spark.implicits._
     import graft.store.ColdTier
 
-    val vecs10 = graft.Bench.derivedVectorsN(spark, sfDir, 10)
+    val vecs10 = DerivedVectors.derivedVectorsN(spark, sfDir, 10)
       .repartition(32)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = vecs10.count()

@@ -22,7 +22,7 @@ object ProbeTie {
       (123145303086110L, Seq(140737488794837L, 140737489338837L,
         17592186196437L, 87960930391637L)))
     val wanted = (cases.map(_._1) ++ cases.flatMap(_._2)).toSet
-    val rows = graft.Bench.derivedVectorsN(spark, sfDir, 10)
+    val rows = DerivedVectors.derivedVectorsN(spark, sfDir, 10)
       .where(col("id").isin(wanted.toSeq: _*))
       .as[(Long, Array[Float], Long)].collect()
       .map(t => t._1 -> t._2).toMap

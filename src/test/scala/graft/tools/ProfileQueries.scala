@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
  * before/after job counts are the primary plan-shape evidence next to
  * the explain files.
  *
- * Test scope on purpose: profiling must not perturb the main binary
- * (Bench.binarySha stamps only main classes), so twins bracket it.
+ * Test scope on purpose: profiling code stays out of the main
+ * binary.
  *
  * Usage: Test/runMain graft.tools.ProfileQueries <suffix> <name>...
  *   (suffix "before"/"after"; names default to the slow set)

@@ -41,7 +41,7 @@ object ProfileSqlServe {
     // --- aligned tier: 100 single-label segments from the 1x vectors
     val tier = java.nio.file.Files.createTempDirectory("profile-sql-tier")
       .toString
-    val vecs = graft.Bench.derivedVectors(spark, sfDir)
+    val vecs = DerivedVectors.derivedVectors(spark, sfDir)
     spark.sparkContext.setJobDescription("profile: seal aligned tier")
     graft.store.ColdTier.sealMany(
       vecs.select(pmod(col("id"), lit(100)).cast("long").as("segmentId"),

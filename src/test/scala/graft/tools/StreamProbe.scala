@@ -7,7 +7,7 @@ import graft.Metric
 import graft.streaming.VectorStreamJob
 import graft.streaming.VectorStreamJob.StreamEvent
 
-/** Isolated replica of Bench's streaming section (no prior workload in
+/** Isolated streaming measurement (no prior workload in
  * the JVM): 20k inserts fed in 2000-row chunks with concurrent queries
  * through the keyed HNSW store, per-chunk batch times printed.
  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.StreamProbe" */
