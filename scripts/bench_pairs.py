@@ -4,6 +4,10 @@
         --workload stream_ingest_query --seeds 601-610 --seconds 10 \
         --claim throughput_per_s
 
+`--workload` repeats: one invocation then runs the pairs of each named
+workload in turn and prints one table per workload. `--claim METRIC`
+applies to every workload run, `--claim WORKLOAD:METRIC` to that one.
+
 Runs `perfbench/run.py --trace 0` once per seed on each checkout,
 alternating which side runs first, each checkout building into its own
 CARGO_TARGET_DIR (`<target-root>/parent`, `<target-root>/change`). Prints,
@@ -70,24 +74,20 @@ def bound_verdict(worse, spread, bound):
     return "unresolved" if spread > bound else "NO"
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--parent", required=True, help="parent checkout")
-    ap.add_argument("--change", required=True, help="change checkout")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="e.g. 601-610 or 1,5,9")
-    ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--target-root", default=None,
-                    help="build dirs go under here (default: <change>/.bench_pairs)")
-    ap.add_argument("--claim", action="append", default=[],
-                    help="end-to-end metric the change claims to improve")
-    ap.add_argument("--out", default=None, help="JSON-lines file of every run")
-    a = ap.parse_args()
+def claimed(claims, workload):
+    """The metrics `--claim` names for this workload."""
+    out = set()
+    for c in claims:
+        w, _, m = c.rpartition(":")
+        if w in ("", workload):
+            out.add(m)
+    return out
 
-    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
-    root = os.path.abspath(a.target_root or os.path.join(a.change, ".bench_pairs"))
-    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+
+def compare(a, workload, spec, sides, root):
+    """Runs the alternating pairs of one workload and prints its table.
+    Returns True when every run was correct, no metric is out of bound
+    and every claimed metric meets the gain rule."""
     vals = {s: {m: [] for m in spec} for s in sides}
     paired = {m: [] for m in spec}
     ops = {s: [0, 0] for s in sides}  # failed, attempted
@@ -96,7 +96,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
         for side in order:
-            res = run(sides[side], os.path.join(root, side), a.workload, seed,
+            res = run(sides[side], os.path.join(root, side), workload, seed,
                       a.seconds)
             got[side] = res
             ok = res.get("correct") is True and res.get("exit") == 0
@@ -106,8 +106,8 @@ def main():
             if a.out:
                 with open(a.out, "a") as f:
                     f.write(json.dumps({"side": side, "seed": seed,
-                                        "workload": a.workload, **res}) + "\n")
-            print(f"seed {seed} {side:6s} correct={res.get('correct')} "
+                                        "workload": workload, **res}) + "\n")
+            print(f"{workload} seed {seed} {side:6s} correct={res.get('correct')} "
                   f"failed={res.get('failed')} exit={res.get('exit')}",
                   file=sys.stderr)
         for m in spec:
@@ -118,9 +118,10 @@ def main():
             if None not in v.values():
                 paired[m].append((v["parent"], v["change"]))
 
+    claims = claimed(a.claim, workload)
     claim_ok = True
     out_of_bound = False
-    print(f"{a.workload}: {len(seeds(a.seeds))} pairs, seeds {a.seeds}, "
+    print(f"{workload}: {len(seeds(a.seeds))} pairs, seeds {a.seeds}, "
           f"{a.seconds:g} s runs, {bad} failed or wrong runs")
     share = {s: ops[s][0] / ops[s][1] if ops[s][1] else 0.0 for s in sides}
     print("failed/attempted: " + ", ".join(
@@ -131,6 +132,7 @@ def main():
     for m, d in spec.items():
         if not vals["parent"][m] or not vals["change"][m]:
             print(f"{m:18s} missing")
+            claim_ok &= m not in claims
             continue
         pq = quartiles(vals["parent"][m])
         cq = quartiles(vals["change"][m])
@@ -143,14 +145,42 @@ def main():
         spread = (pq[2] - pq[0]) / pq[1] if pq[1] else 0.0
         verdict = bound_verdict(worse, spread, d["bound"])
         out_of_bound |= verdict == "NO"
-        if m in a.claim and not gain:
+        if m in claims and not gain:
             claim_ok = False
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
         fmt = lambda q: f"{q[0]:.4g}/{q[1]:.4g}/{q[2]:.4g}"
         print(f"{m:18s} {fmt(pq):>30s} {fmt(cq):>30s} {ratio:7.3f} "
               f"{wins:>3d}/{n:<2d}  {'holds' if gain else '-':9s}  "
               f"{verdict}")
-    return 0 if bad == 0 and claim_ok and not out_of_bound else 1
+    print(flush=True)
+    return bad == 0 and claim_ok and not out_of_bound
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--parent", required=True, help="parent checkout")
+    ap.add_argument("--change", required=True, help="change checkout")
+    ap.add_argument("--workload", required=True, action="append",
+                    help="workload to compare; repeat for several")
+    ap.add_argument("--seeds", required=True, help="e.g. 601-610 or 1,5,9")
+    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--target-root", default=None,
+                    help="build dirs go under here (default: <change>/.bench_pairs)")
+    ap.add_argument("--claim", action="append", default=[],
+                    help="end-to-end metric the change claims to improve, as "
+                         "METRIC (every workload) or WORKLOAD:METRIC")
+    ap.add_argument("--out", default=None, help="JSON-lines file of every run")
+    a = ap.parse_args()
+
+    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
+        spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
+    for c in a.claim:
+        if c.rpartition(":")[2] not in spec:
+            ap.error(f"--claim {c}: not an end-to-end metric of BENCHMARK.json")
+    root = os.path.abspath(a.target_root or os.path.join(a.change, ".bench_pairs"))
+    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    ok = [compare(a, w, spec, sides, root) for w in a.workload]
+    return 0 if all(ok) else 1
 
 
 if __name__ == "__main__":

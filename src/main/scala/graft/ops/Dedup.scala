@@ -62,10 +62,15 @@ object Dedup {
       .flatMapGroups { (_: (Int, Long), it: Iterator[(Long, Int, Long)]) =>
         // bounded buffering: stop reading a super-bucket at cap+1 instead
         // of materializing it — the hot bucket the cap exists to drop must
-        // not first be held whole in one task's memory
-        val ids = new Array[Long](maxBucketSize + 1)
+        // not first be held whole in one task's memory. The buffer grows
+        // on demand: most buckets hold a few ids, not the cap
+        var ids = new Array[Long](math.min(maxBucketSize, 15) + 1)
         var n = 0
-        while (it.hasNext && n <= maxBucketSize) { ids(n) = it.next()._1; n += 1 }
+        while (it.hasNext && n <= maxBucketSize) {
+          if (n == ids.length)
+            ids = java.util.Arrays.copyOf(ids, math.min(maxBucketSize + 1L, 2L * n).toInt)
+          ids(n) = it.next()._1; n += 1
+        }
         if (n > maxBucketSize) Iterator.empty
         else {
           java.util.Arrays.sort(ids, 0, n)
@@ -245,32 +250,106 @@ object Dedup {
     docs.join(keep, idCol)
   }
 
+  /** Edges up to which components run on the driver: 1 << 20 edges are
+   * 16 MiB of ids in two primitive arrays. */
+  private val DriverEdgeBound = 1 << 20
+
   /** Connected components over an undirected pair list (i, j) — the
    * cluster-selection step after near-dup pair generation (a pipeline
-   * keeps one document per component). Star contraction: each round
-   * every current super-node points to the minimum of its closed
-   * neighborhood (pointers strictly decrease, so no cycles and the
-   * component minimum always survives as its own representative), the
-   * edge set is rewritten through those pointers, self-loops drop, and
-   * the round repeats on the CONTRACTED graph. Near-dup components are
-   * dense clusters, so the first round collapses most of the edge mass
-   * (a clique contracts in one round) — unlike plain label propagation,
-   * which re-joins the full edge set for every round of the diameter.
-   * Edges and the id→component mapping stay distributed throughout (no
-   * driver-side graph state). Returns (id, component) with component =
-   * the smallest id in the connected component. Throws if `maxIters`
-   * rounds don't converge — an adversarial long-path graph wants the
-   * alternating large-star/small-star variant (Kiveris et al. 2014),
-   * not silent wrong answers. */
+   * keeps one document per component). Self-loops and pairs with a null
+   * endpoint are ignored. Returns (id, component), one row per endpoint
+   * of a kept edge, with component = the smallest id in the connected
+   * component, as a checkpointed frame.
+   *
+   * The edges are read once, capped at `DriverEdgeBound` + 1 rows. When
+   * they fit the bound (near-dup graphs are sparse: about one edge per
+   * paired document) a union-find over primitive arrays resolves them on
+   * the driver, with no shuffle and no job beyond that read.
+   * Above the bound the graph stays on the executors: [[starContraction]]. */
   def connectedComponents(pairs: DataFrame, // (i LONG, j LONG)
-      maxIters: Int = 25): DataFrame = {
+      maxIters: Int = 25): DataFrame =
+    connectedComponents(pairs, maxIters, DriverEdgeBound)
+
+  /** [[connectedComponents]] with the driver bound as a parameter, so a
+   * test or profile can force the distributed path (bound 0). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIters: Int,
+      driverEdgeBound: Int): DataFrame = {
+    val edges = pairs.select(col("i").as("a"), col("j").as("b"))
+      .where(col("i") =!= col("j"))
+    // bounded: at most driverEdgeBound + 1 edges reach the driver
+    val head = edges.limit(driverEdgeBound + 1).collect()
+    if (head.length > driverEdgeBound) starContraction(edges, maxIters)
+    else {
+      val a = new Array[Long](head.length)
+      val b = new Array[Long](head.length)
+      var e = 0
+      while (e < head.length) { a(e) = head(e).getLong(0); b(e) = head(e).getLong(1); e += 1 }
+      val (ids, comp) = unionFind(a, b)
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      // checkpointed like the distributed result: callers join on it and
+      // read its size statistics, and a bare local relation would plan
+      // as a codegen-free LocalTableScan. Lazily: the caller's first
+      // action materializes it, so no job runs here
+      ids.indices.map(k => (ids(k), comp(k))).toDF("id", "component")
+        .localCheckpoint(eager = false)
+    }
+  }
+
+  /** Union-find over an edge list: (sorted distinct endpoints, each one's
+   * component minimum). Ids are compacted to their rank in the sorted
+   * endpoint array; union links the larger root under the smaller, so
+   * every root is its component's minimum rank, i.e. its minimum id. */
+  private def unionFind(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = new Array[Long](a.length + b.length)
+    System.arraycopy(a, 0, all, 0, a.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var m = 0
+    var k = 0
+    while (k < all.length) {
+      if (m == 0 || all(k) != all(m - 1)) { all(m) = all(k); m += 1 }
+      k += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < a.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, a(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, b(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 1
+    }
+    (ids, Array.tabulate(m)(x => ids(find(x))))
+  }
+
+  /** The distributed fallback of [[connectedComponents]], over the
+   * non-self-loop edges (a, b). Star contraction: each round every
+   * current super-node points to the minimum of its closed neighborhood
+   * (pointers strictly decrease, so no cycles and the component minimum
+   * always survives as its own representative), the edge set is
+   * rewritten through those pointers, self-loops drop, and the round
+   * repeats on the CONTRACTED graph. Near-dup components are dense
+   * clusters, so the first round collapses most of the edge mass (a
+   * clique contracts in one round) — unlike plain label propagation,
+   * which re-joins the full edge set for every round of the diameter.
+   * Edges and the id→component mapping stay distributed. Throws if
+   * `maxIters` rounds don't converge — an adversarial long-path graph
+   * wants the alternating large-star/small-star variant (Kiveris et al.
+   * 2014), not silent wrong answers. */
+  private def starContraction(edges0: DataFrame, // (a LONG, b LONG), a != b
+      maxIters: Int): DataFrame = {
     // each round MUST truncate lineage (localCheckpoint, eager): an
     // iterative join/agg chain otherwise doubles the logical plan per
     // round and planning cost explodes long before the data does. On a
     // real cluster prefer reliable checkpointing (survives executor
     // loss); block-manager truncation is the single-node equivalent.
-    var edges = pairs.select(col("i").as("a"), col("j").as("b"))
-      .where(col("i") =!= col("j")).localCheckpoint()
+    var edges = edges0.localCheckpoint()
     var mapping = edges.select(col("a").as("id"))
       .unionAll(edges.select(col("b").as("id"))).distinct()
       .select(col("id"), col("id").as("component")).localCheckpoint()

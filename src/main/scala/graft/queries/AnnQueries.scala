@@ -293,9 +293,11 @@ object AnnQueries {
             threshold = MinhashThreshold, maxBucketSize = MaxBucketSize)
           OracleAux.write(pairs.select(col("i"), col("j")), dir,
             "dedup_cluster_pairs")
-          // (no CacheRegistry entry: the component frame is checkpointed,
-          // its blocks live with the RDD this map reference keeps alive —
-          // ~one row per paired doc, not corpus-sized)
+          // (no CacheRegistry entry: the component frame is checkpointed
+          // on both paths — built by the driver union-find below the edge
+          // bound, by star contraction above it — and its blocks live with
+          // the RDD this map reference keeps alive: ~one row per paired
+          // doc, not corpus-sized)
           Dedup.connectedComponents(
             OracleAux.read(s, dir, "dedup_cluster_pairs"))
         })
@@ -336,9 +338,10 @@ object AnnQueries {
             (row_number().over(w) === 1).as("is_keeper"))
       })
 
-  // keyed by (session, dir): a DataFrame (and its localCheckpoint blocks)
-  // is bound to the session that built it — a dir-only key would hand a
-  // later session a frame whose blocks belong to a stopped predecessor
+  // keyed by (session, dir): a component frame (and its localCheckpoint
+  // blocks, whichever components path built it) is bound to the session
+  // that built it — a dir-only key would hand a later session a frame
+  // whose blocks belong to a stopped predecessor
   private val clustersCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String),
       org.apache.spark.sql.DataFrame]
