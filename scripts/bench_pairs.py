@@ -28,6 +28,12 @@ printed too, and flagged when the change's is larger. Every run's raw
 result is appended to `--out` as one JSON line. Exit status: 0, or 1 when
 a run failed or answered wrong, when a metric is out of bound (`NO`), or
 when a `--claim` metric misses the gain rule.
+
+With `--trace-seed N`, after the pairs each side makes one traced run
+(`--trace 1`) on seed N of every workload a `--claim` names, and the
+script prints each per-layer metric of that workload side by side with
+its change/parent ratio, so that a claim can name the layer that moved.
+A failed traced run counts as a failed run.
 """
 import argparse
 import json
@@ -45,11 +51,11 @@ def seeds(spec):
     return out
 
 
-def run(checkout, target, workload, seed, seconds):
+def run(checkout, target, workload, seed, seconds, trace=0):
     env = dict(os.environ, CARGO_TARGET_DIR=target)
     cmd = [sys.executable, os.path.join("perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, env=env, stdout=subprocess.PIPE,
                        stderr=subprocess.DEVNULL, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
@@ -156,6 +162,37 @@ def compare(a, workload, spec, sides, root):
     return bad == 0 and claim_ok and not out_of_bound
 
 
+def traced(a, workload, sides, root):
+    """One traced run per side on `--trace-seed`; prints the per-layer
+    metrics side by side. Returns True when both runs were correct."""
+    got = {}
+    for side in ("parent", "change"):
+        got[side] = run(sides[side], os.path.join(root, side), workload,
+                        a.trace_seed, a.seconds, trace=1)
+        if a.out:
+            with open(a.out, "a") as f:
+                f.write(json.dumps({"side": side, "seed": a.trace_seed,
+                                    "workload": workload, "trace": 1,
+                                    **got[side]}) + "\n")
+    ok = all(r.get("correct") is True and r.get("exit") == 0
+             for r in got.values())
+    print(f"{workload}: traced seed {a.trace_seed}"
+          + ("" if ok else ", a traced run failed or answered wrong"))
+    print(f"{'per-layer metric':40s} {'parent':>12s} {'change':>12s} {'ratio':>7s}")
+    m = {s: got[s].get("metrics", {}) for s in got}
+    with open(os.path.join(sides["change"], "perfbench", "metrics.json")) as f:
+        mine = {n for n, c in json.load(f)["per_layer"].items()
+                if workload in c["workloads"]}
+    for name in sorted((set(m["parent"]) | set(m["change"])) & mine):
+        p = m["parent"].get(name, {}).get("value")
+        c = m["change"].get(name, {}).get("value")
+        ratio = f"{c / p:7.3f}" if p and c is not None else f"{'-':>7s}"
+        fmt = lambda v: f"{v:12.4g}" if v is not None else f"{'missing':>12s}"
+        print(f"{name:40s} {fmt(p)} {fmt(c)} {ratio}")
+    print(flush=True)
+    return ok
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True, help="parent checkout")
@@ -170,6 +207,9 @@ def main():
                     help="end-to-end metric the change claims to improve, as "
                          "METRIC (every workload) or WORKLOAD:METRIC")
     ap.add_argument("--out", default=None, help="JSON-lines file of every run")
+    ap.add_argument("--trace-seed", type=int, default=None,
+                    help="after the pairs, one traced run per side on this "
+                         "seed of each claimed workload, per-layer table")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
@@ -180,6 +220,9 @@ def main():
     root = os.path.abspath(a.target_root or os.path.join(a.change, ".bench_pairs"))
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     ok = [compare(a, w, spec, sides, root) for w in a.workload]
+    if a.trace_seed is not None:
+        ok += [traced(a, w, sides, root) for w in a.workload
+               if claimed(a.claim, w)]
     return 0 if all(ok) else 1
 
 

@@ -349,10 +349,18 @@ object Dedup {
     // round and planning cost explodes long before the data does. On a
     // real cluster prefer reliable checkpointing (survives executor
     // loss); block-manager truncation is the single-node equivalent.
-    var edges = edges0.localCheckpoint()
-    var mapping = edges.select(col("a").as("id"))
+    // A checkpoint also keeps its source plan's size estimate, and a
+    // join's estimate is the product of its sides', so estimates carried
+    // across rounds grow without bound (a BigInt product per plan node);
+    // re-rooting each checkpoint on its rows resets them every round.
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint()
+      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+    }
+    var edges = checkpoint(edges0)
+    var mapping = checkpoint(edges.select(col("a").as("id"))
       .unionAll(edges.select(col("b").as("id"))).distinct()
-      .select(col("id"), col("id").as("component")).localCheckpoint()
+      .select(col("id"), col("id").as("component")))
     var nEdges = edges.count()
     var it = 0
     while (nEdges > 0 && it < maxIters) {
@@ -366,24 +374,21 @@ object Dedup {
       // rounds) instead of shedding one edge per round. Every lbl value
       // is itself an edge endpoint, so the inner self-join is total.
       val hop = lbl1.select(col("node").as("pnode"), col("lbl").as("plbl"))
-      val lbl = lbl1.join(hop, col("lbl") === col("pnode"))
-        .select(col("node"), col("plbl").as("lbl"))
-        .localCheckpoint()
+      val lbl = checkpoint(lbl1.join(hop, col("lbl") === col("pnode"))
+        .select(col("node"), col("plbl").as("lbl")))
       // compose into the id -> component mapping (components with no
       // remaining edges keep their representative)
-      mapping = mapping
+      mapping = checkpoint(mapping
         .join(lbl.select(col("node").as("component"), col("lbl")),
           Seq("component"), "left")
-        .select(col("id"), coalesce(col("lbl"), col("component")).as("component"))
-        .localCheckpoint()
+        .select(col("id"), coalesce(col("lbl"), col("component")).as("component")))
       // contract: rewrite endpoints through the pointers, drop self-loops
-      edges = edges
+      edges = checkpoint(edges
         .join(lbl.select(col("node").as("a"), col("lbl").as("la")), "a")
         .join(lbl.select(col("node").as("b"), col("lbl").as("lb")), "b")
         .select(col("la").as("a"), col("lb").as("b"))
         .where(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       nEdges = edges.count()
       it += 1
     }

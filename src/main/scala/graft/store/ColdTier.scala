@@ -926,13 +926,57 @@ object ColdTier {
   def sealDeletes(deletes: DataFrame, dir: String, batchId: Long): Boolean =
     sealDeletesNamed(deletes, dir, s"batch-$batchId")
 
+  /** [[sealDeletes]] for tombstones already on the driver (the streaming
+   * lifecycle holds its trigger's deletes after the trigger's one
+   * collect): the same `batch-<batchId>` commit, but the single
+   * (del_id, del_ts) parquet file is written here with parquet-hadoop,
+   * so the write runs no Spark job. Returns false, writing nothing, when
+   * `deletes` is empty or the batch is already logged. */
+  def sealDeletesLocal(spark: SparkSession, deletes: Seq[(Long, Long)],
+      dir: String, batchId: Long): Boolean =
+    deletes.nonEmpty && commitDeleteBatch(spark, dir, s"batch-$batchId") {
+      stage =>
+        import org.apache.parquet.example.data.simple.SimpleGroupFactory
+        import org.apache.parquet.hadoop.example.ExampleParquetWriter
+        import org.apache.parquet.hadoop.metadata.CompressionCodecName
+        val conf = spark.sparkContext.hadoopConfiguration
+        val file = new Path(stage,
+          s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
+        val w = ExampleParquetWriter.builder(
+            org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
+          .withConf(conf).withType(DeleteLogSchema)
+          .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        val groups = new SimpleGroupFactory(DeleteLogSchema)
+        try deletes.foreach { case (id, ts) =>
+          w.write(groups.newGroup().append("del_id", id).append("del_ts", ts))
+        } finally w.close()
+        true
+    }
+
+  /** The parquet schema of one delete-log file, as Spark writes it for
+   * non-null long columns. */
+  private val DeleteLogSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType(
+      "message spark_schema { required int64 del_id; required int64 del_ts; }")
+
   /** Named variant so [[compact]]'s consolidated log lives under a
    * reserved name (`batch-compact-<id>`) that can never collide with a
    * streaming micro-batch's `batch-<batchId>` — a collision would make
    * that batch's sealDeletes a silent no-op and resurrect its deletes. */
   private def sealDeletesNamed(deletes: DataFrame, dir: String,
       name: String): Boolean = {
-    val spark = deletes.sparkSession
+    val d = deletes.select(col("id").cast("long").as("del_id"),
+      col("ts").cast("long").as("del_ts"))
+    commitDeleteBatch(deletes.sparkSession, dir, name) { stage =>
+      !d.isEmpty && { d.coalesce(1).write.parquet(stage.toString); true }
+    }
+  }
+
+  /** Commit one delete-log batch `name`: `write` fills a staging dir (or
+   * returns false when there is nothing to log), which is then renamed
+   * into the log. Returns whether a batch was committed. */
+  private def commitDeleteBatch(spark: SparkSession, dir: String,
+      name: String)(write: Path => Boolean): Boolean = {
     val out = new Path(s"${deleteLogPath(dir)}/$name")
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the batch dir only ever appears by the rename below, so its
@@ -943,16 +987,13 @@ object ColdTier {
       if (!fs.exists(new Path(out, "_temporary"))) return false
       fs.delete(out, true)
     }
-    val d = deletes.select(col("id").cast("long").as("del_id"),
-      col("ts").cast("long").as("del_ts"))
-    if (d.isEmpty) return false
     // staged outside the log (a reader globbing `batch-*` never sees a
     // half-written batch), then renamed into place — the tmp+rename
     // discipline of [[commitAttrStats]] and [[snapshot]]; a crash leaves
     // only the staging dir, swept by the batch's next attempt
     val stage = new Path(s"$dir/_deletes-staging/$name")
     fs.delete(stage, true)
-    d.coalesce(1).write.parquet(stage.toString)
+    if (!write(stage)) return false
     fs.mkdirs(out.getParent)
     if (!fs.rename(stage, out))
       throw new java.io.IOException(s"sealDeletes: rename $stage -> $out failed")

@@ -88,7 +88,9 @@ object VectorStreamJob {
    * the source; flush staging is overwrite-idempotent so a re-run
    * converges). Future additions to stored state should extend the
    * PARALLEL arrays on PartialResult instead, or accept the same
-   * migration cost knowingly. */
+   * migration cost knowingly. The composed mode (`coldDir` +
+   * `crossBatchMerge`) also dropped its second stateful operator, which
+   * needs a fresh checkpoint the same way ([[run]]). */
   final case class StoredVec(id: Long, ts: Long, vec: Array[Float],
       attr: String = null)
   /** Versioned tombstone: a delete at `ts` supersedes any insert of the
@@ -514,6 +516,32 @@ object VectorStreamJob {
     (outI.toArray, outD.toArray)
   }
 
+  /** [[mergePartials]] over one trigger's partials on the driver: query
+   * partials (`numPartitionsSent > 0`) group by queryId, a query whose
+   * distinct pids number its `numPartitionsSent` folds its lists with
+   * [[mergeSorted]], and each result row is stamped with the latency
+   * from the query's earliest routing stamp. Dump, flush and delete-log
+   * partials never merge; an incomplete fan-out (a partition dropped the
+   * query under `dropLateQueries`) emits nothing. Rows come out ordered
+   * by (qid, rn). */
+  def mergePartialsLocal(parts: Seq[PartialResult], k: Int): Seq[SearchResult] = {
+    val now = System.currentTimeMillis()
+    parts.filter(_.numPartitionsSent > 0).groupBy(_.queryId).toSeq
+      .sortBy(_._1).flatMap { case (qid, ps) =>
+        if (ps.map(_.pid).distinct.size != ps.head.numPartitionsSent) Nil
+        else {
+          var ids = Array.empty[Long]
+          var ds = Array.empty[Double]
+          ps.foreach { p =>
+            val m = mergeSorted(ids, ds, p.ids, p.dists, k)
+            ids = m._1; ds = m._2
+          }
+          val latency = (now - ps.map(_.ingestMillis).min).toDouble
+          ids.indices.map(r => SearchResult(qid, r + 1, ids(r), ds(r), latency))
+        }
+      }
+  }
+
   /** Decode DUMP partials out of a partial batch: one row per live
    * (partition, id) with its stored event time — the Spark-side surface
    * of the reference's DataType.DUMP state dump. Send
@@ -767,6 +795,9 @@ object VectorStreamJob {
    * `sent <= 0`) — pass through the stateful merge untouched instead of
    * being filtered, so ONE downstream foreachBatch can both sink
    * completed queries and seal flush/delete batches into the cold tier.
+   * For callers that feed their own partial stream, whose fan-outs may
+   * straddle triggers; [[run]] merges on the driver instead, since its
+   * fan-outs never do.
    *
    * Group key: query partials key on (queryId, -1) and merge across
    * triggers exactly as before; lifecycle partials key on
@@ -873,11 +904,7 @@ object VectorStreamJob {
 
     def apply(parts: Seq[PartialResult], batchId: Long): Unit = {
       val didSeal = flush(parts, batchId)
-      val deletes = deleteLogRows(parts)
-      if (deletes.nonEmpty) {
-        import spark.implicits._
-        ColdTier.sealDeletes(deletes.toDF("id", "ts"), coldDir, batchId)
-      }
+      ColdTier.sealDeletesLocal(spark, deleteLogRows(parts), coldDir, batchId)
       val compacted =
         compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
       if (compacted)
@@ -941,14 +968,18 @@ object VectorStreamJob {
   }
 
   /** Wire the full pipeline onto a streaming Dataset; results are appended
-   * per micro-batch via foreachBatch into `sink`. With `crossBatchMerge`
-   * the C3 merge is the stateful cross-batch variant (a query's fan-out
-   * may straddle micro-batches and still completes); otherwise it is the
-   * one-aggregation per-batch merge. `crossBatchMerge` COMPOSES with
-   * `coldDir`: the lifecycle partials pass through the stateful merge
-   * ([[mergePartialsStatefulTapped]]), so the reference's full operating
-   * mode — continuous ingest + TTL flush + incremental completeness —
-   * runs as one job.
+   * per micro-batch via foreachBatch into `sink`.
+   *
+   * Merge: `route` puts a query's whole fan-out into the micro-batch its
+   * event arrives in, so one trigger's partials hold every complete
+   * query. With `coldDir` set, the trigger's partials are collected once
+   * and merged on the driver ([[mergePartialsLocal]]), whatever
+   * `crossBatchMerge` says: the query runs one stateful operator, and
+   * the sink gets a local [[SearchResult]] frame. Without `coldDir`,
+   * `crossBatchMerge` chains the stateful cross-batch merge
+   * ([[mergePartialsStateful]], for a fan-out that straddles
+   * micro-batches), and otherwise the one-aggregation per-batch
+   * [[mergePartials]] runs.
    *
    * With `coldDir` set, the job runs the full LSM lifecycle
    * ([[Lifecycle]]): TTL-evicted hot state flushes into cold segments per
@@ -969,15 +1000,23 @@ object VectorStreamJob {
    * as the hot tier did).
    *
    * Job budget with `coldDir` set: one collect materializes the trigger
-   * and the rest runs from driver-resident rows. Composed, without
-   * `indexAtFlush`, a trigger runs that job plus a delete-log write when
-   * it carries deletes; a sealing trigger adds the segment write and the
-   * catalog append. The sink's DataFrame is local (its collect runs no
-   * job); the per-batch merge adds its aggregation. Staged seals,
-   * compaction, recluster and sidecars run their own jobs. Driver memory:
-   * one trigger's results, tombstones and evicted rows — at a steady rate
-   * about one trigger's inserts (8000 128-d rows are about 4 MB), but an
-   * event-time jump can evict the whole hot set in one trigger. */
+   * over two stages (route, then the keyed operator) and the rest runs
+   * from driver-resident rows. Without `indexAtFlush`, that collect is
+   * the trigger's only job, deletes included: the delete log is written
+   * on the driver ([[ColdTier.sealDeletesLocal]]). A sealing trigger adds
+   * the segment write and the catalog append. The sink's frame is local,
+   * so its collect runs no job. Staged seals, compaction, recluster and
+   * sidecars run their own jobs. Driver memory: one trigger's partials,
+   * results, tombstones and evicted rows — at a steady rate about one
+   * trigger's inserts (8000 128-d rows are about 4 MB), but an event-time
+   * jump can evict the whole hot set in one trigger.
+   *
+   * Checkpoint compatibility: with `coldDir` set the query holds one
+   * stateful operator. A checkpoint written while the composed mode
+   * chained the stateful merge as a second operator has a different
+   * operator layout, so such a job must restart from a fresh checkpoint
+   * (replay the source; flush and delete-log commits are idempotent per
+   * batch id, so a re-run converges). */
   def run(events: Dataset[StreamEvent], model: PartitionerModel, k: Int,
       metric: Metric, maxTtl: Long, useHnsw: Boolean = false,
       checkpointDir: Option[String] = None,
@@ -1049,33 +1088,15 @@ object VectorStreamJob {
           hnswM, hnswEfConstruction, flushEveryBatches, compactEvery,
           compactTargetRows, autoReclusterCells, reclusterAccretedFraction,
           reclusterMinSegments, autoReclusterAttr, autoReclusterAttrBuckets)
-        if (crossBatchMerge) {
-          // the reference's full operating mode in ONE job
-          // (VStreamSearchJob.java:21-49): lifecycle partials ride THROUGH
-          // the stateful merge, so one foreachBatch sinks completed
-          // queries and seals flush/delete batches
-          mergePartialsStatefulTapped(p, k).writeStream
-            .outputMode(OutputMode.Append)
-            .foreachBatch { (batch: Dataset[MergedRow], bid: Long) =>
-              // trigger-bounded: one trigger's results + lifecycle rows
-              val rows = batch.collect()
-              val s = batch.sparkSession
-              import s.implicits._
-              sink(rows.flatMap(r => Option(r.res)).toSeq.toDF())
-              lifecycle(rows.flatMap(r => Option(r.pass)).toSeq, bid)
-            }
-        } else p.writeStream
+        p.writeStream
           .outputMode(OutputMode.Append)
           .foreachBatch { (batch: Dataset[PartialResult], bid: Long) =>
             // trigger-bounded: one trigger's partials
-            val parts = batch.collect()
+            val parts = batch.collect().toSeq
             val s = batch.sparkSession
             import s.implicits._
-            // query partials only: flush partials carry vectors the
-            // merge never reads
-            sink(mergePartials(
-              parts.filter(_.numPartitionsSent > 0).toSeq.toDF(), k))
-            lifecycle(parts.toSeq, bid)
+            sink(mergePartialsLocal(parts, k).toDF())
+            lifecycle(parts, bid)
           }
       case None if crossBatchMerge =>
         mergePartialsStateful(p, k).writeStream

@@ -132,6 +132,20 @@ class DedupCcSpec extends AnyFunSuite {
     assert(got.size == 2000 && got.values.forall(_ == 1L))
   }
 
+  test("a rising 100-node chain on the fallback fails its round limit instead of hanging") {
+    import spark.implicits._
+    // each round shortens a chain whose ids rise along the path by only
+    // two nodes, so 100 nodes need about 50 rounds: more than 25
+    val chain = (1L until 100L).map(i => (i, i + 1)).toDF("i", "j")
+    val run = scala.concurrent.Future(scala.util.Try(
+      Dedup.connectedComponents(chain, 25, 0)))(
+      scala.concurrent.ExecutionContext.global)
+    val got = scala.concurrent.Await.result(run,
+      scala.concurrent.duration.Duration(120, "s"))
+    val e = intercept[IllegalArgumentException](got.get)
+    assert(e.getMessage.contains("no convergence in 25 rounds"))
+  }
+
   test("both paths read an empty or all-self-loop pair list as no rows") {
     import spark.implicits._
     val (d0, s0) = bothPaths(Seq.empty[(Long, Long)].toDF("i", "j"))

@@ -2733,4 +2733,61 @@ class ColdTierSpec extends AnyFunSuite {
     assert(ids.size == 48 && !ids.contains(3L) && !ids.contains(11L),
       s"deleted ids must stay shadowed in cold search: $ids")
   }
+
+  test("sealDeletesLocal logs the tombstones sealDeletes(DataFrame) logs, as one parquet file, and writes nothing for no deletes") {
+    import spark.implicits._
+    val dead = Seq((3L, 100L), (11L, 250L), (3L, 90L), (Long.MaxValue, Long.MinValue))
+    val viaDf = Files.createTempDirectory("coldtier-dellocal-df").toString
+    val viaLocal = Files.createTempDirectory("coldtier-dellocal").toString
+    assert(ColdTier.sealDeletes(dead.toDF("id", "ts"), viaDf, 4L))
+    assert(ColdTier.sealDeletesLocal(spark, dead, viaLocal, 4L))
+    def logged(dir: String) = ColdTier.tombstones(spark, dir).get
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(logged(viaLocal) == logged(viaDf))
+    assert(logged(viaLocal) == dead.sorted)
+    val batch = new java.io.File(s"$viaLocal/deletes-log/batch-4")
+    assert(batch.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    // the committed batch is final: a replay is a no-op
+    assert(!ColdTier.sealDeletesLocal(spark, Seq((5L, 1L)), viaLocal, 4L))
+    assert(logged(viaLocal) == dead.sorted)
+    // no deletes: no log dir, no staging dir
+    val empty = Files.createTempDirectory("coldtier-dellocal-empty").toString
+    assert(!ColdTier.sealDeletesLocal(spark, Seq.empty, empty, 1L))
+    assert(new java.io.File(empty).list().isEmpty)
+  }
+
+  test("a delete batch written by sealDeletesLocal shadows cold rows in search and in the warm serveLocal route") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("coldtier-dellocal-serve").toString
+    val rows = mkVecs(200, 8, 17L, 0L)
+    ColdTier.seal(rows, dir, 1L)
+    ColdTier.sealIndexes(spark, dir, Seq(1L), Metric.L2, 16, 64)
+    val qv = rows.where(col("id") === 42L).select("vec").as[Array[Float]].head()
+    val queries = Seq((1L, qv, 1000L, 100000L)).toDF("qid", "qv", "qtime", "ttl")
+    def searched() = ColdTier.search(spark, dir, queries, 5, Metric.L2,
+        firstWaveFraction = 1.0, terminationFactor = 1.0)
+      .collect().sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
+    def served() = ColdTier.serveLocal(spark, dir, qv, 1000L, 100000L, 5,
+      Nil, Nil).getOrElse(fail("the warm graph route must serve")).map(_._1).toSeq
+    assert(searched().head == 42L && served().head == 42L)
+    assert(ColdTier.sealDeletesLocal(spark, Seq((42L, 42L)), dir, 9L))
+    val (s, l) = (searched(), served())
+    assert(s.length == 5 && !s.contains(42L), s"search: $s")
+    assert(l.nonEmpty && !l.contains(42L), s"serveLocal: $l")
+  }
+
+  test("sealDeletesLocal redoes a batch whose parquet write crashed inside the log") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("coldtier-dellocal-crash").toString
+    ColdTier.seal(mkVecs(50, 4, 7L, 0L), dir, 1L)
+    Files.createDirectories(
+      java.nio.file.Paths.get(dir, "deletes-log", "batch-7", "_temporary", "0"))
+    val dead = Seq((3L, 100L), (11L, 100L))
+    assert(ColdTier.sealDeletesLocal(spark, dead, dir, 7L),
+      "a crashed write must be redone, not taken for a commit")
+    assert(!new java.io.File(s"$dir/deletes-log/batch-7/_temporary").exists())
+    assert(ColdTier.tombstones(spark, dir).get.as[(Long, Long)].collect()
+      .sorted.toSeq == dead)
+    assert(!ColdTier.sealDeletesLocal(spark, Seq((5L, 100L)), dir, 7L))
+  }
 }

@@ -620,13 +620,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(answered.values.asScala.toSeq == Seq(truth),
       s"one trigger answers the query exactly: $answered")
     val queryBatch = answered.keySet.asScala.head
-    assert(jobs(queryBatch) == 2,
-      s"collect + delete-log write, nothing else: ${jobs.perBatch}")
+    assert(jobs(queryBatch) == 1,
+      s"the collect, nothing else (the delete log runs no job): ${jobs.perBatch}")
     val sealed_ = graft.store.ColdTier.catalog(spark, cold).map(_.segmentId)
     assert(sealed_.length == 2, s"two sealing triggers: ${sealed_.toList}")
-    sealed_.foreach(b => assert(jobs(b) <= 4,
-      s"sealing trigger $b: collect + segment write + catalog append + " +
-        s"delete log at most: ${jobs.perBatch}"))
+    sealed_.foreach(b => assert(jobs(b) <= 3,
+      s"sealing trigger $b: collect + segment write + catalog append " +
+        s"at most: ${jobs.perBatch}"))
+    // every trigger carried deletes, and each one's batch is logged
+    assert(graft.store.ColdTier.tombstones(spark, cold).get
+      .select("del_id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 7L, 107L))
+  }
+
+  test("driver merge equals mergePartials on the same partials: ties, an id from two partitions, lifecycle partials excluded") {
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    val parts = Seq(
+      // qid 1, 2-way: ids 2, 3 and 4 tie at 0.2, and both partitions
+      // return id 2
+      PartialResult(1L, 0, 2, Array(1L, 2L, 3L), Array(0.1, 0.2, 0.2), 50L, now),
+      PartialResult(1L, 1, 2, Array(2L, 4L, 5L), Array(0.2, 0.2, 0.3), 50L, now - 5),
+      // qid 2: one partition answers empty
+      PartialResult(2L, 0, 2, Array.empty[Long], Array.empty[Double], 60L, now),
+      PartialResult(2L, 1, 2, Array(7L), Array(1.5), 60L, now),
+      // qid 3: incomplete fan-out (a partition dropped it)
+      PartialResult(3L, 1, 2, Array(8L), Array(0.01), 70L, now),
+      // qid 4: one partition, a full list of k
+      PartialResult(4L, 0, 1, Array(6L, 9L, 11L, 12L), Array(0.5, 0.5, 0.5, 0.6), 80L, now),
+      // a state dump, a flush and a delete-log partial never merge
+      PartialResult(5L, 0, -2, Array(1L, 2L), Array(10.0, 20.0), 90L, now),
+      PartialResult(5L, 1, -2, Array(4L), Array(40.0), 90L, now),
+      PartialResult(-1L, 0, FlushSent, Array(20L, 21L), Array(20.0, 21.0), 100L,
+        now, Array(vec(20), vec(21)), Array("a", null)),
+      PartialResult(22L, 1, DeleteLogSent, Array(22L), Array(30.0), 30L, now))
+    val local = VectorStreamJob.mergePartialsLocal(parts, k = 4)
+    val viaSpark = VectorStreamJob.mergePartials(parts.toDF(), 4)
+      .as[SearchResult].collect().sortBy(r => (r.qid, r.rn)).toSeq
+    def key(rs: Seq[SearchResult]) = rs.map(r => (r.qid, r.rn, r.id, r.dist))
+    assert(key(local) == key(viaSpark))
+    assert(key(local) == Seq((1L, 1, 1L, 0.1), (1L, 2, 2L, 0.2),
+      (1L, 3, 3L, 0.2), (1L, 4, 4L, 0.2), (2L, 1, 7L, 1.5),
+      (4L, 1, 6L, 0.5), (4L, 2, 9L, 0.5), (4L, 3, 11L, 0.5), (4L, 4, 12L, 0.6)))
+    assert(local.forall(r => r.latency_ms >= 0 && r.latency_ms < 600000))
+    assert(local.filter(_.qid == 1L).forall(_.latency_ms >= 5),
+      "latency runs from the earliest routing stamp")
+  }
+
+  test("composed mode under dropLateQueries: an incomplete fan-out is never emitted, and a trigger without deletes writes no delete log") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    Seq(true, false).foreach { crossBatch =>
+      val cold = java.nio.file.Files.createTempDirectory("graft-droplate").toString
+      val input = MemoryStream[StreamEvent]
+      val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
+      val q = VectorStreamJob.run(input.toDS(), FirstPartitionQueries(2),
+        k = 5, Metric.L2, maxTtl = 1000000L, dropLateQueries = true,
+        crossBatchMerge = crossBatch, coldDir = Some(cold)) { merged =>
+        merged.collect().foreach(r => results.synchronized {
+          results += ((r.getLong(0), r.getInt(1), r.getLong(2))) })
+      }
+      // qid 500 reaches partition 0 only and advances its query clock
+      input.addData((0 until 20).map(i =>
+        StreamEvent("i", i.toLong, vec(i), i.toLong, 0L, 0)) :+
+        StreamEvent("q", 500L, FirstPartitionQueries.marked(vec(1)), 300L,
+          100000L, 5): _*)
+      q.processAllAvailable()
+      // qid 501 fans out to both: partition 0 drops it as late, partition
+      // 1 answers, so the fan-out is incomplete; qid 502 is on time
+      input.addData(StreamEvent("q", 501L, vec(2), 100L, 100000L, 5),
+        StreamEvent("q", 502L, vec(3), 400L, 100000L, 5))
+      q.processAllAvailable()
+      q.stop()
+      val got = results.synchronized(results.toList)
+      assert(got.map(_._1).toSet == Set(500L, 502L), s"crossBatch=$crossBatch: $got")
+      val truth = (0 until 20).map(i => (i.toLong, Distances.l2(vec(3), vec(i))))
+        .sortBy { case (id, d) => (d, id) }.take(5).map(_._1)
+      assert(got.filter(_._1 == 502L).sortBy(_._2).map(_._3) == truth)
+      val fs = java.nio.file.Paths.get(cold)
+      assert(!java.nio.file.Files.exists(fs.resolve("deletes-log")) &&
+        !java.nio.file.Files.exists(fs.resolve("_deletes-staging")),
+        "no deletes, no delete log")
+    }
   }
 
   test("a streaming-sealed segment carries the stats seal(DataFrame) computes over the same rows, and every row lies within its radius") {
@@ -689,7 +763,7 @@ class StreamingSpec extends AnyFunSuite {
       StreamEvent("i", 100L + i, vec(100 + i), 5000L + i, 0L, 0)): _*)
     q.processAllAvailable()
     // epoch 2 retires epoch 1; a hot query rides along and must complete
-    // through the STATEFUL merge in the same job that is flushing
+    // in the same trigger that is flushing
     input.addData((0 until 20).map(i =>
       StreamEvent("i", 200L + i, vec(200 + i), 10000L + i, 0L, 0)) :+
       StreamEvent("q", 9000L, vec(205), 10050L, 1000L, 5): _*)
@@ -702,7 +776,7 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
 
-    // the hot query completed via the cross-batch merge, bit-equal to
+    // the hot query completed, bit-equal to
     // the exact top-5 over its maxTtl-clamped window (epoch 2, ts>=9050)
     val hotTruth = (0 until 20).map(i => (200L + i,
         Distances.l2(vec(205), vec(200 + i))))
@@ -937,7 +1011,7 @@ class StreamingSpec extends AnyFunSuite {
     VectorStreamJob.IndexCache.invalidateAll()
     val q2 = start()
     // epoch 2 retires epoch 1; a fresh query over epoch 2 must complete
-    // through the RECOVERED stateful merge in the same restarted job
+    // from the RECOVERED hot state in the same restarted job
     input.addData((0 until 20).map(i =>
       StreamEvent("i", 200L + i, vec(200 + i), 10000L + i, 0L, 0)) :+
       StreamEvent("q", 9100L, vec(207), 10050L, 1000L, 5): _*)
@@ -1477,4 +1551,21 @@ class StreamingSpec extends AnyFunSuite {
       .sortBy { case (id, d) => (d, id) }.take(5).map(_._1).toList
     assert(got == truth, s"filtered search over grown tier: $got != $truth")
   }
+}
+
+/** Routes a query whose first coordinate is [[FirstPartitionQueries.Mark]]
+ * to partition 0 only and every other query to all partitions; data
+ * routes like [[SimplePartitioner]]. */
+final case class FirstPartitionQueries(numPartitions: Int)
+    extends graft.partitioners.PartitionerModel {
+  override def dataPartitions(vec: Array[Float], id: Long): Array[Int] =
+    SimplePartitioner(numPartitions).dataPartitions(vec, id)
+  override def queryPartitions(vec: Array[Float]): Array[Int] =
+    if (vec(0) == FirstPartitionQueries.Mark) Array(0)
+    else Array.range(0, numPartitions)
+}
+
+object FirstPartitionQueries {
+  val Mark = 1000f
+  def marked(v: Array[Float]): Array[Float] = Mark +: v.tail
 }
