@@ -48,7 +48,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     // SURVEY §4.3 stretch: ORDER BY <distance> LIMIT k over a registered
-    // corpus is served from its sealed index (opt-in via KnnIndex.register)
-    ext.injectOptimizerRule(session => graft.plans.KnnProbeRewrite(session))
+    // corpus is served from its sealed index (opt-in via
+    // KnnIndex.register): matched right after analysis, and again after
+    // optimizer normalization, into one KnnScan leaf that plans as
+    // KnnServeExec
+    ext.injectPostHocResolutionRule(session => graft.plans.KnnScanRule(session))
+    ext.injectOptimizerRule(session => graft.plans.KnnScanRule(session))
+    ext.injectPlannerStrategy(_ => graft.plans.KnnStrategy)
   }
 }

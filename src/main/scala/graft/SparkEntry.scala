@@ -12,9 +12,12 @@ import graft.queries.{AnnQueries, EvalQueries, PartitionQueries, PqQueries, Rela
 object SparkEntry {
 
   /** Session settings every entry point needs (the events table stores
-   * TIMESTAMP(NANOS) which Spark only reads as raw int64). */
+   * TIMESTAMP(NANOS) which Spark only reads as raw int64), and the graft
+   * SQL extensions (functions, SQL kNN serving). Extensions apply when
+   * the builder creates the session, not to one `getOrCreate` returns. */
   def configure(builder: SparkSession.Builder): SparkSession.Builder =
     builder
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")

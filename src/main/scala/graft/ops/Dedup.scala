@@ -332,16 +332,17 @@ object Dedup {
    * non-self-loop edges (a, b). Star contraction: each round every
    * current super-node points to the minimum of its closed neighborhood
    * (pointers strictly decrease, so no cycles and the component minimum
-   * always survives as its own representative), the edge set is
-   * rewritten through those pointers, self-loops drop, and the round
-   * repeats on the CONTRACTED graph. Near-dup components are dense
-   * clusters, so the first round collapses most of the edge mass (a
-   * clique contracts in one round) — unlike plain label propagation,
-   * which re-joins the full edge set for every round of the diameter.
-   * Edges and the id→component mapping stay distributed. Throws if
-   * `maxIters` rounds don't converge — an adversarial long-path graph
-   * wants the alternating large-star/small-star variant (Kiveris et al.
-   * 2014), not silent wrong answers. */
+   * always survives as its own representative), pointer jumping then
+   * follows those pointers to their roots, the edge set is rewritten
+   * through the roots, self-loops drop, and the round repeats on the
+   * CONTRACTED graph. Near-dup components are dense clusters, so the
+   * first round collapses most of the edge mass (a clique contracts in
+   * one round) — unlike plain label propagation, which re-joins the full
+   * edge set for every round of the diameter. A path whose ids rise along
+   * it is one pointer chain, so it too contracts in one round, after
+   * log2(length) jumps. Edges and the id→component mapping stay
+   * distributed. Throws if `maxIters` rounds don't converge rather than
+   * return a wrong answer. */
   private def starContraction(edges0: DataFrame, // (a LONG, b LONG), a != b
       maxIters: Int): DataFrame = {
     // each round MUST truncate lineage (localCheckpoint, eager): an
@@ -369,13 +370,24 @@ object Dedup {
       val sym = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       val lbl1 = sym.groupBy("a").agg(min(col("b")).as("m"))
         .select(col("a").as("node"), least(col("a"), col("m")).as("lbl"))
-      // one pointer jump (lbl ∘ lbl): pointers stay within the component
-      // and strictly decrease, and a path now halves per round (O(log n)
-      // rounds) instead of shedding one edge per round. Every lbl value
-      // is itself an edge endpoint, so the inner self-join is total.
-      val hop = lbl1.select(col("node").as("pnode"), col("lbl").as("plbl"))
-      val lbl = checkpoint(lbl1.join(hop, col("lbl") === col("pnode"))
-        .select(col("node"), col("plbl").as("lbl")))
+      // pointer jumping to a fixed point (lbl := lbl ∘ lbl): pointers
+      // stay within the component and strictly decrease, so they form a
+      // forest whose roots point to themselves; each jump halves every
+      // node's distance to its root, and when no pointer moves every node
+      // points at a root. One jump per round would shed only two nodes
+      // per round off a chain whose ids rise along the path (n/2 rounds).
+      // Every lbl value is itself an edge endpoint, so the self-join is
+      // total.
+      var lbl = checkpoint(lbl1)
+      var moved = true
+      while (moved) {
+        val hop = lbl.select(col("node").as("pnode"), col("lbl").as("plbl"))
+        val next = checkpoint(lbl.join(hop, col("lbl") === col("pnode"))
+          .select(col("node"), col("plbl").as("lbl"),
+            (col("plbl") =!= col("lbl")).as("moved")))
+        moved = !next.where(col("moved")).isEmpty
+        lbl = next.select(col("node"), col("lbl"))
+      }
       // compose into the id -> component mapping (components with no
       // remaining edges keep their representative)
       mapping = checkpoint(mapping

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, FloatType, ArrayType}
 import graft.Metric
 import graft.functions.{CosineDistance, IpDistance, L2Distance}
@@ -18,11 +18,24 @@ import graft.functions.{CosineDistance, IpDistance, L2Distance}
  * stream job. This is the Spark-native surface on top of the same cold
  * tier: [[KnnIndex.register]] declares that kNN queries over a corpus
  * path should be answered by the HNSW sidecars of a cell-sealed
- * [[graft.store.ColdTier]] directory (built from the same rows), and the
- * injected optimizer rule [[KnnProbeRewrite]] rewrites the matching
- * logical pattern into the index probe's own logical plan — Spark's
- * `TakeOrderedAndProject` over a full distance scan becomes a
- * probeSegments-routed graph walk with zero corpus IO.
+ * [[graft.store.ColdTier]] directory (built from the same rows). One
+ * matcher, [[KnnScanRule]], recognizes the statement right after
+ * analysis and replaces it with one logical leaf, [[KnnScan]]; the
+ * planner maps that leaf to one physical operator, [[KnnServeExec]],
+ * which serves it when the statement executes. Nothing serves during
+ * analysis or optimization: `EXPLAIN` and `queryExecution.optimizedPlan`
+ * run no kernel, and the optimizer walks a one-node plan instead of a
+ * 128-element array of literal casts.
+ *
+ * Where the hooks live: [[graft.GraftExtensions]] injects the matcher as
+ * a post-hoc resolution rule and as an optimizer rule, plus the planner
+ * strategy; [[graft.SparkEntry.configure]] applies the extensions, so
+ * every session the program builds has them. [[KnnIndex.install]] adds
+ * the same matcher (as a late `extraOptimizations` rule) and strategy to
+ * a session built without them. The optimizer-time copies also catch
+ * shapes that only optimizer normalization exposes (a view whose filter
+ * sits inside its definition, an unwrapped cast, the window-rank idiom
+ * below).
  *
  * Registration is the opt-in: an index-served ORDER BY is APPROXIMATE
  * (graph recall — spec-gated ≥ the same bars as every other ANN surface
@@ -38,7 +51,12 @@ import graft.functions.{CosineDistance, IpDistance, L2Distance}
  *     LocalLimit k
  *       Sort [dist ASC] | [dist ASC, idCol ASC], global
  *         Project [idCol, Alias(distance(vecCol, foldable) | swapped) AS dist]
- *           LogicalRelation parquet(registered path)
+ *           [Filter <registered conjuncts>]
+ *             [SubqueryAlias / View] parquet relation (registered path)
+ *
+ * The query vector may be literal casts or a bound parameter
+ * (`spark.sql(text, Map("q" -> arr))` with `l2_distance(vec, :q)`): it is
+ * evaluated once, when the statement is matched.
  *
  * The optional second sort key is the deterministic-pagination tie-break
  * on the registered id column — the probe's merge contract already
@@ -67,8 +85,8 @@ import graft.functions.{CosineDistance, IpDistance, L2Distance}
  * silently changed).
  *
  * Which engine answers a matched statement, and what it costs
- * ([[graft.store.ColdTier.serveLocal]] decides at plan time; "warm" =
- * sidecars and decoded segments already resident in this process, within
+ * ([[KnnServeExec]] decides at execute time; "warm" = sidecars and
+ * decoded segments already resident in this process, within
  * `graft.coldtier.segmentCacheBytes`):
  *
  * | shape                                     | warm engine (in-process)          | jobs | fallback (cold, over budget, segment without sidecar) |
@@ -78,7 +96,12 @@ import graft.functions.{CosineDistance, IpDistance, L2Distance}
  * | any other literal `=`/`IN`/range          | graph probe + exact re-rank       | 0    | `searchIndexedLiteralFiltered` probe (~13 jobs)        |
  *
  * The warm engine and its fallback answer identically for the same tier
- * state; only where the work runs differs.
+ * state; only where the work runs differs. A registration whose tier is
+ * gone when the statement is matched keeps the exact plan; one whose
+ * tier fails while the statement executes runs the original plan.
+ * `EXPLAIN` shows `KnnServeExec`; after execution its SQL metrics (also
+ * in the SQL UI) name the engine, the fallback reason, the segments
+ * admitted, the rows scored and the kernel time.
  */
 object KnnIndex {
   /** @param filterColumns attribute columns sealed into the tier's
@@ -122,7 +145,7 @@ object KnnIndex {
       inWalk: Boolean = false)
 
   private val reg =
-    scala.collection.concurrent.TrieMap.empty[String, Registration]
+    new java.util.concurrent.ConcurrentHashMap[String, Registration]()
 
   private def norm(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
@@ -147,27 +170,35 @@ object KnnIndex {
   def unregister(corpusPath: String): Unit = reg.remove(norm(corpusPath))
   def clear(): Unit = reg.clear()
 
-  /** Install [[KnnProbeRewrite]] on an ALREADY-BUILT session (idempotent).
-   * `withExtensions` only applies at session construction — a session
-   * obtained from a shared `getOrCreate()` (Verify, perfbench, a
-   * shared test JVM) never saw [[graft.GraftExtensions]], so the rule
-   * rides `experimental.extraOptimizations` instead (a post-optimizer
-   * batch; the matched Limit/Sort/Project shape is stable there). A
-   * session built with the extensions applies the rule in the main
-   * batch and a second copy here would find its pattern already
-   * rewritten — still harmless, but the guard keeps the list clean. */
+  private[plans] def isEmpty: Boolean = reg.isEmpty
+
+  /** Install the SQL kNN matcher and operator on an ALREADY-BUILT session
+   * (idempotent). `withExtensions` only applies at session construction
+   * — a session obtained from a shared `getOrCreate()` (a shared test
+   * JVM, a user's own builder) may never have seen
+   * [[graft.GraftExtensions]] — so the matcher rides
+   * `experimental.extraOptimizations` (a post-optimizer batch; the
+   * matched Limit/Sort/Project shape is stable there) and the strategy
+   * `experimental.extraStrategies`. On a session built with the
+   * extensions the analysis-time copy has already replaced the
+   * statement, and this one returns at once. */
   def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[KnnProbeRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ KnnProbeRewrite(spark)
+    val exp = spark.experimental
+    if (!exp.extraOptimizations.exists(_.isInstanceOf[KnnScanRule]))
+      exp.extraOptimizations = exp.extraOptimizations :+ KnnScanRule(spark)
+    if (!exp.extraStrategies.contains(KnnStrategy))
+      exp.extraStrategies = KnnStrategy +: exp.extraStrategies
   }
 
   private[plans] def lookup(paths: Seq[String]): Option[Registration] =
-    paths.flatMap(p => reg.get(norm(p))).headOption
+    paths.iterator.flatMap(p => Option(reg.get(norm(p)))).nextOption()
 }
 
-case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+/** The SQL kNN matcher: replaces a matched statement (see [[KnnIndex]])
+ * with a [[KnnScan]] leaf. The same rule runs after analysis (post-hoc
+ * resolution) and after optimization; a plan without a registered
+ * corpus or without a LIMIT returns at once. */
+case class KnnScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def metricOf(e: Expression): Option[(Metric, Expression, Expression)] =
     e match {
@@ -200,12 +231,15 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Root paths of the underlying file relation, looking through
+  /** Root paths of the underlying file relation, looking through the
+   * analyzed name scope of a temp view (SubqueryAlias, View) and through
    * pass-through (attribute-only) Projects that column pruning may have
    * inserted between the matched Project and the scan. */
   private def relationPaths(plan: LogicalPlan): Seq[String] = plan match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
       fs.location.rootPaths.map(_.toString)
+    case SubqueryAlias(_, child) => relationPaths(child)
+    case v: View => relationPaths(v.child)
     case Project(ps, child) if ps.forall(_.isInstanceOf[AttributeReference]) =>
       relationPaths(child)
     case _ => Seq.empty
@@ -217,9 +251,14 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** The contract eventTime window of a registered corpus (scaladoc on
-   * [[singleQuery]]): [-2^62, 2^62 - 1], the widest span a (qtime, ttl)
-   * pair can express without overflowing `qtime - ttl`. */
+  /** The contract eventTime window of a registered corpus: [-2^62,
+   * 2^62 - 1], the widest span a (qtime, ttl) pair can express without
+   * overflowing `qtime - ttl`. Without a matched time predicate a
+   * statement probes this whole window, so negative eventTimes are
+   * in-window; eventTimes beyond ±2^62 (three orders past nanosecond
+   * epoch stamps) are out of contract for a registered corpus, and user
+   * bounds are clamped to it ([[decompose]]), which also keeps
+   * `ceil - floor <= Long.MaxValue` overflow-free. */
   private val FloorDef: Long = Long.MaxValue / 2 - Long.MaxValue // -2^62
   private val CeilDef: Long = Long.MaxValue / 2                  // 2^62 - 1
 
@@ -355,7 +394,12 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       : Option[(Seq[(AttributeReference, Seq[Expression])],
                 Seq[(AttributeReference, String, Expression)],
                 Option[(Long, Long)])] = {
-    val cs = conjuncts(cond)
+    // analysis coerces `label IN (1, 2)` over a BIGINT column to
+    // `cast(label as bigint) IN (...)`; drop such same-type casts as the
+    // optimizer's SimplifyCasts would
+    val cs = conjuncts(cond.transform {
+      case c: Cast if c.child.dataType == c.dataType => c.child
+    })
     def asFilter(e: Expression)
         : Option[(AttributeReference, Seq[Expression])] = e match {
       case EqualTo(a: AttributeReference, l)
@@ -427,8 +471,9 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
+    if (KnnIndex.isEmpty || !plan.containsPattern(TreePattern.LIMIT)) return plan
     if (spark.conf.get("spark.graft.knn.rewrite", "true") != "true") return plan
-    plan.transformDown {
+    plan.transformDownWithPruning(_.containsPattern(TreePattern.LIMIT)) {
       // one or two ascending sort keys: the distance alone, or the
       // deterministic pagination form `ORDER BY dist, id` — the probe's
       // merge contract already orders by (dist, id), so the tie-broken
@@ -438,234 +483,91 @@ case class KnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           Sort(SortOrder(sortRef: AttributeReference, Ascending, _, _)
               +: restOrders,
             true, Project(projList, below), _))
-          if restOrders.length <= 1 && relationPaths(below match {
-            case Filter(_, ch) => ch
-            case ch => ch
-          }).nonEmpty =>
-        val (condOpt, rel) = below match {
-          case Filter(c, ch) => (Some(c), ch)
-          case ch => (None, ch)
-        }
-        // the probe construction runs eager Spark work (catalog read,
-        // broadcast builds) at PLAN time: a stale registration — coldDir
-        // deleted or corrupted after register — must degrade to the
-        // exact scan the query would have run unregistered, not fail the
-        // whole optimization pass (and not leak a half-built probe)
-        val rewritten = try { for {
-          r <- KnnIndex.lookup(relationPaths(rel))
-          // a WHERE must decompose into the declared shapes — one
-          // equality on a sealed attribute and/or a range on the sealed
-          // time column; otherwise stay on the exact path
-          specs <- condOpt match {
-            case None => Some((Seq.empty, Seq.empty, None))
-            case Some(c) => decompose(c, r.filterColumns, r.timeColumn)
-          }
-          (fspecs, rspecs, window) = specs
-          distAlias <- projList.collectFirst {
-            case al @ Alias(d, _) if al.exprId == sortRef.exprId => (al, d)
-          }
-          (metric, a, b) <- metricOf(distAlias._2)
-          if metric == r.metric
-          (vecAttr, qv) <- vecAndQuery(a, b)
-          if vecAttr.name == r.vecCol
-          idAttr <- projList.collectFirst {
-            case at: AttributeReference if at.name == r.idCol => at
-          }
-          // a second sort key must be the registered id column ascending
-          // (the probe's own tie-break); anything else keeps exact
-          if restOrders.forall {
-            case SortOrder(ar: AttributeReference, Ascending, _, _) =>
-              ar.exprId == idAttr.exprId
-            case _ => false
-          }
-          // schema parity with the probe output (id LONG, dist DOUBLE) —
-          // an exprId swap under a different type would corrupt parents
-          if idAttr.dataType == org.apache.spark.sql.types.LongType
-          if distAlias._1.dataType == DoubleType
-          // the ONLY projected columns are the id and the distance — the
-          // shape the probe answers without hydration. A SECOND alias of
-          // the same distance expression is tolerated (the window-rank
-          // idiom's `_w0` sort key, see the object scaladoc) — every
-          // such alias re-exposes the probe's dist below.
-          if projList.forall {
-            case at: AttributeReference => at.name == r.idCol
-            case al: Alias => al.exprId == distAlias._1.exprId ||
-              al.child.semanticEquals(distAlias._2)
-            case _ => false
-          }
-        } yield {
-          val (floorTs, ceilTs) = window.getOrElse((FloorDef, CeilDef))
-          val filters = fspecs.map { case (attr, lits) =>
-            (attr.name,
-              lits.map(l => org.apache.spark.sql.catalyst
-                .CatalystTypeConverters.convertToScala(
-                  l.eval(), l.dataType)),
-              lits.head.dataType)
-          }
-          val ranges = rspecs.map { case (attr, op, l) =>
-            graft.store.ColdTier.RangeBound(attr.name, op,
-              org.apache.spark.sql.catalyst.CatalystTypeConverters
-                .convertToScala(l.eval(), l.dataType), l.dataType)
-          }
-          // PLAN-TIME IN-PROCESS serving: the registered probe runs on
-          // this thread over the cached sidecars / decoded segments and
-          // its k (id, dist) rows splice as ONE bare LocalRelation — no
-          // probe DataFrame, no optimizer pass over it, no Spark job
-          // (the distributed probe costs 7-13 jobs per statement).
-          // None = a precondition missed (cold or oversized tier,
-          // unsealed segment) — the DataFrame probe below re-derives the
-          // same engine decision and serves the same answer.
-          val direct: Option[Array[(Long, Double)]] =
-            graft.store.ColdTier.serveLocal(spark, r.coldDir, qv, ceilTs,
-              ceilTs - floorTs, k, filters, ranges, metric, r.snapshot,
-              efSearch = r.efSearch, probeSegments = r.probeSegments,
-              shortlist = math.max(r.shortlist, k),
-              overfetch = r.filterOverfetch, inWalk = r.inWalk)
-          direct match {
-            case Some(rows) =>
-              logInfo(s"graft: serving ORDER BY ${metric} distance " +
-                s"LIMIT $k over ${relationPaths(rel).head} in-process " +
-                s"from ${r.coldDir}")
-              // rows are ascending (dist, id) — the merge heap's
-              // drainSorted order, the same total order the DataFrame
-              // splice below re-asserts driver-side
-              val attrs = projList.map(_.toAttribute)
-              val proj = UnsafeProjection.create(attrs.map(_.dataType).toArray)
-              val data = rows.map { case (id, d) =>
-                proj(org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-                  projList.map {
-                    case _: AttributeReference => id
-                    case _ => d
-                  })).copy(): org.apache.spark.sql.catalyst.InternalRow
-              }.toIndexedSeq
-              LocalRelation(attrs, data, isStreaming = false)
-            case None => spliceProbe(r, k, metric, qv, floorTs, ceilTs,
-              filters, ranges, projList, rel)
-          }
-        } } catch {
-          case scala.util.control.NonFatal(e) =>
-            logWarning("graft: kNN index rewrite failed at plan time " +
-              s"(stale registration over ${relationPaths(rel)}?) — " +
-              s"falling back to the exact scan: $e")
-            None
-        }
-        rewritten.getOrElse(lim) // no registration / shape mismatch: exact path
+          if k > 0 && restOrders.length <= 1 &&
+            lim.getTagValue(KnnScan.ExactOnly).isEmpty =>
+        // no registration / shape mismatch: exact path
+        scanFor(lim, k, sortRef, restOrders, projList, below).getOrElse(lim)
     }
   }
 
-  /** The DataFrame probe route: build the index probe, optimize its
-   * plan, splice it under the original output attributes (see the
-   * comments inline — this was the whole rewrite body before the
-   * plan-time direct path landed; behavior unchanged). */
-  private def spliceProbe(r: KnnIndex.Registration, k: Int, metric: Metric,
-      qv: Array[Float], floorTs: Long, ceilTs: Long,
-      filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
-      ranges: Seq[graft.store.ColdTier.RangeBound],
-      projList: Seq[NamedExpression], rel: LogicalPlan): LogicalPlan = {
-          val probe = (filters, ranges) match {
-            case (Seq(), Seq()) =>
-              graft.store.ColdTier.searchIndexedFast(spark,
-                r.coldDir, singleQuery(qv, floorTs, ceilTs), k, metric,
-                efSearch = r.efSearch,
-                probeSegments = r.probeSegments,
-                shortlist = math.max(r.shortlist, k),
-                snapshot = r.snapshot)
-                .select(col("id"), col("dist"))
-            case _ =>
-              // literal-filtered probe — single equality, IN-list,
-              // multi-column conjunction, or numeric RANGE bands: the
-              // graph shortlist is filter-oblivious, so it is
-              // over-fetched (the registered filterOverfetch as a
-              // FLOOR, raised by the attr-stats histogram selectivity
-              // estimate when the literal is rare — adaptiveOverfetch
-              // inside searchIndexedLiteralFiltered), then ONLY the
-              // shortlisted ids are hydrated (attributes ride the
-              // candidate-bounded re-rank join) under the full literal
-              // conjunction. Every filter value is known at plan time,
-              // so segment admission is ONE plan-time set (attr-stats
-              // mayMatch over the whole IN list incl. histogram GAP
-              // pruning, interval overlap per range column, per-column
-              // sets intersected). Candidate-bounded IO instead of the
-              // bare probe's zero IO — still no corpus scan.
-              graft.store.ColdTier.searchIndexedLiteralFiltered(spark,
-                r.coldDir, singleQuery(qv, floorTs, ceilTs), k, filters,
-                metric, shortlist = math.max(r.shortlist, k),
-                efSearch = r.efSearch, probeSegments = r.probeSegments,
-                overfetch = r.filterOverfetch, ranges = ranges,
-                inWalk = r.inWalk, snapshot = r.snapshot)
-                .select(col("id"), col("dist"))
-          }
-          // splice the OPTIMIZED probe plan: this rule runs after the
-          // main optimizer batches (extraOptimizations), so an analyzed
-          // splice would carry ResolvedHint operators (rerankExact's
-          // broadcast hints) past EliminateResolvedHint and fail
-          // physical planning; optimizing the probe in its own pass
-          // converts them to join hints first (no recursion risk — a
-          // probe plan never contains the registered-corpus ORDER BY
-          // shape this rule matches)
-          val probePlan = probe.queryExecution.optimizedPlan
-          val pid = probePlan.output.find(_.name == "id").get
-          val pdist = probePlan.output.find(_.name == "dist").get
-          // re-expose the probe's columns under the ORIGINAL attribute
-          // ids so every parent operator keeps resolving; re-assert the
-          // ordering contract the matched Sort promised — (dist, id) is
-          // the probe's own total order, a superset of the single-key
-          // promise and exactly the tie-broken two-key one.
-          //
-          // MEMORY-SERVED probes (ColdTier.serveExactFromMemory — the
-          // admission-collapsed exact kernel over warm cached segments)
-          // come back as a LocalRelation of <= k driver-resident rows.
-          // Wrapping those in a logical Sort + Project forced ONE
-          // single-task Spark job per spark.sql statement (neither
-          // SortExec nor ProjectExec has an executeCollect shortcut,
-          // and this rule runs AFTER ConvertToLocalRelation, so the
-          // optimizer never collapses the pair), and under a
-          // concurrent serving load every statement's job serializes
-          // through the DAGScheduler event loop — measured r16 twin:
-          // 23.7 q/s across 16 client threads where the kernel's own
-          // work is milliseconds. Sorting the local rows DRIVER-side,
-          // evaluating the rename projection driver-side too, and
-          // emitting ONE bare LocalRelation keeps both contracts
-          // (LocalTableScanExec preserves row order and serves
-          // executeCollect with ZERO jobs) — the whole statement is
-          // job-free. Scan-engine fallbacks are never LocalRelations,
-          // so they keep the distributed Sort + Project.
-          val out: Seq[NamedExpression] = projList.map {
-            case at: AttributeReference =>
-              Alias(pid, at.name)(exprId = at.exprId)
-            case al: Alias => Alias(pdist, al.name)(exprId = al.exprId)
-            case other => other
-          }
-          logInfo(s"graft: serving ORDER BY ${metric} distance LIMIT $k " +
-            s"over ${relationPaths(rel).head} from index ${r.coldDir}")
-          probePlan match {
-            case lr: LocalRelation =>
-              val di = lr.output.indexWhere(_.exprId == pdist.exprId)
-              val ii = lr.output.indexWhere(_.exprId == pid.exprId)
-              val sorted = lr.data.sortBy(r => (r.getDouble(di), r.getLong(ii)))
-              val proj = UnsafeProjection.create(out, lr.output)
-              LocalRelation(out.map(_.toAttribute),
-                sorted.map(r => proj(r).copy()), lr.isStreaming)
-            case p =>
-              Project(out, Sort(
-                Seq(SortOrder(pdist, Ascending), SortOrder(pid, Ascending)),
-                global = true, p))
-          }
-  }
-
-  /** The rewrite's probe row over an inclusive [floorTs, ceilTs]
-   * freshness window. Without a matched time predicate the window is the
-   * full contract span [-2^62, 2^62-1] — negative eventTimes are
-   * in-window (an earlier MaxValue/2 ttl silently excluded them from a
-   * rewritten top-k). The FULL Long range is unreachable with a (qtime,
-   * ttl) window without overflowing `qtime - ttl`; eventTimes beyond
-   * ±2^62 (4.6e18 — three orders past nanosecond epoch stamps) are out
-   * of contract for a registered corpus, and user bounds are clamped to
-   * it ([[decompose]]), which also keeps `ceil - floor <= Long.MaxValue`
-   * overflow-free. */
-  private def singleQuery(qv: Array[Float], floorTs: Long, ceilTs: Long) = {
-    import spark.implicits._
-    Seq((0L, qv, ceilTs, ceilTs - floorTs))
-      .toDF("qid", "qv", "qtime", "ttl")
+  /** The [[KnnScan]] that serves a matched Limit/Sort/Project, if the
+   * rest of the statement fits a registration. */
+  private def scanFor(lim: LogicalPlan, k: Int, sortRef: AttributeReference,
+      restOrders: Seq[SortOrder], projList: Seq[NamedExpression],
+      below: LogicalPlan): Option[KnnScan] = {
+    val (condOpt, rel) = below match {
+      case Filter(c, ch) => (Some(c), ch)
+      case ch => (None, ch)
+    }
+    val paths = relationPaths(rel)
+    if (paths.isEmpty) return None
+    // evaluating the query array or a filter literal may throw (an
+    // overflowing cast): the statement keeps its exact plan, which
+    // raises the same error when it runs
+    try for {
+      r <- KnnIndex.lookup(paths)
+      // a WHERE must decompose into the declared shapes — one
+      // equality on a sealed attribute and/or a range on the sealed
+      // time column; otherwise stay on the exact path
+      specs <- condOpt match {
+        case None => Some((Seq.empty, Seq.empty, None))
+        case Some(c) => decompose(c, r.filterColumns, r.timeColumn)
+      }
+      (fspecs, rspecs, window) = specs
+      distAlias <- projList.collectFirst {
+        case al @ Alias(d, _) if al.exprId == sortRef.exprId => (al, d)
+      }
+      (metric, a, b) <- metricOf(distAlias._2)
+      if metric == r.metric
+      (vecAttr, qv) <- vecAndQuery(a, b)
+      if vecAttr.name == r.vecCol
+      idAttr <- projList.collectFirst {
+        case at: AttributeReference if at.name == r.idCol => at
+      }
+      // a second sort key must be the registered id column ascending
+      // (the probe's own tie-break); anything else keeps exact
+      if restOrders.forall {
+        case SortOrder(ar: AttributeReference, Ascending, _, _) =>
+          ar.exprId == idAttr.exprId
+        case _ => false
+      }
+      // schema parity with the probe output (id LONG, dist DOUBLE): the
+      // operator fills each output slot by its type
+      if idAttr.dataType == org.apache.spark.sql.types.LongType
+      if distAlias._1.dataType == DoubleType
+      // the ONLY projected columns are the id and the distance — the
+      // shape the probe answers without hydration. A SECOND alias of
+      // the same distance expression is tolerated (the window-rank
+      // idiom's `_w0` sort key, see the object scaladoc) — every
+      // such alias re-exposes the probe's dist.
+      if projList.forall {
+        case at: AttributeReference => at.name == r.idCol
+        case al: Alias => al.exprId == distAlias._1.exprId ||
+          al.child.semanticEquals(distAlias._2)
+        case _ => false
+      }
+      // a tier deleted since registration serves nothing: keep the exact
+      // plan (one metadata call; a tier that fails later, while the
+      // statement runs, makes the operator run this same exact plan)
+      if graft.store.ColdTier.tierPresent(spark, r.coldDir, r.snapshot)
+    } yield {
+      val filters = fspecs.map { case (attr, lits) =>
+        (attr.name,
+          lits.map(l => org.apache.spark.sql.catalyst
+            .CatalystTypeConverters.convertToScala(l.eval(), l.dataType)),
+          lits.head.dataType)
+      }
+      val ranges = rspecs.map { case (attr, op, l) =>
+        graft.store.ColdTier.RangeBound(attr.name, op,
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToScala(l.eval(), l.dataType), l.dataType)
+      }
+      KnnScan(r, qv, k, filters, ranges, window.getOrElse((FloorDef, CeilDef)),
+        projList.map(_.toAttribute), lim)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        logWarning(s"graft: kNN statement over $paths not matched: $e")
+        None
+    }
   }
 }

@@ -176,6 +176,11 @@ object EvalQueries {
    * the OPTIMIZED plan that still touch the registered corpus parquet —
    * nonEmpty means the index rewrite failed to fire. One copy so the
    * scan-detection rule can never diverge across the gated idioms. */
+  /** The engine a served SQL kNN statement ran with, read from its
+   * operator's metrics after it executed. */
+  private def servedBy(df: org.apache.spark.sql.DataFrame): Option[String] =
+    graft.plans.KnnServeExec.engineOf(df.queryExecution.executedPlan)
+
   private def corpusScansOf(df: org.apache.spark.sql.DataFrame)
       : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
     df.queryExecution.optimizedPlan.collect {
@@ -1177,7 +1182,7 @@ object EvalQueries {
       // SURVEY §4.3 stretch as an ORACLE-GATED surface: the SQL a user
       // writes — `SELECT vec_id, l2_distance(embedding, <literal>) AS
       // dist FROM corpus ORDER BY dist LIMIT n` — over the REGISTERED
-      // embeddings corpus is optimizer-rewritten (KnnProbeRewrite) into
+      // embeddings corpus is matched (KnnScanRule) into a KnnScan served by
       // the cell-routed graph probe with ZERO file scans at query time.
       // The entry THROWS if the plan still scans the corpus, so a
       // rewrite regression turns the driver's gate red instead of
@@ -1327,8 +1332,8 @@ object EvalQueries {
       // ~32 q/s for the graph probe at 0.9468 on the 10x tier), NOT the
       // graph probe the committed sidecars would otherwise serve. The
       // entry THROWS if (a) the corpus is still scanned (rewrite did
-      // not fire) or (b) the graph probe served the plan
-      // (ColdTier.literalServedVia != "exact"). Because the serving
+      // not fire) or (b) the graph probe served the statement (the
+      // KnnServeExec engine metric is not "exact"). Because the serving
       // kernel is exact, the DuckDB twin is the FULL independent
       // filtered kNN — no aux replay, the strongest oracle shape here.
       val tmp = alignedIndexedTier(s, dir)
@@ -1348,18 +1353,20 @@ object EvalQueries {
         val arr = qv.map(f => s"CAST($f AS FLOAT)")
           .mkString("array(", ",", ")")
         e.createOrReplaceTempView("graft_knn_corpus_alx")
-        graft.store.ColdTier.literalServedVia.remove()
         val df0 = s.sql(
           s"""SELECT vec_id, l2_distance(embedding, $arr) AS dist
              |FROM graft_knn_corpus_alx WHERE label = $lbl
              |ORDER BY dist LIMIT $SqlRewriteAlignedK""".stripMargin)
-        // forcing the optimized plan runs the rewrite AND the serving
-        // decision on THIS thread — both gates observe exactly this plan
         val corpusScans = corpusScansOf(df0)
         require(corpusScans.isEmpty, "knn_sql_rewrite_aligned_exact: " +
           "the filtered ORDER BY plan still scans the corpus — the " +
           "index rewrite did not fire")
-        require(graft.store.ColdTier.literalServedVia.get == "exact",
+        // the operator picks the engine when the statement runs and
+        // reports it in its metrics (the LIMIT over the k-row statement
+        // plans away)
+        val ran = df0.limit(SqlRewriteAlignedK)
+        ran.collect()
+        require(servedBy(ran).contains("exact"),
           "knn_sql_rewrite_aligned_exact: the GRAPH PROBE served an " +
             "attr-aligned tier — the exact-kernel serving decision " +
             "did not fire (admission should collapse the label literal " +
@@ -1385,7 +1392,7 @@ object EvalQueries {
       // exactKernelSegments, strictly fewer than the 10-segment
       // catalog), so the EXACT kernel must serve. THROWS if (a) the
       // corpus is still scanned (rewrite did not fire) or (b) the graph
-      // probe served (ColdTier.literalServedVia != "exact"). Because
+      // probe served (the KnnServeExec engine metric is not "exact"). Because
       // the serving kernel is exact, the DuckDB twin is the FULL
       // independent IN-filtered kNN — no aux replay.
       val tmp = alignedIndexedTier(s, dir)
@@ -1403,7 +1410,6 @@ object EvalQueries {
         val arr = qv.map(f => s"CAST($f AS FLOAT)")
           .mkString("array(", ",", ")")
         e.createOrReplaceTempView("graft_knn_corpus_alin")
-        graft.store.ColdTier.literalServedVia.remove()
         val df0 = s.sql(
           s"""SELECT vec_id, l2_distance(embedding, $arr) AS dist
              |FROM graft_knn_corpus_alin
@@ -1414,7 +1420,9 @@ object EvalQueries {
           "knn_sql_rewrite_aligned_exact_in: the IN-list ORDER BY " +
             "plan still scans the corpus — the index rewrite did not " +
             "fire")
-        require(graft.store.ColdTier.literalServedVia.get == "exact",
+        val ran = df0.limit(SqlRewriteAlignedInK)
+        ran.collect()
+        require(servedBy(ran).contains("exact"),
           "knn_sql_rewrite_aligned_exact_in: the GRAPH PROBE served " +
             "an attr-aligned tier for a collapsing IN literal — the " +
             "exact-kernel serving decision did not fire")

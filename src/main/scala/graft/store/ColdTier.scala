@@ -2704,12 +2704,57 @@ object ColdTier {
      * off the instance makes staleness impossible by construction: a
      * re-decoded generation starts empty, an immutable segment path can
      * never serve rows the mask was not computed against, and a
-     * delete-log append changes the signature half of the key. Bounded:
-     * a serving workload has a handful of literal shapes; the clear()
-     * guard caps pathological churn (metadata, never results). */
-    private[store] val maskMemo =
-      scala.collection.concurrent.TrieMap.empty[String, Array[Boolean]]
+     * delete-log append changes the signature half of the key. Bounded
+     * by [[MaskMemo]]'s one-entry eviction (metadata, never results). */
+    private[store] val maskMemo = new MaskMemo(MaskMemoEntries)
   }
+
+  /** Masks kept per decoded segment. */
+  private[store] val MaskMemoEntries = 16
+
+  /** A fixed-capacity mask memo with second-chance (CLOCK) eviction: a
+   * full memo evicts ONE entry, the first under the clock hand whose
+   * reference bit is clear, and clears the bits it passes. A shape that
+   * statements keep reusing (a hot `label = x`) keeps its bit set and
+   * survives any run of one-off shapes (the many `IN` lists naming the
+   * same label), which a clear-everything bound would wipe together with
+   * it. Linear over at most `cap` keys under the instance lock. */
+  private[store] final class MaskMemo(cap: Int) {
+    private val keys = new Array[String](cap)
+    private val masks = new Array[Array[Boolean]](cap)
+    private val used = new Array[Boolean](cap)
+    private var size = 0
+    private var hand = 0
+
+    def get(key: String): Array[Boolean] = synchronized {
+      var i = 0
+      while (i < size) {
+        if (keys(i) == key) { used(i) = true; return masks(i) }
+        i += 1
+      }
+      null
+    }
+
+    /** Memoize `mask` under `key`; returns the mask the memo holds (an
+     * entry a racing statement stored first wins). */
+    def put(key: String, mask: Array[Boolean]): Array[Boolean] = synchronized {
+      val held = get(key)
+      if (held != null) return held
+      val slot =
+        if (size < cap) { size += 1; size - 1 }
+        else {
+          while (used(hand)) { used(hand) = false; hand = (hand + 1) % cap }
+          val s = hand
+          hand = (hand + 1) % cap
+          s
+        }
+      keys(slot) = key; masks(slot) = mask; used(slot) = false
+      mask
+    }
+  }
+
+  /** Survival masks computed (memo misses), for the memo specs. */
+  private[store] val maskComputations = new java.util.concurrent.atomic.AtomicLong()
 
   /** Warm segment store for admission-collapsed serving — the
    * [[SidecarCache]] pattern applied to segment DATA. A serving workload
@@ -3746,26 +3791,27 @@ object ColdTier {
         col("col.id").as("id"), col("col.dist").as("dist"))
   }
 
-  /** Serving-path instrumentation for [[searchIndexedLiteralFiltered]]:
-   * which kernel answered the LAST literal-filtered call on THIS thread
-   * — "exact" (the admission-collapsed exact scan kernel, recall 1.0 by
-   * construction) or "probe" (the graph probe). Set at PLAN time (the
-   * decision is plan-time work, running on whichever thread forces the
-   * plan — for the SQL rewrite, the thread that reads
-   * queryExecution.optimizedPlan). Thread-local so parallel suites
-   * cannot pollute each other's observation. Consumed by gates/specs
-   * that must THROW when the wrong kernel serves
-   * (knn_sql_rewrite_aligned_exact, KnnRewriteSpec). */
+  /** Serving-path instrumentation for the DIRECT DataFrame API
+   * ([[searchIndexedLiteralFiltered]]): which kernel answered the LAST
+   * literal-filtered call on THIS thread — "exact" (the
+   * admission-collapsed exact scan kernel, recall 1.0 by construction) or
+   * "probe" (the graph probe). Set when the call builds its plan.
+   * Thread-local so parallel suites cannot pollute each other's
+   * observation. The SQL operator does not use it: a served statement
+   * reports its engine through [[graft.plans.KnnServeExec]]'s metrics.
+   * It stays for the direct API only, until one engine planner
+   * (`ServePlan`, ROADMAP direction 5) returns the decision instead. */
   val literalServedVia = new ThreadLocal[String]
 
-  /** Which ENGINE the exact serving decision used for the LAST call on
-   * THIS thread: "memory" (the process-local kernel over
+  /** Which ENGINE the direct API's exact serving decision used for the
+   * LAST call on THIS thread: "memory" (the process-local kernel over
    * [[SegmentDataCache]]-resident segments — zero Spark jobs per
    * statement after the per-segment warm load) or "scan" (the lazy
    * distributed scan plan). Observability sibling of
    * [[literalServedVia]], which stays "exact" for both: the kernel, the
    * predicate semantics and the result contract are identical — only
-   * the execution locality differs. */
+   * the execution locality differs. Direct API only, like
+   * [[literalServedVia]]. */
   val exactServedFrom = new ThreadLocal[String]
 
   /** The query rows of a PLAN-TIME-enumerable query set: Some(rows) iff
@@ -3820,21 +3866,21 @@ object ColdTier {
       (org.apache.spark.sql.catalyst.expressions.Expression,
         Seq[org.apache.spark.sql.catalyst.expressions.Attribute])]
 
-  private def localPredicateMask(spark: SparkSession, sd: SegmentData,
+  /** The literal predicate compiled against one segment meta schema;
+   * None when the schema lacks a referenced filter column. A statement
+   * creates it once per distinct schema, and only on a mask-memo miss. */
+  private def literalPredicateFor(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
-      ranges: Seq[RangeBound],
-      tomb: scala.collection.mutable.LongMap[Long]): Array[Boolean] = {
-    val n = sd.metaRows.length
-    val mask = new Array[Boolean](n)
+      ranges: Seq[RangeBound])
+      : Option[org.apache.spark.sql.catalyst.expressions.BasePredicate] = {
     val needed = (filters.map(_._1) ++ ranges.map(_.column)).distinct
-    if (!needed.forall(c => sd.metaSchema.fieldNames.contains(c)))
-      return mask // all-false
-    val key = (literalShapeKey(filters, ranges), sd.metaSchema,
+    if (!needed.forall(c => schema.fieldNames.contains(c))) return None
+    val key = (literalShapeKey(filters, ranges), schema,
       spark.sessionState.conf.sessionLocalTimeZone)
     val (cond, childOut) = resolvedPredicates.getOrElse(key, {
       val probe = spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        sd.metaSchema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       val analyzed = probe.where(literalPredicate(probe, filters, ranges))
         .queryExecution.analyzed
       val resolved = analyzed.collectFirst {
@@ -3849,13 +3895,24 @@ object ColdTier {
     val pred = org.apache.spark.sql.catalyst.expressions.Predicate
       .create(cond, childOut)
     pred.initialize(0)
-    var i = 0
-    while (i < n) {
-      if (pred.eval(sd.metaRows(i)))
-        mask(i) = tomb == null || !tomb.get(sd.ids(i)).exists(sd.times(i) <= _)
-      i += 1
+    Some(pred)
+  }
+
+  private def localPredicateMask(sd: SegmentData,
+      pred: Option[org.apache.spark.sql.catalyst.expressions.BasePredicate],
+      tomb: scala.collection.mutable.LongMap[Long]): Array[Boolean] = {
+    maskComputations.incrementAndGet()
+    val n = sd.metaRows.length
+    val mask = new Array[Boolean](n)
+    pred.foreach { p =>
+      var i = 0
+      while (i < n) {
+        if (p.eval(sd.metaRows(i)))
+          mask(i) = tomb == null || !tomb.get(sd.ids(i)).exists(sd.times(i) <= _)
+        i += 1
+      }
     }
-    mask
+    mask // all-false when the schema lacks a filter column
   }
 
   private val KeySep = "\u0000"
@@ -3960,15 +4017,18 @@ object ColdTier {
     val shapeKey =
       if (tombSig == null) null
       else literalShapeKey(filters, ranges) + KeySep + tombSig
+    val preds = scala.collection.mutable.HashMap.empty[
+      org.apache.spark.sql.types.StructType,
+      Option[org.apache.spark.sql.catalyst.expressions.BasePredicate]]
+    def compute(sd: SegmentData) = localPredicateMask(sd,
+      preds.getOrElseUpdate(sd.metaSchema,
+        literalPredicateFor(spark, sd.metaSchema, filters, ranges)), tomb)
     val masks = datas.map { sd =>
-      if (shapeKey == null)
-        localPredicateMask(spark, sd, filters, ranges, tomb)
-      else sd.maskMemo.getOrElse(shapeKey, {
-        if (sd.maskMemo.size > 16) sd.maskMemo.clear()
-        val m = localPredicateMask(spark, sd, filters, ranges, tomb)
-        sd.maskMemo.putIfAbsent(shapeKey, m)
-        m
-      })
+      if (shapeKey == null) compute(sd)
+      else {
+        val held = sd.maskMemo.get(shapeKey)
+        if (held != null) held else sd.maskMemo.put(shapeKey, compute(sd))
+      }
     }
     Some((datas, masks))
   }
@@ -3992,7 +4052,9 @@ object ColdTier {
       metric: Metric,
       // restrict the scan to rows whose id is in a candidate set (the
       // graph route's exact re-rank); null = every masked row
-      keep: Long => Boolean = null)
+      keep: Long => Boolean = null,
+      // rows offered to the heaps, summed over the queries (null = none)
+      scored: java.util.concurrent.atomic.LongAdder = null)
       : Option[Array[Array[(Long, Int, Long, Double)]]] = {
     val distFn = Distances.forMetric(metric)
     val l2Abandon = metric == Metric.L2
@@ -4001,6 +4063,7 @@ object ColdTier {
     def runOne(qi: Int): Unit = {
       val (qid, qv, qtime, ttl) = qRows(qi)
       val h = new graft.functions.BoundedTopK(k)
+      var offered = 0L
       var si = 0
       while (si < datas.length) {
         if (abort.get()) return
@@ -4010,15 +4073,18 @@ object ColdTier {
         while (i < n) {
           if (mask(i) && (keep == null || keep(sd.ids(i)))) {
             val ts = sd.times(i)
-            if (ts >= qtime - ttl && ts <= qtime)
+            if (ts >= qtime - ttl && ts <= qtime) {
               graft.ops.Ann.offerBounded(h, qv, sd.vecs(i), sd.ids(i),
                 l2Abandon, distFn)
+              offered += 1
+            }
           }
           i += 1
           if ((i & 4095) == 0 && abort.get()) return
         }
         si += 1
       }
+      if (scored != null) scored.add(offered)
       val (ids, ds) = h.drainSorted()
       results(qi) = Array.tabulate(ids.length)(j => (qid, j + 1, ids(j), ds(j)))
     }
@@ -4105,8 +4171,8 @@ object ColdTier {
   }
 
   /** The per-column admission sets of a literal plan, intersected — ONE
-   * copy shared by [[searchIndexedLiteralFiltered]] and the plan-time
-   * direct path [[serveExactLiteralLocal]] so the two serving surfaces
+   * copy shared by [[searchIndexedLiteralFiltered]] and the in-process
+   * route [[serveLocal]] so the two serving surfaces
    * can never disagree on what a literal admits. */
   private def literalAdmission(spark: SparkSession, dir: String,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
@@ -4134,14 +4200,32 @@ object ColdTier {
         cat.filter(s => a(s.segmentId)).map(_.count).sum <= maxRows
     }.map(a => cat.filter(s => a(s.segmentId)))
 
-  /** PLAN-TIME in-process serving for the SQL rewrite
-   * ([[graft.plans.KnnProbeRewrite]]): the registered probe for ONE
-   * plan-time query, run on the calling thread over process-resident
-   * data. Returns the top-k (id, dist) rows ascending (dist, id); the
-   * rewrite splices them as one bare LocalRelation, so a warm statement
-   * runs zero Spark jobs (r16 ProfileSqlServe measured the DataFrame
-   * route's per-statement construction at ~37 ms single-thread, and the
-   * distributed probe adds 7-13 jobs). The engine decision is the
+  /** What [[serveLocal]] answered and how: the top-k (id, dist) rows
+   * ascending (dist, id), the engine ("exact": the memory kernel over an
+   * admission-collapsed literal plan; "probe": the in-process graph
+   * probe), the segments it admitted and the rows it scored. */
+  final case class Served(rows: Array[(Long, Double)], engine: String,
+      segments: Int, rowsScored: Long)
+
+  /** [[serveLocal]] calls in this process, for the plan specs that pin
+   * where serving runs. */
+  private[graft] val serveLocalCalls = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Whether the catalog a registration serves from exists: the live
+   * `_segments` of `dir`, or the pinned copy of `snapshot`. One metadata
+   * call; a deleted tier fails it. */
+  private[graft] def tierPresent(spark: SparkSession, dir: String,
+      snapshot: Option[Long]): Boolean = {
+    val p = new Path(snapshot.map(v => s"${snapPath(dir, v)}/_segments")
+      .getOrElse(statsPath(dir)))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** In-process serving for the SQL operator
+   * ([[graft.plans.KnnServeExec]], at execute time): the registered
+   * probe for ONE query, run on the calling thread over process-resident
+   * data, so a warm statement runs zero Spark jobs (the distributed probe
+   * costs 7-13 jobs per statement). The engine decision is the
    * distributed route's, unchanged:
    *  - an admission-COLLAPSED literal plan ([[exactCollapse]]) runs the
    *    warm memory kernel over [[SegmentDataCache]]-resident segments,
@@ -4158,14 +4242,14 @@ object ColdTier {
    *    kernel of [[rerankExact]] (a non-admitted segment's copy of a
    *    candidate id fails the predicate there, so skipping it is
    *    lossless).
-   * None = the caller keeps the distributed plan, which re-derives the
+   * None = the caller runs the distributed probe, which re-derives the
    * same decision and answers identically. The graph route needs the
    * local engine on ([[ExactServeLocalKey]]), every in-window segment to
    * carry a centroid and a committed sidecar, the routed sidecars plus
    * any decoded segments to fit [[SegmentCacheBytesKey]], and the delete
-   * log to fit the tombstone broadcast budget. Sets [[literalServedVia]]
-   * (and, on the memory kernel, [[exactServedFrom]]) only when it serves
-   * a literal plan. Bit-equality with the distributed route is gated by
+   * log to fit the tombstone broadcast budget. It reports its engine in
+   * the returned [[Served]], never through the direct API's
+   * thread-locals. Bit-equality with the distributed route is gated by
    * KnnRewriteSpec and the knn_sql_rewrite* oracle entries. */
   private[graft] def serveLocal(spark: SparkSession, dir: String,
       qv: Array[Float], qtime: Long, ttl: Long, k: Int,
@@ -4175,7 +4259,8 @@ object ColdTier {
       probeSegments: Int = Int.MaxValue, shortlist: Int = 50,
       overfetch: Int = 4, inWalk: Boolean = false,
       exactKernelSegments: Int = 4, exactKernelMaxRows: Long = 1L << 20)
-      : Option[Array[(Long, Double)]] = {
+      : Option[Served] = {
+    serveLocalCalls.incrementAndGet()
     val literal = filters.nonEmpty || ranges.nonEmpty
     if (k <= 0 || (literal && shortlist < k)) return None
     val cat = snapshot.map(v => catalogAt(spark, dir, v))
@@ -4184,25 +4269,22 @@ object ColdTier {
       if (literal) literalAdmission(spark, dir, filters, ranges, cat)
       else None
     val query = Array((0L, qv, qtime, ttl))
-    def rows(results: Array[Array[(Long, Int, Long, Double)]]) =
-      results(0).map { case (_, _, id, d) => (id, d) }
+    val scored = new java.util.concurrent.atomic.LongAdder
+    def served(results: Array[Array[(Long, Int, Long, Double)]],
+        engine: String, segments: Int) =
+      Served(results(0).map { case (_, _, id, d) => (id, d) }, engine,
+        segments, scored.sum())
     if (literal) exactCollapse(cat, admissible, exactKernelSegments,
         exactKernelMaxRows) match {
       case Some(segs) =>
-        if (segs.isEmpty) {
-          // the distributed route's shared empty early-return
-          literalServedVia.set("exact")
-          return Some(Array.empty)
-        }
+        // the distributed route's shared empty early-return
+        if (segs.isEmpty) return Some(Served(Array.empty, "exact", 0, 0L))
         return for {
           (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
             snapshot, segs)
-          results <- runExactKernel(spark, datas, masks, query, k, metric)
-        } yield {
-          literalServedVia.set("exact")
-          exactServedFrom.set("memory")
-          rows(results)
-        }
+          results <- runExactKernel(spark, datas, masks, query, k, metric,
+            scored = scored)
+        } yield served(results, "exact", segs.length)
       case None => ()
     }
 
@@ -4214,10 +4296,7 @@ object ColdTier {
     val floor = qtime - ttl
     val fresh = cat.filter(s => s.maxTs >= floor && s.minTs <= qtime &&
       admissible.forall(_.contains(s.segmentId)))
-    if (fresh.isEmpty) {
-      if (literal) literalServedVia.set("probe")
-      return Some(Array.empty)
-    }
+    if (fresh.isEmpty) return Some(Served(Array.empty, "probe", 0, 0L))
     if (fresh.exists(_.centroid == null)) return None
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fresh.forall(s => indexSealed(fs, s.path))) return None
@@ -4252,11 +4331,13 @@ object ColdTier {
         case None => return None
       }
       val h = new graft.functions.BoundedTopK(k)
+      var offered = 0L
       probe(math.max(k, shortlist)).foreach { case (id, d) =>
-        if (tomb == null || !tomb.contains(id)) h.offer(d, id)
+        if (tomb == null || !tomb.contains(id)) { h.offer(d, id); offered += 1 }
       }
       val (ids, ds) = h.drainSorted()
-      Some(Array.tabulate(ids.length)(j => (ids(j), ds(j))))
+      Some(Served(Array.tabulate(ids.length)(j => (ids(j), ds(j))), "probe",
+        fresh.length, offered))
     } else {
       val depth = shortlist *
         literalOverfetch(spark, dir, filters, ranges, overfetch, inWalk, cat)
@@ -4269,11 +4350,8 @@ object ColdTier {
           c
         }
         results <- runExactKernel(spark, datas, masks, query, k, metric,
-          keep = cands.contains)
-      } yield {
-        literalServedVia.set("probe")
-        rows(results)
-      }
+          keep = cands.contains, scored = scored)
+      } yield served(results, "probe", fresh.length)
     }
   }
 

@@ -132,18 +132,39 @@ class DedupCcSpec extends AnyFunSuite {
     assert(got.size == 2000 && got.values.forall(_ == 1L))
   }
 
-  test("a rising 100-node chain on the fallback fails its round limit instead of hanging") {
+  /** Components of a chain whose ids rise along the path, on the
+   * distributed fallback with the default round limit, checked equal to
+   * the driver path. */
+  private def risingChain(n: Long): Unit = {
     import spark.implicits._
-    // each round shortens a chain whose ids rise along the path by only
-    // two nodes, so 100 nodes need about 50 rounds: more than 25
-    val chain = (1L until 100L).map(i => (i, i + 1)).toDF("i", "j")
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("i", "j")
+    val (driver, distributed) = bothPaths(chain)
+    assert(driver == distributed)
+    assert(distributed.size == n && distributed.values.forall(_ == 1L))
+  }
+
+  test("a rising 100-node chain converges on the fallback") {
+    risingChain(100L)
+  }
+
+  test("a rising 2,000-node chain converges on the fallback") {
+    risingChain(2000L)
+  }
+
+  test("the fallback fails its round limit instead of hanging") {
+    import spark.implicits._
+    // 1 - 5 - 2: nodes 1 and 2 are both local minima, so the first round
+    // leaves the edge (1, 2) and a second round is needed
+    val pairs = Seq((1L, 5L), (5L, 2L)).toDF("i", "j")
     val run = scala.concurrent.Future(scala.util.Try(
-      Dedup.connectedComponents(chain, 25, 0)))(
+      Dedup.connectedComponents(pairs, 1, 0)))(
       scala.concurrent.ExecutionContext.global)
     val got = scala.concurrent.Await.result(run,
       scala.concurrent.duration.Duration(120, "s"))
     val e = intercept[IllegalArgumentException](got.get)
-    assert(e.getMessage.contains("no convergence in 25 rounds"))
+    assert(e.getMessage.contains("no convergence in 1 rounds"))
+    assert(toMap(Dedup.connectedComponents(pairs, 2, 0)) ==
+      Map(1L -> 1L, 2L -> 1L, 5L -> 1L))
   }
 
   test("both paths read an empty or all-self-loop pair list as no rows") {

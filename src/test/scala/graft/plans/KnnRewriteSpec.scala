@@ -62,6 +62,10 @@ class KnnRewriteSpec extends AnyFunSuite {
       }
     }.flatten
 
+  /** The engine the statement's kNN operator served with (after it ran). */
+  private def engineOf(df: org.apache.spark.sql.DataFrame): Option[String] =
+    KnnServeExec.engineOf(df.queryExecution.executedPlan)
+
   test("ORDER BY l2_distance LIMIT k over a registered corpus is served from the index, results match the probe and truth") {
     spark.sparkContext.setLogLevel("ERROR")
     val (corpusPath, coldDir, rows) = fixture()
@@ -698,18 +702,18 @@ class KnnRewriteSpec extends AnyFunSuite {
       val corpus = spark.read.parquet(corpusPath)
       corpus.createOrReplaceTempView("knn_alcorpus")
       val arr = q.map(f => s"CAST($f AS FLOAT)").mkString("array(", ",", ")")
-      ColdTier.literalServedVia.remove()
       val df = spark.sql(
         s"""SELECT id, l2_distance(vec, $arr) AS dist
            |FROM knn_alcorpus WHERE label = 2
            |ORDER BY dist LIMIT 10""".stripMargin)
-      val paths = scanPaths(df) // forces the optimized plan + decision
+      val paths = scanPaths(df)
       assert(!paths.exists(_.contains(corpusPath)),
         s"corpus scan survived the aligned filtered rewrite: $paths")
-      assert(ColdTier.literalServedVia.get == "exact",
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+      // the operator decides at execute time and reports in its metrics
+      assert(engineOf(df) == Some("exact"),
         "the GRAPH PROBE served an attr-aligned tier — admission " +
           "collapses label=2 to one segment, the exact kernel must serve")
-      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       // BIT-equality with the unindexed truth: the kernel is exact, so
       // ids AND order must match the full-scan filtered top-k exactly
       val truth = rows.filter(_._4 == 2)
@@ -751,10 +755,10 @@ class KnnRewriteSpec extends AnyFunSuite {
            |FROM knn_alc_jf WHERE label = 2
            |ORDER BY dist LIMIT 10""".stripMargin)
       // warm pass loads the segment into SegmentDataCache + caches
-      ColdTier.literalServedVia.remove()
-      stmt().collect()
-      assert(ColdTier.literalServedVia.get == "exact")
-      assert(ColdTier.exactServedFrom.get == "memory",
+      val warm = stmt()
+      warm.collect()
+      // "exact" from the operator is the in-process memory kernel
+      assert(engineOf(warm) == Some("exact"),
         "aligned statement should serve from the warm segment cache")
       // r16: the rewrite emits the kernel's rows as a PRE-SORTED
       // LocalRelation — no logical Sort, so the statement executes via
@@ -798,16 +802,19 @@ class KnnRewriteSpec extends AnyFunSuite {
       val q = rows(42)._2
       spark.read.parquet(corpusPath).createOrReplaceTempView("knn_alc_inv")
       val arr = q.map(f => s"CAST($f AS FLOAT)").mkString("array(", ",", ")")
-      def stmt() = spark.sql(
-        s"""SELECT id, l2_distance(vec, $arr) AS dist
-           |FROM knn_alc_inv WHERE label = 2
-           |ORDER BY dist LIMIT 10""".stripMargin)
-        .collect().map(_.getLong(0)).toSeq
-      // warm: statements serve from the memoized skeleton
-      ColdTier.literalServedVia.remove()
-      val before = stmt()
-      assert(ColdTier.literalServedVia.get == "exact")
-      assert(ColdTier.exactServedFrom.get == "memory")
+      // (ids, engine) of one statement
+      def served() = {
+        val df = spark.sql(
+          s"""SELECT id, l2_distance(vec, $arr) AS dist
+             |FROM knn_alc_inv WHERE label = 2
+             |ORDER BY dist LIMIT 10""".stripMargin)
+        (df.collect().map(_.getLong(0)).toSeq, engineOf(df))
+      }
+      def stmt() = served()._1
+      // warm: statements serve from the memoized skeleton (the in-process
+      // memory kernel reports "exact")
+      val (before, warmEngine) = served()
+      assert(warmEngine == Some("exact"))
       stmt() // second statement rides the memo
       assert(!before.contains(999999L))
 
@@ -818,8 +825,8 @@ class KnnRewriteSpec extends AnyFunSuite {
       ColdTier.seal(
         Seq((999999L, q, 500L, 2)).toDF("id", "vec", "eventTime", "label"),
         coldDir, 5L)
-      val afterSeal = stmt()
-      assert(ColdTier.exactServedFrom.get == "memory",
+      val (afterSeal, sealEngine) = served()
+      assert(sealEngine == Some("exact"),
         "the refreshed admission should still collapse onto the kernel")
       // rows(42) holds the SAME vector (dist 0), so the (dist, id) tie
       // breaks to id 42 first and the fresh exact match lands at rank 2
@@ -830,8 +837,8 @@ class KnnRewriteSpec extends AnyFunSuite {
       // so the NEXT statement must drop it with no other invalidation
       assert(ColdTier.sealDeletes(
         Seq((999999L, 1000L)).toDF("id", "ts"), coldDir, batchId = 77L))
-      val afterDel = stmt()
-      assert(ColdTier.exactServedFrom.get == "memory")
+      val (afterDel, delEngine) = served()
+      assert(delEngine == Some("exact"))
       assert(!afterDel.contains(999999L),
         s"tombstoned id must vanish from the warm path, got $afterDel")
       assert(afterDel == before,
@@ -941,8 +948,8 @@ class KnnRewriteSpec extends AnyFunSuite {
           snapshot = Some(v))
       }).orderBy("rn").collect().map(r => (r.getLong(2), r.getDouble(3)))
         .toSeq
-      // (rows, Spark jobs) of one statement
-      def run(sql: String): (Seq[(Long, Double)], Int) = {
+      // (rows, Spark jobs, engine) of one statement
+      def run(sql: String): (Seq[(Long, Double)], Int, Option[String]) = {
         val jobs = new java.util.concurrent.atomic.AtomicInteger()
         val l = new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
@@ -951,16 +958,16 @@ class KnnRewriteSpec extends AnyFunSuite {
         }
         spark.sparkContext.addSparkListener(l)
         try {
-          val got = spark.sql(sql).collect()
-            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          val df = spark.sql(sql)
+          val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
           Thread.sleep(1000) // listener bus drains asynchronously
-          (got, jobs.get())
+          (got, jobs.get(), engineOf(df))
         } finally spark.sparkContext.removeSparkListener(l)
       }
       val served = stmts.map { case (shape, sql) =>
         spark.sql(sql).collect() // warm: sidecars, segments, masks
-        val (got, jobs) = run(sql)
-        if (shape == "in") assert(ColdTier.literalServedVia.get == "probe",
+        val (got, jobs, engine) = run(sql)
+        if (shape == "in") assert(engine == Some("probe"),
           "a 6-segment IN must be served by the graph probe")
         assert(jobs == 0, s"warm $shape statement ran $jobs Spark job(s)")
         assert(got.length == 10)
@@ -977,9 +984,10 @@ class KnnRewriteSpec extends AnyFunSuite {
       // same answer
       spark.conf.set(ColdTier.SegmentCacheBytesKey, "0")
       try stmts.foreach { case (shape, sql) =>
-        val (got, jobs) = run(sql)
+        val (got, jobs, engine) = run(sql)
         assert(jobs > 0, s"$shape: a zero budget must keep the " +
           "distributed plan")
+        assert(engine == Some("distributed"), s"$shape: engine $engine")
         assert(got == served(shape), s"$shape: fallback answer differs")
       } finally spark.conf.unset(ColdTier.SegmentCacheBytesKey)
 
@@ -992,9 +1000,10 @@ class KnnRewriteSpec extends AnyFunSuite {
       sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(sidecar, true)
       stmts.foreach { case (shape, sql) =>
-        val (got, jobs) = run(sql)
+        val (got, jobs, engine) = run(sql)
         assert(jobs > 0, s"$shape: a segment without a sidecar must keep " +
           "the distributed plan")
+        assert(engine == Some("distributed"), s"$shape: engine $engine")
         assert(got == direct(shape), s"$shape: fallback answer differs")
       }
     } finally KnnIndex.clear()
@@ -1023,5 +1032,208 @@ class KnnRewriteSpec extends AnyFunSuite {
       assert(ColdTier.probeCandidates(spark, coldDir, queries, 10,
         probeSegments = 1).count() > 0)
     } finally KnnIndex.unregister(corpusPath)
+  }
+
+  /** The SQL top-10 statement over `view` with the query as literal casts. */
+  private def literalSql(view: String, q: Array[Float], where: String = "") = {
+    val arr = q.map(f => s"CAST($f AS FLOAT)").mkString("array(", ",", ")")
+    s"SELECT id, l2_distance(vec, $arr) AS dist FROM $view $where " +
+      "ORDER BY dist, id LIMIT 10"
+  }
+
+  test("EXPLAIN and optimizedPlan run no kernel; the statement serves when it runs") {
+    val (corpusPath, coldDir, rows) = alignedFixture()
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 5, shortlist = 64, filterColumns = Set("label"))
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_explain")
+      val sql = literalSql("knn_explain", rows(42)._2, "WHERE label = 2")
+      val df = spark.sql(sql)
+      val calls = ColdTier.serveLocalCalls.get()
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[KnnScan],
+        s"optimized plan is not one KnnScan leaf:\n${df.queryExecution.optimizedPlan}")
+      val exec = df.queryExecution.executedPlan
+      val explained = spark.sql(s"EXPLAIN $sql").collect().map(_.getString(0))
+        .mkString("\n")
+      assert(explained.contains("KnnServeExec"), explained)
+      df.explain(true)
+      assert(ColdTier.serveLocalCalls.get() == calls,
+        "planning or EXPLAIN ran the serving kernel")
+      val op = KnnServeExec.find(exec).get
+      assert(op.metrics.values.forall(_.value <= 0),
+        s"metrics moved before execution: ${op.metrics}")
+      assert(KnnServeExec.engineOf(exec) == Some("none"))
+      val got = df.collect().map(_.getLong(0)).toSeq
+      assert(ColdTier.serveLocalCalls.get() == calls + 1)
+      assert(engineOf(df) == Some("exact"))
+      assert(op.metrics("segments").value == 1L,
+        "label = 2 admits its one aligned segment")
+      assert(op.metrics("rowsScored").value == rows.count(_._4 == 2))
+      assert(got.length == 10)
+      val truth = rows.filter(_._4 == 2)
+        .map { case (id, v, _, _) => (id, Distances.l2(rows(42)._2, v)) }
+        .sortBy { case (id, d) => (d, id) }.take(10).map(_._1)
+      assert(got == truth)
+    } finally KnnIndex.clear()
+  }
+
+  test("a parent ORDER BY dist, id over a served statement adds no SortExec") {
+    val (corpusPath, coldDir, rows) = fixture()
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 4, shortlist = 64)
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_parent")
+      val inner = literalSql("knn_parent", rows(9)._2)
+      val df = spark.sql(s"SELECT id, dist FROM ($inner) t ORDER BY dist, id")
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val sorts = df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.SortExec => s
+      }
+      assert(sorts.isEmpty, s"parent sort kept:\n${df.queryExecution.executedPlan}")
+      assert(engineOf(df).isDefined, df.queryExecution.toString)
+      assert(got == spark.sql(inner).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      assert(got == got.sortBy { case (id, d) => (d, id) })
+    } finally KnnIndex.clear()
+  }
+
+  test("stale registration at execute time: the operator runs the exact plan") {
+    val (corpusPath, coldDir, rows) = fixture()
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 4, shortlist = 64)
+      val q = rows(3)._2
+      val df = spark.read.parquet(corpusPath)
+        .select(col("id"), Distances.l2(col("vec"), lit(q)).as("dist"))
+        .orderBy("dist").limit(10)
+      assert(scanPaths(df).isEmpty, "the statement must match while the tier exists")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(coldDir))
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(engineOf(df) == Some("scan"))
+      assert(KnnServeExec.fallbackOf(df.queryExecution.executedPlan) ==
+        Some("stale registration"))
+      val truth = rows.map { case (id, v, _) => (id, Distances.l2(q, v)) }
+        .sortBy { case (id, d) => (d, id) }.take(10)
+      assert(got == truth, "the exact fallback must answer the exact top-k")
+    } finally KnnIndex.clear()
+  }
+
+  test("a session without the extensions serves through KnnIndex.install") {
+    val (corpusPath, coldDir, rows) = fixture()
+    // a session built by a plain builder: no GraftExtensions
+    val plain = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      try SparkSession.builder().getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    }
+    assert(plain ne spark)
+    assert(!plain.sessionState.analyzer.postHocResolutionRules
+      .exists(_.isInstanceOf[KnnScanRule]), "the plain session has the extensions")
+    KnnIndex.install(plain)
+    KnnIndex.install(plain) // idempotent
+    assert(plain.experimental.extraOptimizations.count(_.isInstanceOf[KnnScanRule]) == 1)
+    assert(plain.experimental.extraStrategies.count(_ == KnnStrategy) == 1)
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 4, shortlist = 64)
+      val q = rows(5)._2
+      def stmt(s: SparkSession) = s.read.parquet(corpusPath)
+        .select(col("id"), Distances.l2(col("vec"), lit(q)).as("dist"))
+        .orderBy(col("dist"), col("id")).limit(10)
+      val df = stmt(plain)
+      // the late rule serves it: the analyzed plan keeps the corpus scan
+      assert(!df.queryExecution.analyzed.exists(_.isInstanceOf[KnnScan]))
+      assert(scanPaths(df).isEmpty)
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(engineOf(df) == Some("probe"))
+      assert(got == stmt(spark).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    } finally KnnIndex.clear()
+  }
+
+  test("non-kNN plans come out of analysis unchanged") {
+    import spark.implicits._
+    val (corpusPath, coldDir, rows) = fixture()
+    val rule = KnnScanRule(spark)
+    val corpus = spark.read.parquet(corpusPath)
+    val q = rows(0)._2
+    val other = Seq((1L, 2.0), (3L, 1.0)).toDF("id", "dist")
+    val plans = Seq(
+      corpus.orderBy("id").limit(5),
+      corpus.select(col("id"), Distances.l2(col("vec"), lit(q)).as("dist"))
+        .orderBy(col("dist").desc).limit(5),
+      corpus.groupBy((col("id") % 4).as("g")).count().limit(3),
+      other.orderBy("dist").limit(1),
+      corpus.join(other, "id").limit(2))
+    def unchanged(tag: String): Unit = plans.foreach { df =>
+      val p = df.queryExecution.analyzed
+      assert(!p.exists(_.isInstanceOf[KnnScan]), s"$tag: matched\n$p")
+      assert(rule(p) eq p, s"$tag: the rule changed\n$p")
+    }
+    unchanged("no registration")
+    try {
+      KnnIndex.register(corpusPath, coldDir)
+      unchanged("registered")
+      val noLimit = corpus.select(col("id"), Distances.l2(col("vec"), lit(q))
+        .as("dist")).orderBy("dist").queryExecution.analyzed
+      assert(rule(noLimit) eq noLimit)
+    } finally KnnIndex.clear()
+  }
+
+  test("a parameter-bound query vector is served by the same KnnScan") {
+    val (corpusPath, coldDir, rows) = filteredFixture()
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 4, shortlist = 64, filterColumns = Set("label"))
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_param")
+      val q = rows(42)._2
+      val df = spark.sql(
+        """SELECT id, l2_distance(vec, :q) AS dist FROM knn_param
+          |WHERE label = :label ORDER BY dist, id LIMIT 10""".stripMargin,
+        Map("q" -> q, "label" -> 1))
+      val scan = df.queryExecution.optimizedPlan match {
+        case s: KnnScan => s
+        case p => fail(s"a bound query vector did not match:\n$p")
+      }
+      assert(scan.query.sameElements(q))
+      assert(scan.filters.map(f => (f._1, f._2)) == Seq(("label", Seq(1))))
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(engineOf(df).isDefined)
+      val literal = spark.sql(literalSql("knn_param", q, "WHERE label = 1"))
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == literal, "bound and literal statements must agree")
+    } finally KnnIndex.clear()
+  }
+
+  test("=, IN and unfiltered statements over a BIGINT label match at analysis") {
+    import spark.implicits._
+    val rows = clustered(400).map { case (id, v, t) => (id, v, t, id % 10) }
+    val corpusPath = Files.createTempDirectory("knnrw-lcorpus").toString
+    rows.map(r => (r._1, r._2, r._4)).toDF("id", "vec", "label")
+      .write.mode("overwrite").parquet(corpusPath)
+    val coldDir = Files.createTempDirectory("knnrw-ltier").toString
+    ColdTier.sealMany(rows.toDF("id", "vec", "eventTime", "label")
+      .withColumn("segmentId", (col("id") % 4).cast("long")), coldDir)
+    ColdTier.sealIndexes(spark, coldDir, 0L until 4L, Metric.L2, m = 8,
+      efConstruction = 64)
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 4, shortlist = 64, filterColumns = Set("label"))
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_long")
+      val q = rows(11)._2
+      Seq("" -> ((_: Long) => true), "WHERE label = 3" -> ((l: Long) => l == 3L),
+          "WHERE label IN (3, 1)" -> ((l: Long) => l == 3L || l == 1L)).foreach {
+        case (where, keep) =>
+          val df = spark.sql(literalSql("knn_long", q, where))
+          assert(df.queryExecution.analyzed.isInstanceOf[KnnScan],
+            s"'$where' was not matched at analysis:\n${df.queryExecution.analyzed}")
+          val got = df.collect().map(_.getLong(0))
+          assert(got.length == 10 && got.forall(id => keep(id % 10)), s"'$where': ${got.toList}")
+      }
+    } finally KnnIndex.clear()
   }
 }

@@ -2768,7 +2768,7 @@ class ColdTierSpec extends AnyFunSuite {
         firstWaveFraction = 1.0, terminationFactor = 1.0)
       .collect().sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
     def served() = ColdTier.serveLocal(spark, dir, qv, 1000L, 100000L, 5,
-      Nil, Nil).getOrElse(fail("the warm graph route must serve")).map(_._1).toSeq
+      Nil, Nil).getOrElse(fail("the warm graph route must serve")).rows.map(_._1).toSeq
     assert(searched().head == 42L && served().head == 42L)
     assert(ColdTier.sealDeletesLocal(spark, Seq((42L, 42L)), dir, 9L))
     val (s, l) = (searched(), served())

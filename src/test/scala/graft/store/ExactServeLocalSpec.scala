@@ -464,4 +464,65 @@ class ExactServeLocalSpec extends AnyFunSuite {
     val (sig2, bytes2) = ColdTier.listingSigAndBytes(fs, p)
     assert(sig2 != sig && bytes2 == 412L)
   }
+
+  test("mask memo: 20 one-off IN shapes leave a warm = statement's mask memoized") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("exact-serve-maskmemo").toString
+    val rnd = new java.util.Random(83L)
+    // segment 0 mixes labels 0-9, segment 1 holds label 99: every
+    // literal below collapses onto segment 0 and shares its mask memo
+    val rows = (0 until 500).map { i =>
+      (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat), i.toLong,
+        if (i < 400) (i % 10).toLong else 99L)
+    }
+    Seq(0 until 400, 400 until 500).zipWithIndex.foreach { case (r, seg) =>
+      ColdTier.seal(rows.slice(r.head, r.last + 1)
+        .toDF("id", "vec", "eventTime", "label"), dir, seg.toLong)
+    }
+    ColdTier.sealAttrStats(spark, dir, "label")
+    val qv = rows(17)._2
+    val lt = org.apache.spark.sql.types.LongType
+    def serve(labels: Seq[Long]) = {
+      val s = ColdTier.serveLocal(spark, dir, qv, 100000L, 1000000L, k,
+        Seq(("label", labels, lt)), Nil, shortlist = 8).get
+      assert(s.engine == "exact" && s.segments == 1)
+      val truth = rows.filter(r => labels.contains(r._4))
+        .map(r => (r._1, Distances.l2(qv, r._2)))
+        .sortBy { case (id, d) => (d, id) }.take(k).map(_._1)
+      assert(s.rows.map(_._1).toSeq == truth, s"label IN $labels")
+      s.rows.toSeq
+    }
+    val eq = Seq(3L)
+    val first = serve(eq)
+    val computed = ColdTier.maskComputations.get()
+    assert(serve(eq) == first)
+    assert(ColdTier.maskComputations.get() == computed, "the warm = statement recomputed its mask")
+    val shapes = (for (a <- 0L to 9L; b <- (a + 1) to 9L) yield Seq(a, b)).take(20)
+    shapes.foreach(serve)
+    assert(ColdTier.maskComputations.get() == computed + 20,
+      "each new IN shape computes its mask once")
+    assert(serve(eq) == first)
+    assert(ColdTier.maskComputations.get() == computed + 20,
+      "the one-off IN shapes evicted the warm = statement's mask")
+  }
+
+  test("MaskMemo evicts one entry, never a reused one, and keeps masks as stored") {
+    val memo = new ColdTier.MaskMemo(4)
+    val hot = Array(true, false, true)
+    assert(memo.put("hot", hot) eq hot)
+    assert(memo.get("hot") eq hot)
+    val cold = (0 until 40).map(i => s"cold-$i" -> Array.fill(3)(i % 2 == 0))
+    cold.foreach { case (key, m) =>
+      assert(memo.put(key, m) eq m)
+      assert(memo.get("hot") eq hot, s"$key evicted the reused entry")
+    }
+    // the last three one-off entries fill the other slots, bit-equal
+    cold.takeRight(3).foreach { case (key, m) =>
+      assert(memo.get(key).sameElements(m))
+    }
+    assert(memo.get(cold.head._1) == null)
+    // a racing second put keeps the first mask
+    val again = Array(false, false, false)
+    assert(memo.put("hot", again) eq hot)
+  }
 }

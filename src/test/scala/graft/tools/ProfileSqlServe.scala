@@ -78,12 +78,10 @@ object ProfileSqlServe {
     }
 
     // warm-up + serving-decision gates
-    graft.store.ColdTier.literalServedVia.remove()
-    spark.sql(sqlText(qPairs.head)).collect()
-    require(graft.store.ColdTier.literalServedVia.get == "exact",
-      "expected the exact kernel to serve")
-    require(graft.store.ColdTier.exactServedFrom.get == "memory",
-      "expected the warm memory engine to serve")
+    val warm = spark.sql(sqlText(qPairs.head))
+    warm.collect()
+    require(graft.plans.KnnServeExec.engineOf(warm.queryExecution.executedPlan)
+      .contains("exact"), "expected the warm exact kernel to serve")
 
     // --- phase timing, single thread over 64 statements
     val phaseN = math.min(64, qPairs.length)
@@ -107,8 +105,8 @@ object ProfileSqlServe {
     }
     def ms(n: Long) = n / 1e6 / phaseN
     println(f"per-statement (1 thread, n=$phaseN): parse ${ms(tParse)}%.2f ms, " +
-      f"+analyze ${ms(tAnalyze)}%.2f ms, +optimize(rewrite+kernel) ${ms(tOptimize)}%.2f ms, " +
-      f"+physical+collect ${ms(tCollect)}%.2f ms")
+      f"+analyze(match) ${ms(tAnalyze)}%.2f ms, +optimize ${ms(tOptimize)}%.2f ms, " +
+      f"+physical+collect(kernel) ${ms(tCollect)}%.2f ms")
 
     // --- concurrent run with the stack sampler
     val hist = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
@@ -128,7 +126,7 @@ object ProfileSqlServe {
         else if (has("ColdTier") && has("catalog")) "coldtier.catalog"
         else if (has("serveExactFromMemory")) "coldtier.serveOther"
         else if (has("ColdTier")) "coldtier.other"
-        else if (has("KnnProbeRewrite") || has("graft.plans")) "rewrite.other"
+        else if (has("graft.plans")) "rewrite.other"
         else if (has("codegen")) "codegen"
         else if (has("catalyst.parser")) "parse"
         else if (has("QueryPlanningTracker") || has("Analyzer") ||
