@@ -86,7 +86,6 @@ final case class Sax(paaSize: Int, width: Int, normalizationThreshold: Double)
     require(paaSize * width < 32, "The size of the SAX word is too large.")
     1 << (paaSize * width)
   }
-  def maxWordBig: BigInt = BigInt(1) << (paaSize * width)
 }
 
 object Sax {

@@ -29,7 +29,7 @@ object Recall {
     atK(results, truth, k).agg(avg("recall")).collect()(0).getDouble(0)
 
   /** Latency stats over a per-result latency column —
-   * [[graft.streaming.VectorStreamJob.mergePartials]] emits `latency_ms`
+   * [[graft.streaming.VectorStreamJob.mergePartialsLocal]] emits `latency_ms`
    * (merge stamp − routing stamp, the reference's searchCompleteTime −
    * queryEventTime). One row per query (latency repeats per rank). */
   def latency(results: DataFrame, latencyCol: String = "latency_ms"): DataFrame =

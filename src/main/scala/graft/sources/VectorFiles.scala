@@ -101,9 +101,6 @@ object VectorFiles {
       .toDF("id", "vec")
   }
 
-  def readFvecs(spark: SparkSession, path: String): DataFrame = read(spark, path, F32)
-  def readBvecs(spark: SparkSession, path: String): DataFrame = read(spark, path, U8)
-
   /** Ground-truth ivecs -> (qid LONG, ids ARRAY<LONG>) (reference
    * GroundTruthResultIterator.java). */
   def readIvecs(spark: SparkSession, path: String): DataFrame = {

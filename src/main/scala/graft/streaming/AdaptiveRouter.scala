@@ -28,11 +28,13 @@ import graft.streaming.VectorStreamJob.{Routed, StreamEvent}
  *    partition its insert may have reached within maxTtl.
  *
  * Downstream, the routed stream feeds the keyed store operator
- * ([[VectorStreamJob.partials]]); Structured Streaming does not chain
- * two arbitrary stateful operators in one query, so a deployment runs
- * router and store as two queries bridged by an exactly-once channel
- * (e.g. Kafka or files) — the same split the reference has between its
- * partitioner operator and keyed backends.
+ * ([[VectorStreamJob.partials]]). Spark does chain two Append-mode
+ * `flatMapGroupsWithState` operators in one query; [[runPipeline]]
+ * still runs router and store as two queries bridged by an exactly-once
+ * channel (e.g. Kafka or files) — the same split the reference has
+ * between its partitioner operator and keyed backends — so the
+ * parallelism-1 router and the keyed store checkpoint and restart
+ * independently.
  */
 object AdaptiveRouter {
 
@@ -78,9 +80,11 @@ object AdaptiveRouter {
     val search = partials.writeStream.outputMode(OutputMode.Append)
       .option("checkpointLocation", s"$checkpointRoot/search")
       .foreachBatch { (batch: Dataset[VectorStreamJob.PartialResult], _: Long) =>
-        val cached = batch.persist()
-        try sink(VectorStreamJob.mergePartials(cached.toDF(), k))
-        finally { cached.unpersist(); () }
+        // trigger-bounded: one trigger's partials
+        val parts = batch.collect().toSeq
+        val s = batch.sparkSession
+        import s.implicits._
+        sink(VectorStreamJob.mergePartialsLocal(parts, k).toDF())
       }
       .start()
     (router, search)
@@ -141,6 +145,11 @@ object AdaptiveRouter {
               val ps = model.queryPartitions(ev.vec, ev.eventTime,
                 math.min(ev.ttl, maxTtl))
               ps.foreach(p => out += Routed(p, ps.length, ev, now))
+            case "s" =>
+              // DUMP: every partition, negated fan-out count — the same
+              // marker VectorStreamJob.route stamps
+              val ps = model.deleteAllPartitions
+              ps.foreach(p => out += Routed(p, -ps.length, ev, now))
           }
         }
         state.update(RouterState(serialize(model), ring.take(ringN),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,16 +50,6 @@ object EventWindows {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Run the streaming aggregation over a memory source to completion in
-   * append mode and return the emitted rows (test/driver harness). */
-  def runToCompletion(spark: SparkSession, stream: DataFrame,
-      lateness: String = "1 hour", queryName: String = "event_windows"): DataFrame = {
-    val q = hourly(stream, lateness).writeStream
-      .format("memory").queryName(queryName).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
-  }
 
   /** Stream-static enrichment — the most common production streaming
    * join: each micro-batch of events joins a STATIC dimension frame

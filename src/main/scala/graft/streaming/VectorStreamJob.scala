@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Metric
-import graft.functions.TopKAggregator
 import graft.partitioners.PartitionerModel
 import graft.store.{ColdTier, ExactStore, HnswStore}
 
@@ -24,9 +23,11 @@ import graft.store.{ColdTier, ExactStore, HnswStore}
  *    answers queries against the store, and evicts entries older than
  *    maxObservedTime - maxTtl (reference V7 eviction);
  *  - partial top-k results carry numPartitionsSent (reference
- *    PartitionedQuery.java:17) and are merged per micro-batch (a query's
- *    fan-out all lands in one batch, so the per-batch merge is complete —
- *    the reference's completeness counter becomes a groupBy).
+ *    PartitionedQuery.java:17) and are merged on the driver per
+ *    micro-batch (a query's fan-out all lands in one batch, so the
+ *    per-batch merge is complete — the reference's incremental
+ *    completeness counter becomes a distinct-pid count over the
+ *    trigger's collected partials, [[mergePartialsLocal]]).
  *
  * State is the compact live set + versioned tombstones (flat,
  * encoder-friendly case classes) — never a serialized index. The HNSW
@@ -88,9 +89,9 @@ object VectorStreamJob {
    * the source; flush staging is overwrite-idempotent so a re-run
    * converges). Future additions to stored state should extend the
    * PARALLEL arrays on PartialResult instead, or accept the same
-   * migration cost knowingly. The composed mode (`coldDir` +
-   * `crossBatchMerge`) also dropped its second stateful operator, which
-   * needs a fresh checkpoint the same way ([[run]]). */
+   * migration cost knowingly. [[run]] also dropped the second stateful
+   * operator that `crossBatchMerge = true` used to chain, which needs a
+   * fresh checkpoint the same way. */
   final case class StoredVec(id: Long, ts: Long, vec: Array[Float],
       attr: String = null)
   /** Versioned tombstone: a delete at `ts` supersedes any insert of the
@@ -453,46 +454,7 @@ object VectorStreamJob {
       })
   }
 
-  /** C3 merge for a (micro-)batch of partials -> complete SearchResults
-   * (qid, rn, id, dist, latency_ms) — only queries whose distinct-pid
-   * count matches numPartitionsSent are complete (always true when the
-   * fan-out landed in one batch; an EMPTY partial still counts, its pid
-   * arrives with a zero-length list). The whole merge is ONE aggregation:
-   * each partial row is already a (dist, id)-ascending top-k list, so
-   * [[TopKListAggregator]] merges lists directly — no per-pair explode,
-   * no separate completeness join, one shuffle per batch (the reference's
-   * SearchResult.combine()). latency_ms is stamped as the merge
-   * materializes (the reference's searchCompleteTime) minus the query's
-   * routing stamp: route -> shuffle -> per-partition search -> shuffle ->
-   * merge. Both stamps are wall-clock millis (comparable across executor
-   * JVMs) and the merge stamp is a nondeterministic udf so Catalyst
-   * cannot move or collapse its evaluation. */
-  def mergePartials(batch: DataFrame, k: Int): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val mergeUdaf = udaf(new graft.functions.TopKListAggregator(k),
-      implicitly[org.apache.spark.sql.Encoder[(Array[Long], Array[Double])]])
-    val completeMillis = udf(() => System.currentTimeMillis()).asNondeterministic()
-    batch.where(col("numPartitionsSent") > 0) // state dumps never merge
-      .groupBy(col("queryId").as("qid"))
-      .agg(mergeUdaf(col("ids"), col("dists")).as("topk"),
-        size(collect_set(col("pid"))).as("np"),
-        first(col("numPartitionsSent")).as("sent"),
-        min(col("ingestMillis")).as("ingest"))
-      .where(col("np") === col("sent"))
-      .select(col("qid"), col("ingest"), posexplode(arrays_zip(
-        col("topk.ids").as("id"), col("topk.dists").as("dist"))))
-      .select(col("qid"), (col("pos") + 1).as("rn"),
-        col("col.id").as("id"), col("col.dist").as("dist"),
-        (completeMillis() - col("ingest")).cast("double").as("latency_ms"))
-  }
-
-  /** Carry-over merge state for one in-flight query: the merged top-k so
-   * far, the distinct partitions heard from, and the earliest routing
-   * stamp. Flat arrays — encoder-friendly, O(k + fan-out) per query. */
-  final case class MergeBuf(pids: Array[Int], ids: Array[Long],
-      dists: Array[Double], sent: Int, ingest: Long)
-
+  /** One merged result row: rank `rn` (1-based) of query `qid`. */
   final case class SearchResult(qid: Long, rn: Int, id: Long, dist: Double,
       latency_ms: Double)
 
@@ -516,14 +478,18 @@ object VectorStreamJob {
     (outI.toArray, outD.toArray)
   }
 
-  /** [[mergePartials]] over one trigger's partials on the driver: query
-   * partials (`numPartitionsSent > 0`) group by queryId, a query whose
+  /** C3, the partial-result merge (the reference's
+   * SearchResult.combine()), over one trigger's partials on the driver.
+   * [[route]] puts a query's whole fan-out into the micro-batch its event
+   * arrives in, so one trigger's partials hold every complete query. Query
+   * partials (`numPartitionsSent > 0`) group by queryId; a query whose
    * distinct pids number its `numPartitionsSent` folds its lists with
-   * [[mergeSorted]], and each result row is stamped with the latency
-   * from the query's earliest routing stamp. Dump, flush and delete-log
-   * partials never merge; an incomplete fan-out (a partition dropped the
-   * query under `dropLateQueries`) emits nothing. Rows come out ordered
-   * by (qid, rn). */
+   * [[mergeSorted]] (an EMPTY partial still counts). Dump, flush and
+   * delete-log partials never merge; an incomplete fan-out (a partition
+   * dropped the query under `dropLateQueries`) emits nothing. Each row's
+   * `latency_ms` is the merge's wall-clock stamp (the reference's
+   * searchCompleteTime) minus the query's earliest routing stamp. Rows
+   * come out ordered by (qid, rn). */
   def mergePartialsLocal(parts: Seq[PartialResult], k: Int): Seq[SearchResult] = {
     val now = System.currentTimeMillis()
     parts.filter(_.numPartitionsSent > 0).groupBy(_.queryId).toSeq
@@ -745,139 +711,6 @@ object VectorStreamJob {
     }
   }
 
-  /** [[PartialResult]] plus the watermark column the stateful merge's
-   * event-time timeout rides on. `vecs` rides along so flush partials
-   * can pass through the tapped merge intact. */
-  final case class TsPartial(queryId: Long, pid: Int, numPartitionsSent: Int,
-      ids: Array[Long], dists: Array[Double], queryEventTime: Long,
-      ingestMillis: Long, eventTs: java.sql.Timestamp,
-      vecs: Array[Array[Float]] = null, attrs: Array[String] = null)
-
-  /** One output row of the tapped cross-batch merge: EITHER a completed
-   * search result (`res` set, `pass` null) OR a lifecycle partial passed
-   * through untouched (`pass` set — flush / delete-log / dump rows, which
-   * must reach the sink's foreachBatch even though they never merge). */
-  final case class MergedRow(res: SearchResult, pass: PartialResult)
-
-  /** C3 merge with CROSS-BATCH completeness (reference
-   * PartialResultProcessFunction.java:14-59): the per-batch
-   * [[mergePartials]] silently drops a query whose fan-out straddles a
-   * micro-batch boundary (np != sent inside either batch). This variant
-   * keys a stateful merge by queryId: each arriving partial folds into
-   * the carried top-k (id-deduped sorted merge, O(k) state per query),
-   * and the query emits exactly when every routed partition has reported
-   * — however many triggers that takes. Abandoned fan-outs (a partition
-   * lost before reporting) expire via EVENT-time timeout on a watermark
-   * over the routing stamp — not processing time, where a pending timeout
-   * makes the engine schedule no-data batches back-to-back until it fires
-   * (shouldRunAnotherBatch stays true), spinning the trigger loop and
-   * hanging processAllAvailable. Both this and the upstream keyed
-   * operator are Append-mode flatMapGroupsWithState, which Spark permits
-   * chained in one streaming query. */
-  def mergePartialsStateful(partials: Dataset[PartialResult], k: Int,
-      timeoutMs: Long = 10 * 60 * 1000L): Dataset[SearchResult] = {
-    val spark = partials.sparkSession
-    import spark.implicits._
-    // Dump/flush partials (sent <= 0) never enter the merge — a negative
-    // `sent` would make the completeness check trivially true and leak
-    // them as results; with no lifecycle consumer downstream they are
-    // simply dropped (the tapped variant passes them through instead)
-    mergePartialsStatefulTapped(
-      partials.filter(_.numPartitionsSent > 0), k, timeoutMs)
-      .map(_.res)
-  }
-
-  /** [[mergePartialsStateful]] with a lifecycle TAP (the composition the
-   * reference actually runs: RocksDBKeyedProcessFunction ingesting and
-   * flushing WHILE PartialResultProcessFunction completes queries
-   * incrementally, VStreamSearchJob.java:21-49): lifecycle partials —
-   * hot->cold flush rows, delete-log tombstones, state dumps (all
-   * `sent <= 0`) — pass through the stateful merge untouched instead of
-   * being filtered, so ONE downstream foreachBatch can both sink
-   * completed queries and seal flush/delete batches into the cold tier.
-   * For callers that feed their own partial stream, whose fan-outs may
-   * straddle triggers; [[run]] merges on the driver instead, since its
-   * fan-outs never do.
-   *
-   * Group key: query partials key on (queryId, -1) and merge across
-   * triggers exactly as before; lifecycle partials key on
-   * (queryId, pid) — per-partition groups, so pass-through stays
-   * parallel (no all-flush-rows-to-one-task hotspot) and can never
-   * collide with a query group (pid >= 0 vs the reserved -1). Lifecycle
-   * groups touch no state and set no timeout; their rows are emitted in
-   * the same trigger they arrive. */
-  def mergePartialsStatefulTapped(partials: Dataset[PartialResult], k: Int,
-      timeoutMs: Long = 10 * 60 * 1000L): Dataset[MergedRow] = {
-    val spark = partials.sparkSession
-    import spark.implicits._
-    // the watermark delay doubles as the late-partial allowance: fMGWS
-    // with an event-time timeout filters input older than the watermark.
-    // Lifecycle partials must reach the sink UNCONDITIONALLY (a dropped
-    // flush row loses cold data; a dropped tombstone resurrects deleted
-    // ids), so their eventTs is lifted to at least the current batch
-    // timestamp: the watermark is derived from PREVIOUS triggers' max
-    // event time, which wall-clock stamps can never lead, so a
-    // batch-time stamp always clears the filter — even when merge-side
-    // processing lags the flush-time stamp by more than timeoutMs
-    // (where the raw stamp alone would silently drop the row).
-    val withTs = partials
-      .withColumn("eventTs",
-        when(col("numPartitionsSent") > 0,
-          timestamp_millis(col("ingestMillis")))
-        .otherwise(greatest(timestamp_millis(col("ingestMillis")),
-          current_timestamp())))
-      .withWatermark("eventTs", s"$timeoutMs milliseconds")
-      .as[TsPartial]
-    withTs.groupByKey(p =>
-        (p.queryId, if (p.numPartitionsSent > 0) -1 else p.pid))
-      .flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-      (key: (Long, Int), it: Iterator[TsPartial], state: GroupState[MergeBuf]) => {
-        val qid = key._1
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else if (key._2 >= 0) {
-          // lifecycle pass-through: no state, no timeout, emit as-is
-          it.map(p => MergedRow(null, PartialResult(p.queryId, p.pid,
-            p.numPartitionsSent, p.ids, p.dists, p.queryEventTime,
-            p.ingestMillis, p.vecs, p.attrs)))
-        } else {
-          val prev = state.getOption
-          val pidSet = new java.util.HashSet[Int]()
-          prev.foreach(_.pids.foreach(pidSet.add(_)))
-          var ids = prev.map(_.ids).getOrElse(Array.empty[Long])
-          var ds = prev.map(_.dists).getOrElse(Array.empty[Double])
-          var sent = prev.map(_.sent).getOrElse(0)
-          var ingest = prev.map(_.ingest).getOrElse(Long.MaxValue)
-          var latest = prev.map(_.ingest).getOrElse(0L)
-          it.foreach { p =>
-            pidSet.add(p.pid)
-            sent = p.numPartitionsSent
-            if (p.ingestMillis < ingest) ingest = p.ingestMillis
-            if (p.ingestMillis > latest) latest = p.ingestMillis
-            val m = mergeSorted(ids, ds, p.ids, p.dists, k)
-            ids = m._1; ds = m._2
-          }
-          if (sent > 0 && pidSet.size() >= sent) {
-            state.remove()
-            val now = System.currentTimeMillis()
-            Iterator.tabulate(ids.length)(r => MergedRow(
-              SearchResult(qid, r + 1, ids(r), ds(r), (now - ingest).toDouble),
-              null))
-          } else {
-            import scala.jdk.CollectionConverters._
-            state.update(MergeBuf(pidSet.iterator().asScala.map(_.intValue())
-              .toArray.sorted, ids, ds, sent, ingest))
-            // must stay ahead of the current watermark or Spark rejects it
-            state.setTimeoutTimestamp(math.max(
-              state.getCurrentWatermarkMs() + 1000L, latest + timeoutMs))
-            Iterator.empty
-          }
-        }
-      })
-  }
-
   /** [[run]]'s hot->cold lifecycle for one trigger, over its partials
    * on the driver (query and dump partials are ignored), in order: the
    * flush ([[flushBatch]], or [[stageFlush]] + [[sealStaged]] every Nth
@@ -970,16 +803,12 @@ object VectorStreamJob {
   /** Wire the full pipeline onto a streaming Dataset; results are appended
    * per micro-batch via foreachBatch into `sink`.
    *
-   * Merge: `route` puts a query's whole fan-out into the micro-batch its
-   * event arrives in, so one trigger's partials hold every complete
-   * query. With `coldDir` set, the trigger's partials are collected once
-   * and merged on the driver ([[mergePartialsLocal]]), whatever
-   * `crossBatchMerge` says: the query runs one stateful operator, and
-   * the sink gets a local [[SearchResult]] frame. Without `coldDir`,
-   * `crossBatchMerge` chains the stateful cross-batch merge
-   * ([[mergePartialsStateful]], for a fan-out that straddles
-   * micro-batches), and otherwise the one-aggregation per-batch
-   * [[mergePartials]] runs.
+   * Merge: every trigger's partials are collected once and merged on
+   * the driver ([[mergePartialsLocal]]), so the query runs one stateful
+   * operator and the sink gets a local [[SearchResult]] frame.
+   * `crossBatchMerge` is accepted and ignored: [[route]] never splits a
+   * fan-out across micro-batches, so there is nothing to carry between
+   * triggers.
    *
    * With `coldDir` set, the job runs the full LSM lifecycle
    * ([[Lifecycle]]): TTL-evicted hot state flushes into cold segments per
@@ -999,11 +828,12 @@ object VectorStreamJob {
    * dedups ids, so results are unaffected (storage carries the replicas,
    * as the hot tier did).
    *
-   * Job budget with `coldDir` set: one collect materializes the trigger
-   * over two stages (route, then the keyed operator) and the rest runs
-   * from driver-resident rows. Without `indexAtFlush`, that collect is
-   * the trigger's only job, deletes included: the delete log is written
-   * on the driver ([[ColdTier.sealDeletesLocal]]). A sealing trigger adds
+   * Job budget: one collect materializes the trigger over two stages
+   * (route, then the keyed operator) and the rest runs from
+   * driver-resident rows. Without `coldDir`, or with it but without
+   * `indexAtFlush`, that collect is the trigger's only job, deletes
+   * included: the delete log is written on the driver
+   * ([[ColdTier.sealDeletesLocal]]). A sealing trigger adds
    * the segment write and the catalog append. The sink's frame is local,
    * so its collect runs no job. Staged seals, compaction, recluster and
    * sidecars run their own jobs. Driver memory: one trigger's partials,
@@ -1011,16 +841,18 @@ object VectorStreamJob {
    * trigger's inserts (8000 128-d rows are about 4 MB), but an event-time
    * jump can evict the whole hot set in one trigger.
    *
-   * Checkpoint compatibility: with `coldDir` set the query holds one
-   * stateful operator. A checkpoint written while the composed mode
-   * chained the stateful merge as a second operator has a different
-   * operator layout, so such a job must restart from a fresh checkpoint
-   * (replay the source; flush and delete-log commits are idempotent per
-   * batch id, so a re-run converges). */
+   * Checkpoint compatibility: every mode holds one stateful operator. A
+   * checkpoint written while a mode chained the stateful cross-batch
+   * merge as a second operator (every `crossBatchMerge = true` job before
+   * the merge moved to the driver) has a different operator layout, so
+   * such a job must restart from a fresh checkpoint (replay the source;
+   * flush and delete-log commits are idempotent per batch id, so a re-run
+   * converges). */
   def run(events: Dataset[StreamEvent], model: PartitionerModel, k: Int,
       metric: Metric, maxTtl: Long, useHnsw: Boolean = false,
       checkpointDir: Option[String] = None,
       dropLateQueries: Boolean = false,
+      // ignored (see Merge above); kept so existing callers compile
       crossBatchMerge: Boolean = false,
       coldDir: Option[String] = None,
       indexAtFlush: Boolean = false,
@@ -1080,37 +912,20 @@ object VectorStreamJob {
               m = hnswM, efConstruction = hnswEfConstruction,
               dropLateQueries = dropLateQueries, flushEvicted = flush)
             else partials(routed, metric, maxTtl, dropLateQueries, flush)
-    // explicit wildcard: the branches write differently-typed Datasets,
-    // and the inferred existential needs a language import
-    val w: org.apache.spark.sql.streaming.DataStreamWriter[_] = coldDir match {
-      case Some(dir) =>
-        val lifecycle = new Lifecycle(spark, dir, metric, indexAtFlush,
-          hnswM, hnswEfConstruction, flushEveryBatches, compactEvery,
-          compactTargetRows, autoReclusterCells, reclusterAccretedFraction,
-          reclusterMinSegments, autoReclusterAttr, autoReclusterAttrBuckets)
-        p.writeStream
-          .outputMode(OutputMode.Append)
-          .foreachBatch { (batch: Dataset[PartialResult], bid: Long) =>
-            // trigger-bounded: one trigger's partials
-            val parts = batch.collect().toSeq
-            val s = batch.sparkSession
-            import s.implicits._
-            sink(mergePartialsLocal(parts, k).toDF())
-            lifecycle(parts, bid)
-          }
-      case None if crossBatchMerge =>
-        mergePartialsStateful(p, k).writeStream
-          .outputMode(OutputMode.Append)
-          .foreachBatch { (batch: Dataset[SearchResult], _: Long) =>
-            sink(batch.toDF())
-          }
-      case None => p.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[PartialResult], _: Long) =>
-          // single-pass merge: the batch is consumed exactly once
-          sink(mergePartials(batch.toDF(), k))
-        }
-    }
+    val lifecycle = coldDir.map(new Lifecycle(spark, _, metric, indexAtFlush,
+      hnswM, hnswEfConstruction, flushEveryBatches, compactEvery,
+      compactTargetRows, autoReclusterCells, reclusterAccretedFraction,
+      reclusterMinSegments, autoReclusterAttr, autoReclusterAttrBuckets))
+    val w = p.writeStream
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: Dataset[PartialResult], bid: Long) =>
+        // trigger-bounded: one trigger's partials
+        val parts = batch.collect().toSeq
+        val s = batch.sparkSession
+        import s.implicits._
+        sink(mergePartialsLocal(parts, k).toDF())
+        lifecycle.foreach(_(parts, bid))
+      }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     w.start()
   }

@@ -53,7 +53,6 @@ final case class SearchResult(
     numPartitionsToCombine: Int,
     queryEventTime: Long,
     searchCompleteTime: Long) {
-  def isComplete: Boolean = numPartitionsCombined == numPartitionsToCombine
   /** recall@k against a ground-truth id set (reference SearchResult.java:192-201). */
   def recall(truth: Set[Long], k: Int): Double =
     if (k == 0) 0.0 else ids.take(k).count(truth.contains).toDouble / k

@@ -258,4 +258,63 @@ class AdaptiveRouterSpec extends AnyFunSuite {
     val recall = recalls.sum / recalls.size
     assert(recall >= 0.9, s"end-to-end pipeline recall: $recall")
   }
+
+  test("DUMP through the bridged pipeline reaches every partition, decodes via stateDumps, and never merges as a query") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val rnd = new java.util.Random(11L)
+    val inserts = (0 until 40).map(i =>
+      StreamEvent("i", i.toLong, gauss(rnd, 0f), i.toLong, 0L, 0))
+    val init = AdaptiveLshSfcPartitioner.init(
+      inserts.map(_.vec).toArray, NumParts, Dim, numFamilies = 2,
+      numHashes = 4, width = 4.0f, bits = 7, curveName = "hilbert",
+      seed = 7L, fromTime = 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bridge-dump")
+    val bridge = s"$tmp/bridge"
+    val input = MemoryStream[StreamEvent]
+    val merged = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val (router, search) = AdaptiveRouter.runPipeline(input.toDS(), init,
+      updateInterval = 1000000L, maxTtl = 1000000L, k = 5, graft.Metric.L2,
+      bridgeDir = bridge, checkpointRoot = s"$tmp/ckpt") { df =>
+      df.collect().foreach(r => merged.synchronized { merged += r.getLong(0) })
+    }
+    // a second reader of the same bridge replays the keyed store and
+    // decodes the dump partials the pipeline's merge must skip
+    val dumps = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Long)]
+    val routed = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[VectorStreamJob.Routed].schema)
+      .parquet(bridge).as[VectorStreamJob.Routed]
+    val dumpQ = VectorStreamJob.partials(routed, graft.Metric.L2, 1000000L)
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", s"$tmp/ckpt/dumps")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[VectorStreamJob.PartialResult], _: Long) =>
+        VectorStreamJob.stateDumps(b.toDF()).collect().foreach(r =>
+          dumps.synchronized {
+            dumps += ((r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))) })
+      }.start()
+    def drain(): Unit = {
+      router.processAllAvailable(); search.processAllAvailable()
+      dumpQ.processAllAvailable()
+    }
+    try {
+      input.addData(inserts: _*); drain()
+      input.addData(StreamEvent("d", 7L, null, 100L, 0L, 0),
+        StreamEvent("s", 9999L, null, 200L, 0L, 0),
+        StreamEvent("q", 5000L, inserts(3).vec, 300L, 1000000L, 5)); drain()
+    } finally { router.stop(); search.stop(); dumpQ.stop() }
+
+    val dumpRoutes = spark.read.parquet(bridge).as[VectorStreamJob.Routed]
+      .collect().filter(_.ev.kind == "s")
+    assert(dumpRoutes.map(_.pid).sorted.toSeq == (0 until NumParts),
+      s"the dump must reach every partition: ${dumpRoutes.map(_.pid).toList}")
+    assert(dumpRoutes.forall(_.numPartitionsSent == -NumParts))
+    val got = dumps.synchronized(dumps.toVector)
+    assert(got.nonEmpty && got.forall(_._1 == 9999L))
+    assert(got.map(_._3).distinct.sorted ==
+      (0 until 40).filter(_ != 7).map(_.toLong),
+      s"live set mismatch: ${got.map(_._3).distinct.sorted}")
+    assert(got.forall(r => r._4 == r._3), "stored event times survive")
+    assert(merged.synchronized(merged.toSet) == Set(5000L),
+      s"only the query merges, never the dump: $merged")
+  }
 }

@@ -376,37 +376,6 @@ class StreamingSpec extends AnyFunSuite {
       s"latency p50 must be a sane wall-clock ms value: $got")
   }
 
-  test("cross-batch merge: a fan-out split across micro-batches still completes") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[PartialResult]
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    val q = VectorStreamJob.mergePartialsStateful(input.toDS(), k = 3)
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[SearchResult], _: Long) =>
-        b.collect().foreach(r => results.synchronized {
-          results += ((r.qid, r.rn, r.id, r.dist)) })
-      }.start()
-    // batch 1: only partition 0 of a 2-way fan-out reports — the per-batch
-    // merge would drop this query forever (np != sent in every batch)
-    input.addData(PartialResult(7L, 0, 2, Array(1L, 2L), Array(0.1, 0.2),
-      100L, System.currentTimeMillis()))
-    q.processAllAvailable()
-    assert(results.synchronized(results.isEmpty),
-      "incomplete fan-out must not emit")
-    // batch 2: partition 1 reports (with an id overlapping partition 0's
-    // list — cross-partition dedup must hold across the batch boundary)
-    input.addData(PartialResult(7L, 1, 2, Array(3L, 2L), Array(0.05, 0.2),
-      100L, System.currentTimeMillis()))
-    q.processAllAvailable()
-    val got = results.synchronized(results.sortBy(_._2))
-    assert(got.map(x => (x._1, x._2, x._3)) ==
-      Seq((7L, 1, 3L), (7L, 2, 1L), (7L, 3, 2L)),
-      s"merged top-k across batches: $got")
-    assert(got.forall(x => x._4 >= 0.0), "latency must be stamped")
-    q.stop()
-  }
-
   test("crossBatchMerge pipeline: chained stateful operators answer like the per-batch path") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
@@ -437,13 +406,11 @@ class StreamingSpec extends AnyFunSuite {
     val q = VectorStreamJob.partials(routed, Metric.L2, maxTtl = 1000000L)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.Dataset[PartialResult], _: Long) =>
-        val df = b.toDF().cache()
-        VectorStreamJob.stateDumps(df).collect().foreach(r => dumps.synchronized {
+        val parts = b.collect().toSeq
+        VectorStreamJob.stateDumps(parts.toDF()).collect().foreach(r => dumps.synchronized {
           dumps += ((r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))) })
-        VectorStreamJob.mergePartials(df, 5).collect()
-          .foreach(r => merged.synchronized { merged += r.getLong(0) })
-        df.unpersist()
-        ()
+        VectorStreamJob.mergePartialsLocal(parts, 5)
+          .foreach(r => merged.synchronized { merged += r.qid })
       }.start()
     val inserts = (0 until 40).map(i => StreamEvent("i", i.toLong, vec(i), i.toLong, 0L, 0))
     input.addData(inserts: _*)
@@ -488,65 +455,6 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
-  test("tapped merge: a fan-out straddling a trigger completes WHILE flush+delete partials seal to cold in the same job") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val cold = java.nio.file.Files.createTempDirectory("graft-tapped").toString
-    val input = MemoryStream[PartialResult]
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    val lifecycle = new VectorStreamJob.Lifecycle(spark, cold, Metric.L2)
-    val q = VectorStreamJob.mergePartialsStatefulTapped(input.toDS(), k = 3)
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[MergedRow], bid: Long) =>
-        // run()'s composed trigger: one collect, then the driver-side
-        // sink rows and lifecycle
-        val rows = b.collect()
-        rows.flatMap(r => Option(r.res)).foreach(r => results.synchronized {
-          results += ((r.qid, r.rn, r.id, r.dist)) })
-        lifecycle(rows.flatMap(r => Option(r.pass)).toSeq, bid)
-      }.start()
-    val now = System.currentTimeMillis()
-    // trigger 1: partition 0 of a 2-way fan-out reports, AND partition 0
-    // TTL-flushes two rows to cold — in the same micro-batch
-    input.addData(
-      PartialResult(7L, 0, 2, Array(1L, 2L), Array(0.1, 0.2), 100L, now),
-      PartialResult(-1L, 0, FlushSent, Array(10L, 11L),
-        Array(10.0, 11.0), 100L, now, Array(vec(10), vec(11))))
-    q.processAllAvailable()
-    assert(results.synchronized(results.isEmpty),
-      "incomplete fan-out must not emit")
-    val cat1 = graft.store.ColdTier.catalog(spark, cold)
-    assert(cat1.map(_.count).sum == 2L,
-      s"trigger-1 flush must seal before the query completes: ${cat1.toList}")
-    // trigger 2: partition 1 completes the query (overlapping id 2 —
-    // cross-trigger dedup), partition 1 flushes another row, and a
-    // delete-log tombstone for an already-flushed id rides along
-    input.addData(
-      PartialResult(7L, 1, 2, Array(3L, 2L), Array(0.05, 0.2), 100L,
-        System.currentTimeMillis()),
-      PartialResult(-1L, 1, FlushSent, Array(12L), Array(12.0), 100L,
-        System.currentTimeMillis(), Array(vec(12))),
-      PartialResult(10L, 1, DeleteLogSent, Array(10L), Array(50.0), 50L,
-        System.currentTimeMillis()))
-    q.processAllAvailable()
-    q.stop()
-    val got = results.synchronized(results.sortBy(_._2))
-    assert(got.map(x => (x._1, x._2, x._3)) ==
-      Seq((7L, 1, 3L), (7L, 2, 1L), (7L, 3, 2L)),
-      s"merged top-k across triggers: $got")
-    // both triggers' flushes are sealed segments; the delete log shadows
-    // the tombstoned id in the cold search
-    val cat = graft.store.ColdTier.catalog(spark, cold)
-    assert(cat.map(_.count).sum == 3L, s"cold rows: ${cat.toList}")
-    val queries = Seq((1L, vec(10), 10000L, 100000L))
-      .toDF("qid", "qv", "qtime", "ttl")
-    val coldIds = graft.store.ColdTier.search(spark, cold, queries, 3,
-        Metric.L2, firstWaveFraction = 1.0, terminationFactor = 1.0)
-      .collect().map(_.getLong(2)).toSet
-    assert(coldIds == Set(11L, 12L),
-      s"tombstoned id 10 must be shadowed: $coldIds")
-  }
-
   /** Spark jobs per streaming batch id, read from the listener bus.
    * [[settle]] runs a marker job and waits for it: the bus delivers
    * events in order, so by then every earlier job has been counted. */
@@ -575,7 +483,7 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("composed trigger job budget: a trigger with inserts, deletes and a query runs 2 Spark jobs, a sealing trigger at most 4") {
+  test("composed trigger job budget: a trigger with inserts, deletes and a query runs 1 Spark job, a sealing trigger at most 3") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     val cold = java.nio.file.Files.createTempDirectory("graft-jobs").toString
@@ -632,6 +540,44 @@ class StreamingSpec extends AnyFunSuite {
       .select("del_id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 7L, 107L))
   }
 
+  test("without coldDir, crossBatchMerge = true runs one stateful operator and 1 Spark job per trigger with inserts, deletes and a query") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[StreamEvent]
+    val answered = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
+    val q = VectorStreamJob.run(input.toDS(), SimplePartitioner(2), k = 5,
+      Metric.L2, maxTtl = 1000L, crossBatchMerge = true) { merged =>
+      val bid = spark.sparkContext.getLocalProperty("streaming.sql.batchId")
+      val ids = merged.collect().sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
+      if (ids.nonEmpty) answered.put(bid.toLong, ids)
+    }
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
+    val stateOps = try {
+      input.addData((0 until 20).map(i =>
+        StreamEvent("i", i.toLong, vec(i), i.toLong, 0L, 0)) ++ Seq(
+        StreamEvent("d", 3L, null, 20L, 0L, 0),
+        StreamEvent("d", 4L, null, 21L, 0L, 0),
+        StreamEvent("q", 9000L, vec(5), 22L, 1000L, 5)): _*)
+      q.processAllAvailable()
+      jobs.settle()
+      q.lastProgress.stateOperators.length
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+    import scala.jdk.CollectionConverters._
+    val truth = (0 until 20).filterNot(i => i == 3 || i == 4)
+      .map(i => (i.toLong, Distances.l2(vec(5), vec(i))))
+      .sortBy { case (id, d) => (d, id) }.take(5).map(_._1)
+    assert(answered.values.asScala.toSeq == Seq(truth),
+      s"one trigger answers the query exactly: $answered")
+    assert(stateOps == 1, "the keyed operator is the only stateful one")
+    // no watermark, so no no-data batch follows the trigger either
+    assert(jobs.perBatch.asScala.toMap == Map(answered.keySet.asScala.head -> 1),
+      s"the trigger's collect is the run's only job: ${jobs.perBatch}")
+  }
+
   test("driver merge equals mergePartials on the same partials: ties, an id from two partitions, lifecycle partials excluded") {
     import spark.implicits._
     val now = System.currentTimeMillis()
@@ -654,10 +600,7 @@ class StreamingSpec extends AnyFunSuite {
         now, Array(vec(20), vec(21)), Array("a", null)),
       PartialResult(22L, 1, DeleteLogSent, Array(22L), Array(30.0), 30L, now))
     val local = VectorStreamJob.mergePartialsLocal(parts, k = 4)
-    val viaSpark = VectorStreamJob.mergePartials(parts.toDF(), 4)
-      .as[SearchResult].collect().sortBy(r => (r.qid, r.rn)).toSeq
     def key(rs: Seq[SearchResult]) = rs.map(r => (r.qid, r.rn, r.id, r.dist))
-    assert(key(local) == key(viaSpark))
     assert(key(local) == Seq((1L, 1, 1L, 0.1), (1L, 2, 2L, 0.2),
       (1L, 3, 3L, 0.2), (1L, 4, 4L, 0.2), (2L, 1, 7L, 1.5),
       (4L, 1, 6L, 0.5), (4L, 2, 9L, 0.5), (4L, 3, 11L, 0.5), (4L, 4, 12L, 0.6)))
