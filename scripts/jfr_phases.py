@@ -37,8 +37,11 @@ import sys
 PHASES = [
     ("serve", re.compile(r"graft\.store\.ColdTier\$?\.(serveLocal|searchIndexed)|"
                          r"graft\.plans\.KnnServeExec\.\S*serve\(")),
+    # the session parser wrapper's own lexing, literal folding and origin
+    # rebuild are parse work too
     ("parse", re.compile(r"org\.apache\.spark\.sql\.catalyst\.parser\.|"
                          r"org\.apache\.spark\.sql\.execution\.SparkSqlParser|"
+                         r"graft\.plans\.VectorLiteralParser|"
                          r"org\.antlr\.")),
     ("analyze", re.compile(r"QueryExecution\.\$anonfun\$(lazyAnalyzed|analyzed)|"
                            r"QueryExecution\.assertAnalyzed|"

@@ -55,5 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPostHocResolutionRule(session => graft.plans.KnnScanRule(session))
     ext.injectOptimizerRule(session => graft.plans.KnnScanRule(session))
     ext.injectPlannerStrategy(_ => graft.plans.KnnStrategy)
+    // literal query vectors fold to one array Literal before parsing
+    ext.injectParser((session, parser) => new graft.plans.VectorLiteralParser(session, parser))
   }
 }
