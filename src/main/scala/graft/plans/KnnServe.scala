@@ -78,11 +78,14 @@ object KnnStrategy extends SparkStrategy {
 
 /** The physical SQL kNN operator. It serves when the statement executes,
  * never while it is planned, and picks the engine then:
- *  1. [[ColdTier.serveLocal]] in-process, on the calling thread (the warm
- *     exact kernel or graph probe: zero Spark jobs);
- *  2. when that declines (cold or oversized tier, a segment without its
- *     sidecar), the distributed probe of the direct API
- *     ([[ColdTier.searchIndexedFast]] / [[ColdTier.searchIndexedLiteralFiltered]]);
+ *  1. [[ColdTier.serveLocal]], the one in-process engine, on the calling
+ *     thread (the warm exact kernel or graph probe: zero Spark jobs);
+ *  2. when that declines (local serving switched off with
+ *     `graft.coldtier.exactServeLocal`, an oversized tier or delete log,
+ *     a segment without its centroid or sidecar), the direct API, which
+ *     is purely distributed ([[ColdTier.searchIndexedFast]] /
+ *     [[ColdTier.searchIndexedLiteralFiltered]]: the graph probe, or the
+ *     pushed-down exact scan of an admission-collapsed literal);
  *  3. when either throws (the registered tier was deleted or corrupted
  *     after the statement was matched), the statement's original exact
  *     plan.

@@ -350,10 +350,10 @@ object EvalQueries {
    * converged layout of the r14 rare-label frontier (one segment per
    * label, sidecars sealed WITH the label payload). On this layout the
    * attr-stats admission collapses a label literal to its ONE segment,
-   * so [[graft.store.ColdTier.searchIndexedLiteralFiltered]]'s
-   * exact-kernel decision must pick the lossless scan over the graph
-   * probe the committed sidecars would otherwise serve — exactly what
-   * knn_sql_rewrite_aligned_exact gates. */
+   * so the SQL operator's exact-kernel decision
+   * ([[graft.store.ColdTier.serveLocal]], engine "exact") must pick the
+   * lossless kernel over the graph probe the committed sidecars would
+   * otherwise serve — exactly what knn_sql_rewrite_aligned_exact gates. */
   private val alignedIndexedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def alignedIndexedTier(s: SparkSession, dir: String): String =
     alignedIndexedDirs.getOrElseUpdate(dir, {
@@ -1388,8 +1388,8 @@ object EvalQueries {
       // single-equality collapse was oracle-gated. The IN-list idiom
       // (`WHERE label IN (0, 1) ORDER BY dist LIMIT k`) on the
       // attr-ALIGNED tier: per-value admission collapses each IN value
-      // to its one single-label segment (2 admitted segments <=
-      // exactKernelSegments, strictly fewer than the 10-segment
+      // to its one single-label segment (2 admitted segments <= the
+      // exact kernel's 4-segment bound, strictly fewer than the 10-segment
       // catalog), so the EXACT kernel must serve. THROWS if (a) the
       // corpus is still scanned (rewrite did not fire) or (b) the graph
       // probe served (the KnnServeExec engine metric is not "exact"). Because

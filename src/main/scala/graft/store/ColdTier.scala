@@ -1019,40 +1019,22 @@ object ColdTier {
   val TombstoneBroadcastMaxBytesKey = "graft.coldtier.tombstoneBroadcastMaxBytes"
   val TombstoneBroadcastMaxBytesDefault: Long = 64L << 20
 
-  /** Kill switch for driver-LOCAL serving — the exact-kernel engine
-   * ([[serveExactFromMemory]]) and the SQL rewrite's in-process graph
-   * route ([[serveLocal]]): `false` keeps every admission-collapsed
-   * literal plan on the lazy distributed scan and every rewritten
-   * statement on the distributed probe. Results are bit-identical
-   * either way — the switch only moves where the (already bounded) work
-   * runs, never what it computes. */
+  /** Kill switch for the SQL operator's in-process route
+   * ([[serveLocal]]: the exact kernel and the graph probe): `false`
+   * sends every served statement to the distributed route of the direct
+   * API. Results are bit-identical either way — the switch only moves
+   * where the (already bounded) work runs, never what it computes. The
+   * direct API itself is always distributed and never reads it. */
   val ExactServeLocalKey = "graft.coldtier.exactServeLocal"
-  /** Query-count bound for the local exact kernel: a plan whose query
-   * set is not plan-time enumerable, or carries more rows than this,
-   * stays on the distributed kernel — the local path's memory cost is
-   * |queries| x k result rows on top of the cached segments, and an
-   * unbounded/distributed query batch must never collapse onto one
-   * process here. */
-  val ExactServeLocalMaxQueriesKey = "graft.coldtier.exactServeLocalMaxQueries"
-  val ExactServeLocalMaxQueriesDefault = 4096
   /** LRU byte budget for [[SegmentDataCache]] (process-local decoded
-   * segment columns backing the local exact kernel). <= 0 disables the
-   * local engine entirely. The budget also bounds a single statement's
-   * ADMISSION: a literal plan whose admitted segments decode past it
-   * falls back to the distributed scan engine instead of pinning more
-   * decoded bytes than the heap can hold ([[serveExactFromMemory]]). */
+   * segment columns backing [[serveLocal]]). <= 0 disables the
+   * in-process route entirely. The budget also bounds a single
+   * statement's ADMISSION: a statement whose admitted segments (plus
+   * routed sidecars) decode past it is declined by [[serveLocal]] and
+   * runs distributed, instead of pinning more decoded bytes than the
+   * heap can hold. */
   val SegmentCacheBytesKey = "graft.coldtier.segmentCacheBytes"
   val SegmentCacheBytesDefault: Long = 1L << 30
-
-  /** Finite wait bound for the warm-cache PARALLEL batch kernel
-   * ([[serveExactFromMemory]]): a kernel thread dying fatally (OOM)
-   * must not hang the serving statement forever — past this many
-   * seconds the batch falls back to the distributed scan engine,
-   * bit-identically. <= 0 disables the parallel batch path outright
-   * (multi-query plans keep the scan engine; single statements still
-   * run inline). */
-  val ExactServeLocalTimeoutSecKey = "graft.coldtier.exactServeLocalTimeoutSec"
-  val ExactServeLocalTimeoutSecDefault: Long = 300L
 
   /** Files per sealed segment — the SST "block" unit. One file per
    * segment (r15) minimized per-statement scan startup but serialized
@@ -1069,8 +1051,8 @@ object ColdTier {
    * metadata-cheap at 100-TB scale (8 x ~4-16 MB files per segment vs
    * r14's 128 x ~250 KB slivers). Per-STATEMENT scan startup stays
    * irrelevant on the serving path: admission-collapsed statements are
-   * answered by the warm in-memory kernel ([[serveExactFromMemory]]),
-   * not a scan. */
+   * answered by the warm in-memory kernel ([[serveLocal]]), not a
+   * scan. */
   val SealFilesPerSegmentProp = "graft.coldtier.sealFilesPerSegment"
   private def sealFilesPerSegment: Int =
     Integer.getInteger(SealFilesPerSegmentProp, 8).intValue()
@@ -2684,7 +2666,7 @@ object ColdTier {
   }
 
   /** One segment's rows decoded ONCE into process-local columnar arrays
-   * for the in-memory exact kernel ([[serveExactFromMemory]]): primitive
+   * for the in-memory exact kernel ([[serveLocal]]): primitive
    * id/eventTime/vector columns for the scan loop, plus every non-vector
    * column as UnsafeRows (`metaRows`, field order = `metaSchema`) so a
    * plan-time literal predicate evaluates with exact Catalyst semantics
@@ -3679,7 +3661,6 @@ object ColdTier {
   def searchIndexedFast(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, metric: Metric = Metric.L2, efSearch: Int = 64,
       probeSegments: Int = Int.MaxValue, shortlist: Int = 50,
-      routeEf: Int = 0,
       // time travel: serve from the catalog/tombstones pinned by
       // [[ColdTier.snapshot]] version `v` (the SQL rewrite's
       // VERSION-pinned registration rides this)
@@ -3717,27 +3698,15 @@ object ColdTier {
             shardFiles(dfs, s.path).map(p => (si, p))
           }.zipWithIndex.map { case ((si, p), i) => (i, si, p) })
         val cap = probeSegments
-        val bRouter =
-          if (routeEf > 0 && cap < indexed.length)
-            Some(spark.sparkContext.broadcast(
-              routerFor(dir, indexed, routeEf)))
-          else None
         q.as[(Long, Array[Float], Long, Long)]
           .flatMap { case (qid, qv, qtime, ttl) =>
             val metas = bSegMeta.value
             val inWin = metas.indices.filter { si =>
               metas(si)._3 >= qtime - ttl && metas(si)._2 <= qtime
             }
-            def linear: Set[Int] = linearRoute(qv, inWin, metas(_)._1, cap)
             val chosen: Int => Boolean =
               if (cap >= inWin.size) inWin.toSet
-              else bRouter match {
-                case Some(r) =>
-                  val inWinSet = inWin.toSet
-                  r.value.route(qv, cap, inWinSet, inWin.size)
-                    .getOrElse(linear)
-                case None => linear
-              }
+              else linearRoute(qv, inWin, metas(_)._1, cap)
             bIdx.value.collect {
               case (i, si, _) if chosen(si) => (i, qid, qv, qtime, ttl)
             }
@@ -3789,62 +3758,6 @@ object ColdTier {
         col("topk.dists").as("dist"))))
       .select(col("qid"), (col("pos") + 1).as("rn"),
         col("col.id").as("id"), col("col.dist").as("dist"))
-  }
-
-  /** Serving-path instrumentation for the DIRECT DataFrame API
-   * ([[searchIndexedLiteralFiltered]]): which kernel answered the LAST
-   * literal-filtered call on THIS thread — "exact" (the
-   * admission-collapsed exact scan kernel, recall 1.0 by construction) or
-   * "probe" (the graph probe). Set when the call builds its plan.
-   * Thread-local so parallel suites cannot pollute each other's
-   * observation. The SQL operator does not use it: a served statement
-   * reports its engine through [[graft.plans.KnnServeExec]]'s metrics.
-   * It stays for the direct API only, until one engine planner
-   * (`ServePlan`, ROADMAP direction 5) returns the decision instead. */
-  val literalServedVia = new ThreadLocal[String]
-
-  /** Which ENGINE the direct API's exact serving decision used for the
-   * LAST call on THIS thread: "memory" (the process-local kernel over
-   * [[SegmentDataCache]]-resident segments — zero Spark jobs per
-   * statement after the per-segment warm load) or "scan" (the lazy
-   * distributed scan plan). Observability sibling of
-   * [[literalServedVia]], which stays "exact" for both: the kernel, the
-   * predicate semantics and the result contract are identical — only
-   * the execution locality differs. Direct API only, like
-   * [[literalServedVia]]. */
-  val exactServedFrom = new ThreadLocal[String]
-
-  /** The query rows of a PLAN-TIME-enumerable query set: Some(rows) iff
-   * the optimized plan is a LocalRelation of at most `maxQ` rows
-   * carrying exactly the kernel's (qid LONG, qv ARRAY<FLOAT>, qtime
-   * LONG, ttl LONG) columns; None otherwise — cached / scanned /
-   * distributed query sets keep the distributed kernel. */
-  private def planTimeQueries(queries: DataFrame,
-      maxQ: Int): Option[Array[(Long, Array[Float], Long, Long)]] = {
-    import org.apache.spark.sql.types._
-    queries.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.data.length <= maxQ =>
-        val out = lr.output
-        def ord(name: String, ok: DataType => Boolean): Option[Int] = {
-          val i = out.indexWhere(_.name == name)
-          if (i >= 0 && ok(out(i).dataType)) Some(i) else None
-        }
-        val isFloatArray: DataType => Boolean = {
-          case ArrayType(FloatType, _) => true
-          case _ => false
-        }
-        for {
-          qi <- ord("qid", _ == LongType)
-          vi <- ord("qv", isFloatArray)
-          ti <- ord("qtime", _ == LongType)
-          li <- ord("ttl", _ == LongType)
-        } yield lr.data.map { r =>
-          (r.getLong(qi), r.getArray(vi).toFloatArray(), r.getLong(ti),
-            r.getLong(li))
-        }.toArray
-      case _ => None
-    }
   }
 
   /** Query-independent survival mask over one cached segment: the
@@ -3942,25 +3855,6 @@ object ColdTier {
     s"${entries.length}$KeySep${entries.mkString(KeySep)}"
   }
 
-  /** Dedicated bounded pool for the warm-cache batch kernel. r16 fanned
-   * batch kernels across `ExecutionContext.global` — the same default
-   * pool concurrent statement planning lands on — and the r16 verdict
-   * named that contention as a co-conspirator in the SQL serving
-   * point's 3x run-to-run band. CPU-bound kernel work now runs on its
-   * own fixed pool (cores - 2: leaves planning headroom), daemon
-   * threads so it can never pin the JVM. */
-  private lazy val exactKernelEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(2, Runtime.getRuntime.availableProcessors() - 2),
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger()
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-exact-kernel-${n.incrementAndGet()}")
-            t.setDaemon(true); t
-          }
-        }))
-
   /** The decoded-data + survival-mask skeleton of an admission-collapsed
    * literal plan — everything about the statement that does NOT depend
    * on the query vector, assembled from caches so a warm statement's
@@ -4033,141 +3927,41 @@ object ColdTier {
     Some((datas, masks))
   }
 
-  /** The bounded-heap kernel over a resident skeleton: one result slot
-   * per query, rows (qid, rn 1..k, id, dist) in ascending (dist, id)
-   * within a slot — [[graft.functions.BoundedTopK]] through
-   * [[graft.ops.Ann.offerBounded]], bit-identical distances, merge and
-   * keyed-dedup contract to the distributed engine. A single query runs
-   * inline on its client thread; a batch fans per-query kernels
-   * (independent heaps, shared read-only masks/data) across the
-   * dedicated [[exactKernelEc]] pool with slot-indexed assembly
-   * (order-deterministic). The batch Await is FINITE
-   * ([[ExactServeLocalTimeoutSecKey]]) — a fatally dying kernel thread
-   * (OOM) degrades to the scan engine instead of hanging the statement
-   * forever (r16 verdict #7); None = timed out / parallel path
-   * disabled, caller falls back. */
-  private def runExactKernel(spark: SparkSession,
-      datas: Array[SegmentData], masks: Array[Array[Boolean]],
-      qRows: Array[(Long, Array[Float], Long, Long)], k: Int,
-      metric: Metric,
+  /** The bounded-heap kernel over a resident skeleton for ONE query, run
+   * on the calling thread: its top-k (id, dist) rows ascending (dist, id)
+   * and the rows offered to the heap — [[graft.functions.BoundedTopK]]
+   * through [[graft.ops.Ann.offerBounded]], bit-identical distances,
+   * merge and keyed-dedup contract to the distributed engine. */
+  private def runExactKernel(datas: Array[SegmentData],
+      masks: Array[Array[Boolean]], qv: Array[Float], qtime: Long,
+      ttl: Long, k: Int, metric: Metric,
       // restrict the scan to rows whose id is in a candidate set (the
       // graph route's exact re-rank); null = every masked row
-      keep: Long => Boolean = null,
-      // rows offered to the heaps, summed over the queries (null = none)
-      scored: java.util.concurrent.atomic.LongAdder = null)
-      : Option[Array[Array[(Long, Int, Long, Double)]]] = {
+      keep: Long => Boolean = null): (Array[(Long, Double)], Long) = {
     val distFn = Distances.forMetric(metric)
     val l2Abandon = metric == Metric.L2
-    val results = new Array[Array[(Long, Int, Long, Double)]](qRows.length)
-    val abort = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def runOne(qi: Int): Unit = {
-      val (qid, qv, qtime, ttl) = qRows(qi)
-      val h = new graft.functions.BoundedTopK(k)
-      var offered = 0L
-      var si = 0
-      while (si < datas.length) {
-        if (abort.get()) return
-        val sd = datas(si); val mask = masks(si)
-        val n = sd.ids.length
-        var i = 0
-        while (i < n) {
-          if (mask(i) && (keep == null || keep(sd.ids(i)))) {
-            val ts = sd.times(i)
-            if (ts >= qtime - ttl && ts <= qtime) {
-              graft.ops.Ann.offerBounded(h, qv, sd.vecs(i), sd.ids(i),
-                l2Abandon, distFn)
-              offered += 1
-            }
+    val h = new graft.functions.BoundedTopK(k)
+    var offered = 0L
+    var si = 0
+    while (si < datas.length) {
+      val sd = datas(si); val mask = masks(si)
+      val n = sd.ids.length
+      var i = 0
+      while (i < n) {
+        if (mask(i) && (keep == null || keep(sd.ids(i)))) {
+          val ts = sd.times(i)
+          if (ts >= qtime - ttl && ts <= qtime) {
+            graft.ops.Ann.offerBounded(h, qv, sd.vecs(i), sd.ids(i),
+              l2Abandon, distFn)
+            offered += 1
           }
-          i += 1
-          if ((i & 4095) == 0 && abort.get()) return
         }
-        si += 1
+        i += 1
       }
-      if (scored != null) scored.add(offered)
-      val (ids, ds) = h.drainSorted()
-      results(qi) = Array.tabulate(ids.length)(j => (qid, j + 1, ids(j), ds(j)))
+      si += 1
     }
-    if (qRows.length <= 1) {
-      if (qRows.length == 1) runOne(0)
-      Some(results)
-    } else {
-      val timeoutSec = spark.conf.getOption(ExactServeLocalTimeoutSecKey)
-        .map(_.toLong).getOrElse(ExactServeLocalTimeoutSecDefault)
-      if (timeoutSec <= 0) return None
-      if (runAbortable(qRows.length, timeoutSec, abort)(runOne)) Some(results)
-      else {
-        logger.warn(s"exact batch kernel missed its ${timeoutSec}s " +
-          "bound; falling back to the distributed scan engine")
-        None
-      }
-    }
-  }
-
-  /** Runs `body(i)` for every i in [0, n) on [[exactKernelEc]], waiting
-   * at most `timeoutSec`. On timeout it raises `abort` and returns false:
-   * tasks still queued skip their body, and running bodies poll `abort`
-   * in their loops, so a batch nobody waits for any more frees the pool
-   * instead of queueing the next statement's batch behind it. */
-  private[store] def runAbortable(n: Int, timeoutSec: Long,
-      abort: java.util.concurrent.atomic.AtomicBoolean)
-      (body: Int => Unit): Boolean = {
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = exactKernelEc
-    try {
-      Await.result(
-        Future.sequence((0 until n).map(i =>
-          Future(if (!abort.get()) body(i)))),
-        scala.concurrent.duration.Duration(timeoutSec,
-          java.util.concurrent.TimeUnit.SECONDS))
-      true
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        abort.set(true)
-        false
-    }
-  }
-
-  /** The admission-collapsed literal plan served WITHOUT a per-statement
-   * Spark job: the admitted segments (already bounded by
-   * exactKernelSegments / exactKernelMaxRows) are decoded once into
-   * [[SegmentDataCache]], and every statement runs the same bounded-heap
-   * dedup-by-id kernel ([[graft.functions.BoundedTopK]] through
-   * [[graft.ops.Ann.offerBounded]] — bit-identical distances, merge and
-   * keyed-dedup contract) over the resident arrays. Returns None — the
-   * caller falls back to the lazy distributed scan — when any
-   * precondition fails:
-   *  - the engine is disabled ([[ExactServeLocalKey]]) or the cache
-   *    budget is <= 0;
-   *  - the query set is not plan-time enumerable or exceeds
-   *    [[ExactServeLocalMaxQueriesKey]] (memory here is bounded by
-   *    |queries| x k result rows — an unbounded query batch must not
-   *    collapse onto one process);
-   *  - the delete log exceeds the tombstone broadcast budget (the local
-   *    map would cost what the distributed anti-join refuses to ship).
-   * Correctness-equivalent to the scan engine by construction: same
-   * conservative admission set, same resolved predicate expression,
-   * same EXISTS(del_ts >= eventTime) tombstone semantics, same kernel
-   * code — gated bit-exact by knn_sql_rewrite_aligned_exact and
-   * ExactServeLocalSpec. */
-  private def serveExactFromMemory(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int,
-      filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
-      ranges: Seq[RangeBound], metric: Metric, snapshot: Option[Long],
-      segs: Array[SegmentStats]): Option[DataFrame] = {
-    import spark.implicits._
-    val maxQ = spark.conf.getOption(ExactServeLocalMaxQueriesKey)
-      .map(_.toInt).getOrElse(ExactServeLocalMaxQueriesDefault)
-    val qRows = planTimeQueries(queries, maxQ) match {
-      case Some(r) => r
-      case None => return None
-    }
-    for {
-      (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
-        snapshot, segs)
-      results <- runExactKernel(spark, datas, masks, qRows, k, metric)
-    } yield results.iterator.flatMap(_.iterator).toSeq
-      .toDF("qid", "rn", "id", "dist")
+    val (ids, ds) = h.drainSorted()
+    (Array.tabulate(ids.length)(j => (ids(j), ds(j))), offered)
   }
 
   /** The per-column admission sets of a literal plan, intersected — ONE
@@ -4185,6 +3979,20 @@ object ColdTier {
         admissibleIdsRange(spark, dir, f, bs, cat0 = cat)
       })
       .reduceOption(_ intersect _)
+
+  /** Default eligibility bounds of the exact kernel ([[exactCollapse]]),
+   * shared by [[searchIndexedLiteralFiltered]] and [[serveLocal]]. When
+   * plan-time admission collapses a literal plan to at most
+   * `ExactKernelSegments` segments — strictly fewer than the catalog, so
+   * the attr-stats sidecar genuinely pruned (an attr-ALIGNED tier) — the
+   * predicate-filtered scan of just those segments is lossless and, on
+   * the converged layout, dominates the graph probe on both axes (r14
+   * 10x: recall 1.0 at ~200 q/s vs 0.9468 at ~32 q/s static / 0.67 at
+   * ~40 q/s in-walk-96). `ExactKernelMaxRows` (2^20 rows: at 128-dim the
+   * work of a few graph probes per query) keeps the path off degenerate
+   * layouts with one huge admitted segment. */
+  private val ExactKernelSegments = 4
+  private val ExactKernelMaxRows: Long = 1L << 20
 
   /** The admitted segments of an admission-COLLAPSED literal plan —
    * Some(segs, catalog order) exactly when the exact-kernel serving
@@ -4221,15 +4029,17 @@ object ColdTier {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** In-process serving for the SQL operator
+  /** The one in-process serving engine, used by the SQL operator
    * ([[graft.plans.KnnServeExec]], at execute time): the registered
    * probe for ONE query, run on the calling thread over process-resident
    * data, so a warm statement runs zero Spark jobs (the distributed probe
    * costs 7-13 jobs per statement). The engine decision is the
    * distributed route's, unchanged:
    *  - an admission-COLLAPSED literal plan ([[exactCollapse]]) runs the
-   *    warm memory kernel over [[SegmentDataCache]]-resident segments,
-   *    as [[searchIndexedLiteralFiltered]]'s exact branch does;
+   *    warm memory kernel ([[runExactKernel]]) over
+   *    [[SegmentDataCache]]-resident segments, where
+   *    [[searchIndexedLiteralFiltered]]'s exact branch runs the same
+   *    bounded-heap kernel as a pushed-down distributed scan;
    *  - every other shape runs the graph probe of [[searchIndexedFast]]
    *    (unfiltered) or [[searchIndexedLiteralFiltered]] (literal) over
    *    [[SidecarCache]] graphs — same freshness filter, admission set,
@@ -4247,10 +4057,14 @@ object ColdTier {
    * local engine on ([[ExactServeLocalKey]]), every in-window segment to
    * carry a centroid and a committed sidecar, the routed sidecars plus
    * any decoded segments to fit [[SegmentCacheBytesKey]], and the delete
-   * log to fit the tombstone broadcast budget. It reports its engine in
-   * the returned [[Served]], never through the direct API's
-   * thread-locals. Bit-equality with the distributed route is gated by
-   * KnnRewriteSpec and the knn_sql_rewrite* oracle entries. */
+   * log to fit the tombstone broadcast budget; the exact kernel needs
+   * the same engine switch, budget and delete-log bound. It reports its
+   * engine in the returned [[Served]]. `exactKernelSegments` /
+   * `exactKernelMaxRows` bound the exact kernel's eligibility (defaults
+   * [[ExactKernelSegments]] / [[ExactKernelMaxRows]], the direct API's
+   * fixed bounds; 0 segments forces the graph route). Bit-equality with
+   * the distributed route is gated by KnnRewriteSpec, ExactServeLocalSpec
+   * and the knn_sql_rewrite* oracle entries. */
   private[graft] def serveLocal(spark: SparkSession, dir: String,
       qv: Array[Float], qtime: Long, ttl: Long, k: Int,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
@@ -4258,8 +4072,8 @@ object ColdTier {
       snapshot: Option[Long] = None, efSearch: Int = 64,
       probeSegments: Int = Int.MaxValue, shortlist: Int = 50,
       overfetch: Int = 4, inWalk: Boolean = false,
-      exactKernelSegments: Int = 4, exactKernelMaxRows: Long = 1L << 20)
-      : Option[Served] = {
+      exactKernelSegments: Int = ExactKernelSegments,
+      exactKernelMaxRows: Long = ExactKernelMaxRows): Option[Served] = {
     serveLocalCalls.incrementAndGet()
     val literal = filters.nonEmpty || ranges.nonEmpty
     if (k <= 0 || (literal && shortlist < k)) return None
@@ -4268,23 +4082,17 @@ object ColdTier {
     val admissible =
       if (literal) literalAdmission(spark, dir, filters, ranges, cat)
       else None
-    val query = Array((0L, qv, qtime, ttl))
-    val scored = new java.util.concurrent.atomic.LongAdder
-    def served(results: Array[Array[(Long, Int, Long, Double)]],
-        engine: String, segments: Int) =
-      Served(results(0).map { case (_, _, id, d) => (id, d) }, engine,
-        segments, scored.sum())
     if (literal) exactCollapse(cat, admissible, exactKernelSegments,
         exactKernelMaxRows) match {
       case Some(segs) =>
         // the distributed route's shared empty early-return
         if (segs.isEmpty) return Some(Served(Array.empty, "exact", 0, 0L))
-        return for {
-          (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
-            snapshot, segs)
-          results <- runExactKernel(spark, datas, masks, query, k, metric,
-            scored = scored)
-        } yield served(results, "exact", segs.length)
+        return exactServeSkeleton(spark, dir, filters, ranges, snapshot,
+            segs).map { case (datas, masks) =>
+          val (rows, scored) =
+            runExactKernel(datas, masks, qv, qtime, ttl, k, metric)
+          Served(rows, "exact", segs.length, scored)
+        }
       case None => ()
     }
 
@@ -4341,17 +4149,14 @@ object ColdTier {
     } else {
       val depth = shortlist *
         literalOverfetch(spark, dir, filters, ranges, overfetch, inWalk, cat)
-      for {
-        (datas, masks) <- exactServeSkeleton(spark, dir, filters, ranges,
-          snapshot, fresh, extraBytes = graphBytes)
-        cands = {
-          val c = scala.collection.mutable.LongMap.empty[Unit]
-          probe(depth).foreach { case (id, _) => c.update(id, ()) }
-          c
-        }
-        results <- runExactKernel(spark, datas, masks, query, k, metric,
-          keep = cands.contains, scored = scored)
-      } yield served(results, "probe", fresh.length)
+      exactServeSkeleton(spark, dir, filters, ranges, snapshot, fresh,
+          extraBytes = graphBytes).map { case (datas, masks) =>
+        val cands = scala.collection.mutable.LongMap.empty[Unit]
+        probe(depth).foreach { case (id, _) => cands.update(id, ()) }
+        val (rows, scored) = runExactKernel(datas, masks, qv, qtime, ttl, k,
+          metric, keep = cands.contains)
+        Served(rows, "probe", fresh.length, scored)
+      }
     }
   }
 
@@ -4409,7 +4214,9 @@ object ColdTier {
   /** LITERAL-filtered sidecar search for plan-time rewrites — the
    * IN-list and multi-column-conjunction shapes (`WHERE label IN (...)
    * AND region = 'x' ORDER BY dist LIMIT k`) where every filter value
-   * is known at plan time. Same composition as a `filterColumn`
+   * is known at plan time. Always a lazy distributed plan; the SQL
+   * operator's in-process engine is [[serveLocal]], which answers the
+   * same shapes identically. Same composition as a `filterColumn`
    * [[probeCandidates]] + [[rerankExact]] (over-fetched filter-oblivious
    * graph shortlist → candidate-bounded hydration under the predicate),
    * but:
@@ -4418,14 +4225,19 @@ object ColdTier {
    *    admits at least one IN value, and per-column sets INTERSECT
    *    (conjunction) — one admission set per plan, zero per-query cost;
    *  - hydration applies the full literal predicate (any-of per column,
-   *    AND across columns) through [[filterEquality]].
+   *    AND across columns) through [[filterEquality]];
+   *  - an admission-COLLAPSED plan ([[exactCollapse]] under
+   *    [[ExactKernelSegments]] / [[ExactKernelMaxRows]]) skips the graph
+   *    and is served LOSSLESSLY by a pushed-down predicate-filtered scan
+   *    of just the admitted segments through the bounded-heap
+   *    bruteForce kernel.
    * `filters`: one entry per column — (column, values, value type). */
   def searchIndexedLiteralFiltered(spark: SparkSession, dir: String,
       queries: DataFrame, k: Int,
       filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
       metric: Metric = Metric.L2, shortlist: Int = 50,
       efSearch: Int = 64, probeSegments: Int = Int.MaxValue,
-      overfetch: Int = 4, routeEf: Int = 0,
+      overfetch: Int = 4,
       // plan-time literal RANGE conjuncts (`score >= a AND score < b`,
       // BETWEEN): admission via the closed hull per column
       // ([[admissibleIdsRange]]), hydration re-applies each conjunct
@@ -4448,26 +4260,7 @@ object ColdTier {
       // per-segment and segments are immutable, so live stats rows stay
       // valid for pinned segments; a pinned segment missing from the
       // refreshed stats simply never prunes — conservative)
-      snapshot: Option[Long] = None,
-      // EXACT-KERNEL serving decision (r14 verdict #3): when plan-time
-      // admission collapses the literal plan to at most this many
-      // segments — strictly fewer than the catalog, so the attr-stats
-      // sidecar genuinely pruned (an attr-ALIGNED tier) — the call is
-      // served LOSSLESSLY by a predicate-filtered scan of just those
-      // segments through the bounded-heap bf kernel instead of any
-      // graph probe: admission already bounds the scan to
-      // ~|admitted|/|catalog| of the tier, and on the converged layout
-      // the exact kernel dominates the probe on BOTH axes (r14 10x:
-      // recall 1.0 at ~200 q/s vs 0.9468 at ~32 q/s static / 0.67 at
-      // ~40 q/s in-walk-96). A row guard keeps the path off degenerate
-      // layouts (one huge admitted segment). <= 0 disables the fast
-      // path. Which kernel served is observable via
-      // [[literalServedVia]].
-      exactKernelSegments: Int = 4,
-      // row bound for the exact-kernel decision: the admitted segments'
-      // total row count must stay under it (default 2^20 — at 128-dim
-      // that is the work of a few graph probes per query)
-      exactKernelMaxRows: Long = 1L << 20): DataFrame = {
+      snapshot: Option[Long] = None): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist < k $k")
     require(filters.nonEmpty || ranges.nonEmpty,
       "searchIndexedLiteralFiltered: no filters given")
@@ -4479,67 +4272,50 @@ object ColdTier {
     val cat = snapshot.map(v => catalogAt(spark, dir, v))
       .getOrElse(catalog(spark, dir))
     val admissible = literalAdmission(spark, dir, filters, ranges, cat)
-    // the exact-kernel fast path (param scaladoc above): admission
-    // strictly narrowed the catalog to a tiny segment set with a
-    // bounded row count. Any literal shape is servable — the executor
-    // below applies the FULL conjunction (equality, IN, ranges incl.
-    // strict bounds, tz-dependent columns) through literalPredicate,
-    // and admission from the collapsing column stays conservative for
-    // the others — so eligibility is purely the admission collapse.
-    val exactEligible =
-      exactCollapse(cat, admissible, exactKernelSegments,
-        exactKernelMaxRows).isDefined
-    if (exactEligible) {
-      literalServedVia.set("exact")
-      import spark.implicits._
-      val admitted = admissible.get
-      val segs = cat.filter(s => admitted(s.segmentId))
-      if (segs.isEmpty)
-        return spark.emptyDataset[(Long, Int, Long, Double)]
-          .toDF("qid", "rn", "id", "dist")
-      // FIRST choice: the process-local kernel over warm cached
-      // segments — zero Spark jobs per statement once the admitted
-      // segments are resident (r15 measured the per-statement scan-job
-      // dispatch, not the plan, as the serving bottleneck: 8.7-20 q/s
-      // where the kernel's own work is milliseconds). Falls through on
-      // any precondition miss (disabled, non-plan-time query set,
-      // oversized delete log) — see [[serveExactFromMemory]].
-      serveExactFromMemory(spark, dir, queries, k, filters, ranges,
-          metric, snapshot, segs) match {
-        case Some(df) => exactServedFrom.set("memory"); return df
-        case None => exactServedFrom.set("scan")
-      }
-      // FALLBACK: the LEAN lazy distributed plan, not the wave
-      // machinery: the literal is a PLAN constant shared by every
-      // query, so the predicate-filtered scan of the admitted segments
-      // IS each query's full candidate set — push the literal to the
-      // parquet scan (PushedFilters + row-group pruning on an aligned
-      // tier) and run the bounded-heap bf kernel over the survivors.
-      // Zero plan-time Spark jobs (search()'s wave planning runs ~5
-      // eager driver actions per call — measured 3.5 q/s through 512
-      // concurrent spark.sql statements), row-level freshness inside
-      // the kernel, dedup-by-id heap (fd22412), the same (dist, id)
-      // merge contract. Exact by construction: admission is
-      // conservative (mayMatch superset), tombstones anti-join before
-      // the kernel. QUERY-BROADCAST contract (shared with every
-      // serving path in this object, see probeCandidates): bruteForce
-      // collects the query set to the driver and broadcasts it — the
-      // query side must be batch-bounded, the corpus side streams.
-      val paths = segs.map(_.path)
-      val raw = applyTombstonesFor(spark, dir, snapshot,
-        spark.read.parquet(paths.toIndexedSeq: _*))
-      return graft.ops.Ann.bruteForce(
-        raw.where(literalPredicate(raw, filters, ranges))
-          .select(col("id"), col("vec"), col("eventTime")),
-        queries, k, metric)
+    // the exact-kernel branch: admission strictly narrowed the catalog to
+    // a tiny segment set with a bounded row count. Any literal shape is
+    // servable — the scan below applies the FULL conjunction (equality,
+    // IN, ranges incl. strict bounds, tz-dependent columns) through
+    // literalPredicate, and admission from the collapsing column stays
+    // conservative for the others — so eligibility is purely the
+    // admission collapse.
+    exactCollapse(cat, admissible, ExactKernelSegments,
+        ExactKernelMaxRows) match {
+      case Some(segs) =>
+        import spark.implicits._
+        if (segs.isEmpty)
+          return spark.emptyDataset[(Long, Int, Long, Double)]
+            .toDF("qid", "rn", "id", "dist")
+        // the LEAN lazy distributed plan, not the wave machinery: the
+        // literal is a PLAN constant shared by every query, so the
+        // predicate-filtered scan of the admitted segments IS each
+        // query's full candidate set — push the literal to the parquet
+        // scan (PushedFilters + row-group pruning on an aligned tier) and
+        // run the bounded-heap bf kernel over the survivors. Zero
+        // plan-time Spark jobs (search()'s wave planning runs ~5 eager
+        // driver actions per call — measured 3.5 q/s through 512
+        // concurrent spark.sql statements), row-level freshness inside
+        // the kernel, dedup-by-id heap (fd22412), the same (dist, id)
+        // merge contract. Exact by construction: admission is
+        // conservative (mayMatch superset), tombstones anti-join before
+        // the kernel. QUERY-BROADCAST contract (shared with every serving
+        // path in this object, see probeCandidates): bruteForce collects
+        // the query set to the driver and broadcasts it — the query side
+        // must be batch-bounded, the corpus side streams.
+        val raw = applyTombstonesFor(spark, dir, snapshot,
+          spark.read.parquet(segs.map(_.path).toIndexedSeq: _*))
+        return graft.ops.Ann.bruteForce(
+          raw.where(literalPredicate(raw, filters, ranges))
+            .select(col("id"), col("vec"), col("eventTime")),
+          queries, k, metric)
+      case None => ()
     }
-    literalServedVia.set("probe")
     val effOverfetch = literalOverfetch(spark, dir, filters, ranges,
       overfetch, inWalk, cat)
     rerankExact(spark, dir,
       probeCandidates(spark, dir, queries,
         shortlist * effOverfetch, metric, efSearch,
-        probeSegments, routeEf, admissible = admissible,
+        probeSegments, admissible = admissible,
         inWalkLiterals = if (inWalk) filters else Nil,
         inWalkRanges = if (inWalk) ranges else Nil,
         snapshot = snapshot),

@@ -512,7 +512,10 @@ object VectorStreamJob {
    * (partition, id) with its stored event time — the Spark-side surface
    * of the reference's DataType.DUMP state dump. Send
    * `StreamEvent("s", dumpId, null, ts, 0, 0)` and read these from the
-   * partial stream (they are excluded from the query merge). */
+   * partial stream (they are excluded from the query merge). `run` and
+   * `AdaptiveRouter.runPipeline` drop DUMP partials: their sinks see
+   * only the merged query rows, so read a dump from a hand-built
+   * `route` + `partials` query over the same events. */
   def stateDumps(batch: DataFrame): DataFrame =
     batch.where(col("numPartitionsSent") < 0 &&
         col("numPartitionsSent") > Int.MinValue + 16) // reserved marker band

@@ -723,22 +723,70 @@ class KnnRewriteSpec extends AnyFunSuite {
         s"exact kernel must bit-match the truth: got ${got.map(_._1).toList} " +
           s"want ${truth.map(_._1).toList}")
 
-      // control: the SAME literal through the direct API with the fast
-      // path DISABLED routes to the graph probe — proving the decision
-      // (not the layout) picked the kernel above
-      import spark.implicits._
-      val q1 = Seq((0L, q, Long.MaxValue / 2, Long.MaxValue / 2))
-        .toDF("qid", "qv", "qtime", "ttl")
-      ColdTier.literalServedVia.remove()
-      val probed = ColdTier.searchIndexedLiteralFiltered(spark, coldDir,
-        q1, 10, filters = Seq(("label", Seq(2),
-          org.apache.spark.sql.types.IntegerType)),
-        metric = Metric.L2, shortlist = 64, efSearch = 96,
-        exactKernelSegments = 0)
-      probed.collect()
-      assert(ColdTier.literalServedVia.get == "probe",
+      // control: the SAME literal through the in-process engine with the
+      // fast path DISABLED routes to the graph probe — proving the
+      // decision (not the layout) picked the kernel above
+      val probed = ColdTier.serveLocal(spark, coldDir, q, Long.MaxValue / 2,
+        Long.MaxValue / 2, 10, Seq(("label", Seq(2),
+          org.apache.spark.sql.types.IntegerType)), Nil, Metric.L2,
+        shortlist = 64, efSearch = 96, exactKernelSegments = 0)
+      assert(probed.map(_.engine) == Some("probe"),
         "exactKernelSegments = 0 must disable the fast path")
     } finally KnnIndex.clear()
+  }
+
+  test("with in-process serving off, an aligned WHERE label = x statement " +
+      "runs the direct API's pushed-down exact scan, bit-equal to the " +
+      "exact engine") {
+    val (corpusPath, coldDir, rows) = alignedFixture()
+    // executed plans of the queries the statement runs (the distributed
+    // route collects its own DataFrame inside the operator)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    try {
+      KnnIndex.register(corpusPath, coldDir, efSearch = 96,
+        probeSegments = 5, shortlist = 64, filterColumns = Set("label"))
+      val q = rows(42)._2
+      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_alc_dist")
+      val arr = q.map(f => s"CAST($f AS FLOAT)").mkString("array(", ",", ")")
+      // (id, distance bits) rows and engine of one statement
+      def served() = {
+        val df = spark.sql(
+          s"""SELECT id, l2_distance(vec, $arr) AS dist
+             |FROM knn_alc_dist WHERE label = 2
+             |ORDER BY dist LIMIT 10""".stripMargin)
+        val got = df.collect().map(r =>
+          (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+        (got.toSeq, engineOf(df))
+      }
+      val (exact, exactEngine) = served()
+      assert(exactEngine == Some("exact"))
+      assert(exact.length == 10)
+      spark.listenerManager.register(listener)
+      spark.conf.set(ColdTier.ExactServeLocalKey, "false")
+      val (dist, distEngine) = try served()
+        finally spark.conf.unset(ColdTier.ExactServeLocalKey)
+      assert(distEngine == Some("distributed"),
+        "with exactServeLocal=false the statement must run distributed")
+      assert(dist == exact,
+        "the distributed exact scan must answer bit-equal to the exact engine")
+      def pushed = plans.toArray.map(_.toString).exists(p =>
+        p.contains("PushedFilters: [") && p.contains("EqualTo(label,2)"))
+      val deadline = System.nanoTime() + 10000000000L
+      while (!pushed && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(pushed, "the distributed route must push label = 2 to the " +
+        s"parquet scan; executed plans:\n${plans.toArray.mkString("\n")}")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      KnnIndex.clear()
+    }
   }
 
   test("memory-served aligned statement is JOB-FREE: pre-sorted " +

@@ -8,17 +8,16 @@ import graft.Metric
 import graft.functions.Distances
 
 /**
- * The r16 serving engine decision inside the exact-kernel fast path
- * ([[ColdTier.searchIndexedLiteralFiltered]]): an admission-collapsed
- * literal plan is served by the PROCESS-LOCAL kernel over
+ * The two exact engines of an admission-collapsed literal plan: the
+ * PROCESS-LOCAL kernel of [[ColdTier.serveLocal]] over
  * [[ColdTier.SegmentDataCache]]-resident segments (zero Spark jobs per
- * statement once warm) with the lazy DISTRIBUTED scan as fallback. The
- * two engines must be bit-identical on every literal shape — same
- * conservative admission, same resolved Catalyst predicate, same
- * tombstone semantics, same BoundedTopK kernel — and the fallback must
- * keep its scan pushdown. Which engine served is observable via
- * [[ColdTier.exactServedFrom]] ("memory" | "scan");
- * [[ColdTier.literalServedVia]] stays "exact" for both.
+ * statement once warm; `engine == "exact"`) and the lazy DISTRIBUTED
+ * scan of the direct API ([[ColdTier.searchIndexedLiteralFiltered]]),
+ * which the SQL operator runs when `serveLocal` declines. The two must
+ * be bit-identical on every literal shape — same conservative
+ * admission, same resolved Catalyst predicate, same tombstone
+ * semantics, same BoundedTopK kernel — and the scan must keep its
+ * pushdown. `serveLocal` returning None is the decline.
  */
 class ExactServeLocalSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder().master("local[4]")
@@ -56,6 +55,29 @@ class ExactServeLocalSpec extends AnyFunSuite {
     Seq((0L, qv, 100000L, 1000000L)).toDF("qid", "qv", "qtime", "ttl")
   }
 
+  /** `serveLocal`'s answer for one query in the queriesDf window as
+   * (qid, rn, id, dist) rows, or None when it declines; a served answer
+   * must come from the exact engine. */
+  private def memory(dir: String, qv: Array[Float],
+      filters: Seq[(String, Seq[Any], org.apache.spark.sql.types.DataType)],
+      ranges: Seq[ColdTier.RangeBound] = Nil, qid: Long = 0L)
+      : Option[Seq[(Long, Int, Long, Double)]] =
+    ColdTier.serveLocal(spark, dir, qv, 100000L, 1000000L, k, filters,
+        ranges, shortlist = 8, efSearch = 32)
+      .map { s =>
+        assert(s.engine == "exact",
+          "an admission-collapsed literal should serve from the exact engine")
+        s.rows.toSeq.zipWithIndex.map { case ((id, d), i) =>
+          (qid, i + 1, id, d) }
+      }
+
+  /** The direct API's rows sorted by (qid, rn). */
+  private def scanRows(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Int, Long, Double)] =
+    df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(t => (t._1, t._2)).toSeq
+
   /** Runs the literal plan under both engines, asserts the decision
    * observables, returns (memoryRows, scanRows) sorted by (qid, rn). */
   private def bothEngines(
@@ -63,23 +85,15 @@ class ExactServeLocalSpec extends AnyFunSuite {
       ranges: Seq[ColdTier.RangeBound] = Nil,
       qv: Array[Float]): (Seq[(Long, Int, Long, Double)],
       Seq[(Long, Int, Long, Double)]) = {
-    def run(): Seq[(Long, Int, Long, Double)] =
-      ColdTier.searchIndexedLiteralFiltered(spark, fixture._1,
-          queriesDf(qv), k, filters, Metric.L2, shortlist = 8,
-          efSearch = 32, ranges = ranges)
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    val mem = run()
-    assert(ColdTier.literalServedVia.get == "exact")
-    assert(ColdTier.exactServedFrom.get == "memory",
-      "default engine should be the warm-cache local kernel")
+    val mem = memory(fixture._1, qv, filters, ranges).getOrElse(
+      fail("default engine should be the warm-cache local kernel"))
+    val scan = scanRows(ColdTier.searchIndexedLiteralFiltered(spark,
+      fixture._1, queriesDf(qv), k, filters, Metric.L2, shortlist = 8,
+      efSearch = 32, ranges = ranges))
     spark.conf.set(ColdTier.ExactServeLocalKey, "false")
-    val scan = try run() finally
-      spark.conf.unset(ColdTier.ExactServeLocalKey)
-    assert(ColdTier.literalServedVia.get == "exact")
-    assert(ColdTier.exactServedFrom.get == "scan",
-      "kill switch should force the distributed scan engine")
+    try assert(memory(fixture._1, qv, filters, ranges).isEmpty,
+      "the kill switch should decline in-process serving")
+    finally spark.conf.unset(ColdTier.ExactServeLocalKey)
     (mem, scan)
   }
 
@@ -148,47 +162,28 @@ class ExactServeLocalSpec extends AnyFunSuite {
     val (dir, all) = fixture
     val qv = all(123)._2
     val lt = org.apache.spark.sql.types.LongType
-    def run(qs: org.apache.spark.sql.DataFrame) =
-      ColdTier.searchIndexedLiteralFiltered(spark, dir, qs, k,
-        Seq(("label", Seq(2L), lt)), Metric.L2, shortlist = 8,
-        efSearch = 32).collect()
+    val label = Seq(("label", Seq(2L), lt))
+    def run(qs: org.apache.spark.sql.DataFrame) = scanRows(
+      ColdTier.searchIndexedLiteralFiltered(spark, dir, qs, k, label,
+        Metric.L2, shortlist = 8, efSearch = 32))
+    val mem = memory(dir, qv, label).get
 
-    // a cached query set is an InMemoryRelation, not a LocalRelation —
-    // the plan-time row bound cannot be established, so: scan engine
+    // a cached query set (an InMemoryRelation, not a LocalRelation)
+    // through the direct API answers what the exact engine answers
     val cached = queriesDf(qv).cache()
     try {
       cached.count()
-      val viaCache = run(cached)
-      assert(ColdTier.exactServedFrom.get == "scan")
-      assert(viaCache.nonEmpty)
+      assert(run(cached) == mem)
     } finally cached.unpersist()
 
-    // a query batch past the configured bound stays distributed
+    // a two-query batch: per qid, the exact engine's rows for that query
     val two = Seq((0L, qv, 100000L, 1000000L), (1L, qv, 100000L, 1000000L))
       .toDF("qid", "qv", "qtime", "ttl")
-    spark.conf.set(ColdTier.ExactServeLocalMaxQueriesKey, "1")
-    try {
-      run(two)
-      assert(ColdTier.exactServedFrom.get == "scan")
-    } finally spark.conf.unset(ColdTier.ExactServeLocalMaxQueriesKey)
-    // and under the default bound the same batch serves from memory —
-    // through the PARALLEL per-query kernel (r16: >1 plan-time queries
-    // fan across ExecutionContext.global; slot-indexed assembly keeps
-    // the output bit-identical to the sequential order) — bit-equal to
-    // the distributed scan engine on the same batch
-    val memBatch = run(two)
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(ColdTier.exactServedFrom.get == "memory")
-    spark.conf.set(ColdTier.ExactServeLocalKey, "false")
-    val scanBatch = try run(two)
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      finally spark.conf.unset(ColdTier.ExactServeLocalKey)
-    assert(memBatch == scanBatch,
-      "parallel batch kernel must be bit-identical to the scan engine")
+    val batch = run(two)
+    assert(batch == mem ++ memory(dir, qv, label, qid = 1L).get,
+      "a batch must answer each query as the exact engine does")
     // both queries share one qv: identical per-query answers, rn 1..k
-    assert(memBatch.count(_._1 == 0L) == k && memBatch.count(_._1 == 1L) == k)
+    assert(batch.count(_._1 == 0L) == k && batch.count(_._1 == 1L) == k)
   }
 
   test("warm cache: one load per admitted segment, reused across statements") {
@@ -196,12 +191,10 @@ class ExactServeLocalSpec extends AnyFunSuite {
     val qv = all(123)._2
     val lt = org.apache.spark.sql.types.LongType
     ColdTier.SegmentDataCache.invalidateAll()
-    def run(lbl: Long) =
-      ColdTier.searchIndexedLiteralFiltered(spark, dir, queriesDf(qv), k,
-        Seq(("label", Seq(lbl), lt)), Metric.L2, shortlist = 8,
-        efSearch = 32).collect()
+    def run(lbl: Long) = assert(
+      memory(dir, qv, Seq(("label", Seq(lbl), lt))).nonEmpty,
+      "the exact engine should serve")
     run(2L)
-    assert(ColdTier.exactServedFrom.get == "memory")
     val afterFirst = ColdTier.SegmentDataCache.entryCount
     assert(afterFirst == 1, s"one admitted segment -> one entry, " +
       s"got $afterFirst")
@@ -219,23 +212,19 @@ class ExactServeLocalSpec extends AnyFunSuite {
     val (dir, all) = fixture
     val qv = all(123)._2
     val lt = org.apache.spark.sql.types.LongType
-    def run() = ColdTier.searchIndexedLiteralFiltered(spark, dir,
-        queriesDf(qv), k, Seq(("label", Seq(2L), lt)), Metric.L2,
-        shortlist = 8, efSearch = 32)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val mem = run()
-    assert(ColdTier.exactServedFrom.get == "memory")
+    val label = Seq(("label", Seq(2L), lt))
+    val mem = memory(dir, qv, label).get
     // 250 admitted rows estimate far above 2 KiB: the statement must
     // not enter the memory engine (positive budget, so the engine
     // itself stays enabled — this is the admitted-bytes precondition,
     // not the kill switch)
     spark.conf.set(ColdTier.SegmentCacheBytesKey, "2048")
-    val scan = try run()
-      finally spark.conf.unset(ColdTier.SegmentCacheBytesKey)
-    assert(ColdTier.exactServedFrom.get == "scan",
-      "an admission past the byte budget must fall back to the scan engine")
+    val scan = try {
+      assert(memory(dir, qv, label).isEmpty,
+        "an admission past the byte budget must decline the memory engine")
+      scanRows(ColdTier.searchIndexedLiteralFiltered(spark, dir,
+        queriesDf(qv), k, label, Metric.L2, shortlist = 8, efSearch = 32))
+    } finally spark.conf.unset(ColdTier.SegmentCacheBytesKey)
     assert(mem == scan)
   }
 
@@ -245,46 +234,30 @@ class ExactServeLocalSpec extends AnyFunSuite {
     val (dir, all) = fixture
     val qv = all(123)._2
     val lt = org.apache.spark.sql.types.LongType
+    val label = Seq(("label", Seq(2L), lt))
     val two = Seq((0L, qv, 100000L, 1000000L), (1L, all(500)._2, 100000L,
       1000000L)).toDF("qid", "qv", "qtime", "ttl")
-    def run() = ColdTier.searchIndexedLiteralFiltered(spark, dir, two, k,
-        Seq(("label", Seq(2L), lt)), Metric.L2, shortlist = 8,
-        efSearch = 32)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val mem = run()
-    assert(ColdTier.exactServedFrom.get == "memory")
-    spark.conf.set(ColdTier.ExactServeLocalTimeoutSecKey, "0")
-    val scan = try run()
-      finally spark.conf.unset(ColdTier.ExactServeLocalTimeoutSecKey)
-    assert(ColdTier.exactServedFrom.get == "scan",
-      "a disabled batch wait bound must fall back to the scan engine")
-    assert(mem == scan)
-    // the single-query inline path never waits, so it stays on memory
-    spark.conf.set(ColdTier.ExactServeLocalTimeoutSecKey, "0")
-    try {
-      ColdTier.searchIndexedLiteralFiltered(spark, dir, queriesDf(qv), k,
-        Seq(("label", Seq(2L), lt)), Metric.L2, shortlist = 8,
-        efSearch = 32).collect()
-      assert(ColdTier.exactServedFrom.get == "memory")
-    } finally spark.conf.unset(ColdTier.ExactServeLocalTimeoutSecKey)
+    val scan = scanRows(ColdTier.searchIndexedLiteralFiltered(spark, dir,
+      two, k, label, Metric.L2, shortlist = 8, efSearch = 32))
+    val mem = memory(dir, qv, label).get ++
+      memory(dir, all(500)._2, label, qid = 1L).get
+    assert(mem == scan,
+      "a two-query batch must answer each query as the exact engine does")
+    assert(mem.count(_._1 == 0L) == k && mem.count(_._1 == 1L) == k)
+    assert(mem.filter(_._1 == 0L).map(_._3) != mem.filter(_._1 == 1L).map(_._3))
   }
 
   test("scan fallback keeps the literal pushed to the parquet scan") {
     val (dir, all) = fixture
     val qv = all(123)._2
     val lt = org.apache.spark.sql.types.LongType
-    spark.conf.set(ColdTier.ExactServeLocalKey, "false")
-    try {
-      val df = ColdTier.searchIndexedLiteralFiltered(spark, dir,
-        queriesDf(qv), k, Seq(("label", Seq(2L), lt)), Metric.L2,
-        shortlist = 8, efSearch = 32)
-      df.collect()
-      val s = df.queryExecution.executedPlan.toString
-      assert(s.contains("PushedFilters: ["),
-        "the scan engine must push the literal to the parquet scan")
-    } finally spark.conf.unset(ColdTier.ExactServeLocalKey)
+    val df = ColdTier.searchIndexedLiteralFiltered(spark, dir,
+      queriesDf(qv), k, Seq(("label", Seq(2L), lt)), Metric.L2,
+      shortlist = 8, efSearch = 32)
+    df.collect()
+    val s = df.queryExecution.executedPlan.toString
+    assert(s.contains("PushedFilters: ["),
+      "the scan engine must push the literal to the parquet scan")
   }
 
   test("single-wave fast path (fwf >= 1) is bit-identical to the two-wave " +
@@ -365,12 +338,8 @@ class ExactServeLocalSpec extends AnyFunSuite {
     def check(column: String, values: Seq[Any],
         vt: org.apache.spark.sql.types.DataType,
         keep: ((Long, Array[Float], Long, Long, String)) => Boolean) = {
-      val got = ColdTier.searchIndexedLiteralFiltered(spark, dir,
-          queriesDf(qv), k, Seq((column, values, vt)), Metric.L2,
-          shortlist = 8, efSearch = 32)
-        .collect().map(r => (r.getInt(1), r.getLong(2)))
-        .sortBy(_._1).map(_._2).toList
-      assert(ColdTier.exactServedFrom.get == "memory")
+      val got = memory(dir, qv, Seq((column, values, vt))).get
+        .map(_._3).toList
       val truth = rows.filter(keep)
         .map { case (id, v, _, _, _) => (id, Distances.l2(qv, v)) }
         .sortBy { case (id, d) => (d, id) }.take(k).map(_._1).toList
@@ -406,9 +375,11 @@ class ExactServeLocalSpec extends AnyFunSuite {
       ColdTier.catalogVersion(spark, dir))
     val qv = rows(5)._2
     val lt = org.apache.spark.sql.types.LongType
+    // (memory engine rows if it served, then checks the direct API's)
     def run(label: Long) = {
+      val filters = Seq(("label", Seq(label), lt))
       val got = ColdTier.searchIndexedLiteralFiltered(spark, dir,
-          queriesDf(qv), k, Seq(("label", Seq(label), lt)), Metric.L2,
+          queriesDf(qv), k, filters, Metric.L2,
           shortlist = 8, efSearch = 32)
         .collect().map(r => (r.getInt(1), r.getLong(2)))
         .sortBy(_._1).map(_._2).toList
@@ -416,32 +387,15 @@ class ExactServeLocalSpec extends AnyFunSuite {
         .map { case (id, v, _, _) => (id, Distances.l2(qv, v)) }
         .sortBy { case (id, d) => (d, id) }.take(k).map(_._1).toList
       assert(got == truth)
+      memory(dir, qv, filters).map(_.map(_._3).toList)
     }
-    run(1L)
-    assert(ColdTier.exactServedFrom.get == "scan",
+    assert(run(1L).isEmpty,
       "a centroid-less segment must not enter the memory engine")
-    run(2L)
-    assert(ColdTier.exactServedFrom.get == "memory")
-  }
-
-  test("a timed-out batch stops its tasks, so the next batch is not " +
-      "queued behind it") {
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-    val abort = new AtomicBoolean(false)
-    val started = new AtomicInteger()
-    // every body runs until aborted: the batch cannot finish in time
-    assert(!ColdTier.runAbortable(1000, 1L, abort) { _ =>
-      started.incrementAndGet()
-      while (!abort.get()) Thread.sleep(5)
-    })
-    assert(abort.get(), "the timeout must raise the abort flag")
-    val t0 = System.nanoTime()
-    assert(ColdTier.runAbortable(8, 30L, new AtomicBoolean(false))(_ => ()),
-      "the next batch must complete")
-    assert((System.nanoTime() - t0) / 1e9 < 5.0,
-      "the next batch waited behind the timed-out one")
-    assert(started.get() < 1000,
-      s"queued tasks of the timed-out batch still ran: ${started.get()}")
+    val served = run(2L)
+    assert(served.nonEmpty)
+    assert(served.get == rows.filter(_._4 == 2L)
+      .map { case (id, v, _, _) => (id, Distances.l2(qv, v)) }
+      .sortBy { case (id, d) => (d, id) }.take(k).map(_._1).toList)
   }
 
   test("listingSigAndBytes counts every file of a nested delete log") {

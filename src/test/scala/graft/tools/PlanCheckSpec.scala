@@ -248,7 +248,7 @@ class PlanCheckSpec extends AnyFunSuite {
     ("knn_sql_rewrite_filtered", true, true, false),
     // aligned-exact rewrite entry OUTPUT (r16): the exact kernel now
     // serves admission-collapsed plans from the WARM SEGMENT CACHE by
-    // default (ColdTier.serveExactFromMemory — zero Spark jobs per
+    // default (ColdTier.serveLocal's exact engine — zero Spark jobs per
     // statement), so the plan is a LocalRelation under the row_number
     // window: no scan, hence no PushedFilters to audit here. The
     // distributed scan FALLBACK's pushdown + bit-equality to this

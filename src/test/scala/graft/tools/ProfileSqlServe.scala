@@ -124,7 +124,7 @@ object ProfileSqlServe {
         else if (has("tombstone")) "coldtier.tombstones"
         else if (has("admissible") || has("loadAttrStats")) "coldtier.admission"
         else if (has("ColdTier") && has("catalog")) "coldtier.catalog"
-        else if (has("serveExactFromMemory")) "coldtier.serveOther"
+        else if (has("serveLocal")) "coldtier.serveOther"
         else if (has("ColdTier")) "coldtier.other"
         else if (has("graft.plans")) "rewrite.other"
         else if (has("codegen")) "codegen"
