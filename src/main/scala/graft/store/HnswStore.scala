@@ -124,8 +124,8 @@ final class HnswStore(
   private def levelFor(): Int = (-math.log(rnd.nextDouble()) * mL).toInt
 
   // Beam-search scratch. `put` owns one per store (the single writer);
-  // searches take the calling thread's ([[HnswStore.searchScratch]]), so
-  // concurrent searches over one shared graph (a cached sidecar probed
+  // each search borrows one from [[HnswStore.idleScratch]] for its walk,
+  // so concurrent searches over one shared graph (a cached sidecar probed
   // by several statements at once) never share heaps or visited flags.
   private val buildScratch = new HnswStore.Scratch
 
@@ -572,26 +572,31 @@ final class HnswStore(
     }
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Double)](k)
     val seenLabels = new java.util.HashSet[Long]()
-    val sc = HnswStore.searchScratch.get()
-    var done = false
-    while (!done) {
-      searchLayer(sc, q, ep, ef, 0)
-      val resN = sc.resN
-      val resD = sc.resD
-      val resI = sc.resI
-      out.clear(); seenLabels.clear()
-      var i = 0
-      while (i < resN && out.length < k) {
-        val id = resI(i)
-        if (accept(id, tsFloor, tsCeil) && (pred == null || pred(id)) &&
-            seenLabels.add(labels(id))) {
-          out += ((labels(id), resD(i)))
-        }
-        i += 1
-      }
-      done = out.length >= k || resN < ef || ef >= n
-      if (!done) ef = math.min(n, ef * 4)
+    val sc = HnswStore.idleScratch.pollFirst() match {
+      case null => new HnswStore.Scratch
+      case idle => idle
     }
+    try {
+      var done = false
+      while (!done) {
+        searchLayer(sc, q, ep, ef, 0)
+        val resN = sc.resN
+        val resD = sc.resD
+        val resI = sc.resI
+        out.clear(); seenLabels.clear()
+        var i = 0
+        while (i < resN && out.length < k) {
+          val id = resI(i)
+          if (accept(id, tsFloor, tsCeil) && (pred == null || pred(id)) &&
+              seenLabels.add(labels(id))) {
+            out += ((labels(id), resD(i)))
+          }
+          i += 1
+        }
+        done = out.length >= k || resN < ef || ef >= n
+        if (!done) ef = math.min(n, ef * 4)
+      }
+    } finally HnswStore.idleScratch.offerFirst(sc)
     out.sortBy { case (l, d) => (d, l) }.toArray
   }
 }
@@ -675,10 +680,12 @@ object HnswStore {
     }
   }
 
-  /** Each thread's search scratch, shared by every store it searches —
-   * one walk runs at a time per thread. */
-  private val searchScratch: ThreadLocal[Scratch] =
-    ThreadLocal.withInitial(() => new Scratch)
+  /** Search scratches not in use, shared by every store: a walk takes the
+   * most recently returned one (or makes one) and hands it back, so the
+   * process holds one scratch per concurrent search, not one per thread
+   * that ever searched. */
+  private val idleScratch =
+    new java.util.concurrent.ConcurrentLinkedDeque[Scratch]
   private val Magic = 0x47484E57 // "GHNW"
 
   /** Deserialize a graph written by [[HnswStore.writeTo]]. `efSearch` is a

@@ -1268,15 +1268,23 @@ class KnnRewriteSpec extends AnyFunSuite {
       .withColumn("segmentId", (col("id") % 4).cast("long")), coldDir)
     ColdTier.sealIndexes(spark, coldDir, 0L until 4L, Metric.L2, m = 8,
       efConstruction = 64)
+    // matching at analysis needs the extensions' resolution rule, which
+    // `spark` lacks when an earlier suite built the shared session without
+    // them: `create()` builds a session that has them, left inactive
+    val (active, default) =
+      (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    default.foreach(SparkSession.setDefaultSession)
     try {
       KnnIndex.register(corpusPath, coldDir, efSearch = 96,
         probeSegments = 4, shortlist = 64, filterColumns = Set("label"))
-      spark.read.parquet(corpusPath).createOrReplaceTempView("knn_long")
+      ext.read.parquet(corpusPath).createOrReplaceTempView("knn_long")
       val q = rows(11)._2
       Seq("" -> ((_: Long) => true), "WHERE label = 3" -> ((l: Long) => l == 3L),
           "WHERE label IN (3, 1)" -> ((l: Long) => l == 3L || l == 1L)).foreach {
         case (where, keep) =>
-          val df = spark.sql(literalSql("knn_long", q, where))
+          val df = ext.sql(literalSql("knn_long", q, where))
           assert(df.queryExecution.analyzed.isInstanceOf[KnnScan],
             s"'$where' was not matched at analysis:\n${df.queryExecution.analyzed}")
           val got = df.collect().map(_.getLong(0))

@@ -375,7 +375,8 @@ class ExactServeLocalSpec extends AnyFunSuite {
       ColdTier.catalogVersion(spark, dir))
     val qv = rows(5)._2
     val lt = org.apache.spark.sql.types.LongType
-    // (memory engine rows if it served, then checks the direct API's)
+    // checks the direct API against the truth, then returns the memory
+    // engine's ids, or None when it declines
     def run(label: Long) = {
       val filters = Seq(("label", Seq(label), lt))
       val got = ColdTier.searchIndexedLiteralFiltered(spark, dir,

@@ -288,7 +288,7 @@ class StoreSpec extends AnyFunSuite {
       s
     }
     // two graphs of different sizes, searched alternately by every
-    // thread: the per-thread scratch is shared across graphs
+    // thread: a borrowed scratch is reused across graphs
     val a = build(big, 10L)
     val b = build(small, 11L)
     val qs = randomVecs(200, 16, 12L)
